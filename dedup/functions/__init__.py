@@ -4,7 +4,6 @@ from dedup.functions.similarity import (
     bigram_gated_staged_ratio_udf,
     deletion_ratio_col,
     levenshtein_ratio_pairs,
-    staged_levenshtein_ratio_col,
     token_sort_col,
 )
 from dedup.functions.sketch import (
@@ -23,7 +22,6 @@ __all__ = [
     "bigram_gated_staged_ratio_udf",
     "deletion_ratio_col",
     "levenshtein_ratio_pairs",
-    "staged_levenshtein_ratio_col",
     "token_sort_col",
     "band_hashes_col",
     "block_minhash_text_udf",

@@ -64,7 +64,3 @@ def words_col(col: Column | str) -> Column:
     whitespace, no empty tokens)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.trim(c), r"\s+"), lambda w: w != "")
-
-
-def num_words_col(col: Column | str) -> Column:
-    return F.size(words_col(col))

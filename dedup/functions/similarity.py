@@ -7,9 +7,9 @@
   cost-2 substitution /root/reference/doppelspeller/feature_engineering.py:25-63;
   wrapper /root/reference/doppelspeller/common.py:161-163.
   NOTE: Spark's builtin ``levenshtein()`` uses substitution cost 1 and is
-  NOT ratio-compatible (SURVEY.md D2) -- hence our own numpy DP, banded:
-  since the cascade only *uses* ratios > threshold, any pair whose distance
-  exceeds the threshold-implied bound may exit early.
+  NOT ratio-compatible (SURVEY.md D2) -- hence our own bit-parallel indel
+  kernel, capped: since the cascade only *uses* ratios > threshold, any
+  pair whose distance exceeds the threshold-implied bound exits early.
 
 * Token-sort ratio (D3): sort words, join with single spaces, then D2
   (/root/reference/doppelspeller/common.py:165-167).
@@ -42,74 +42,17 @@ from dedup.config import DedupConfig, DEFAULT_CONFIG
 # indel distance (Levenshtein with substitution cost 2 == lx+ly-2*LCS)
 # ---------------------------------------------------------------------------
 
-_INF = np.int32(np.iinfo(np.int32).max // 2)
-
-
-def _indel_full(a: np.ndarray, b: np.ndarray, dmax: int | None) -> int:
-    """Full-width row-vectorized DP (used when the band covers the row)."""
-    la, lb = len(a), len(b)
-    prev = np.arange(lb + 1, dtype=np.int32)
-    cur = np.empty(lb + 1, dtype=np.int32)
-    idx = np.arange(lb, dtype=np.int32)
-    for i in range(1, la + 1):
-        cur[0] = i
-        # no substitution: cur[j] = min(prev[j]+1, cur[j-1]+1, prev[j-1] if eq)
-        # the cur[j-1] dependency is sequential; resolve with the standard
-        # prefix-min trick: m[j] = min(prev[j]+1, match[j]); then
-        # cur[j] = min over k<=j of (m[k] + (j-k)) = prefix-scan min.
-        match = np.where(b == a[i - 1], prev[:-1], _INF)
-        m = np.minimum(prev[1:] + np.int32(1), match)
-        np.minimum.accumulate(m - idx, out=cur[1:])
-        cur[1:] += idx
-        cur[1:] = np.minimum(cur[1:], cur[0] + idx + np.int32(1))
-        if dmax is not None and cur.min() > dmax:
-            return dmax + 1
-        prev, cur = cur, prev
-    return int(prev[lb])
-
-
-def _indel_banded(a: np.ndarray, b: np.ndarray, w: int) -> int:
-    """Diagonal-banded DP: any cell with |i-j| > w costs > w (indel cost is
-    at least the diagonal offset), so only the band is computed -- per-row
-    work O(w) instead of O(lb)."""
-    la, lb = len(a), len(b)
-    prev = np.full(lb + 2, _INF, dtype=np.int32)
-    cur = np.full(lb + 2, _INF, dtype=np.int32)
-    hi0 = min(lb, w)
-    prev[: hi0 + 1] = np.arange(hi0 + 1, dtype=np.int32)
-    for i in range(1, la + 1):
-        jlo = max(1, i - w)
-        jhi = min(lb, i + w)
-        if jlo > jhi:
-            return w + 1
-        n = jhi - jlo + 1
-        idx = np.arange(n, dtype=np.int32)
-        eq = b[jlo - 1 : jhi] == a[i - 1]
-        match = np.where(eq, prev[jlo - 1 : jhi], _INF)
-        m = np.minimum(prev[jlo : jhi + 1] + np.int32(1), match)
-        t = m - idx
-        seed = np.int32(i + 1 - 0) if jlo == 1 else _INF  # cur[0]=i -> cur[1] path
-        t[0] = min(t[0], seed)
-        np.minimum.accumulate(t, out=t)
-        cur[jlo : jhi + 1] = t + idx
-        # out-of-band boundary cells must read as INF next row
-        cur[jlo - 1] = np.int32(i) if jlo == 1 else _INF
-        cur[jhi + 1] = _INF
-        if int(cur[jlo : jhi + 1].min()) > w:
-            return w + 1
-        prev, cur = cur, prev
-    return int(prev[lb]) if prev[lb] <= w else w + 1
-
-
 def _indel_bitparallel(a: np.ndarray, b: np.ndarray, dmax: int | None = None) -> int:
     """Exact indel distance via bit-parallel LCS (Crochemore, Iliopoulos,
     Pinzon & Reid 2001): one big-int add/and/or triple per row of ``a``
     over an |b|-bit vector -- O(|a| * |b|/w) word ops with w = machine-int
-    limb width, ~3ms for a 4000x4000 pair regardless of similarity. Used
-    when the banded numpy DP's worst case (high-LCS-density pairs defeat
-    its early exit) would be slower. dist = |a| + |b| - 2*LCS.
+    limb width, ~3ms for a 4000x4000 pair regardless of similarity. The
+    only DP behind every ratio and distance in this module: each row is
+    three big-int ops instead of several numpy calls, so it is faster than
+    a row-vectorized numpy DP (banded or not) at every measured size.
+    dist = |a| + |b| - 2*LCS, capped: returns ``min(dist, dmax + 1)``.
 
-    ``dmax`` enables an exact early exit (r6): after i rows the final LCS
+    ``dmax`` enables an exact early exit: after i rows the final LCS
     can exceed the current LCS by at most the remaining row count, so
     dist >= |b| - |a| + 2*i - 2*LCS_i; once that bound passes dmax the
     pair can never come back under it. Checked every 128 rows (one
@@ -139,25 +82,20 @@ def _indel_bitparallel(a: np.ndarray, b: np.ndarray, dmax: int | None = None) ->
                 if m - la + 2 * i - 2 * lcs_i > dmax:
                     return dmax + 1
     lcs = m - (v & full).bit_count()
-    return la + m - 2 * lcs
-
-
-# numpy-DP work estimate above which the bit-parallel kernel wins
-_BITPARALLEL_CROSSOVER = 100_000
+    d = la + m - 2 * lcs
+    return d if dmax is None else min(d, dmax + 1)
 
 
 def _indel_distance(a: np.ndarray, b: np.ndarray, dmax: int | None = None) -> int:
     """Distance between two uint8/int code arrays with unit indel cost and
     substitution forbidden (cost 2 via delete+insert == python-Levenshtein
-    ratio() distance). Common affixes stripped first; then the cheaper of
-    the diagonal-banded numpy DP (short strings / narrow bands) and the
-    bit-parallel LCS kernel (long strings)."""
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return la + lb
+    ratio() distance), capped at ``dmax + 1`` when ``dmax`` is given.
+    Common affixes are stripped first; the bit-parallel kernel scores
+    the rest."""
     # strip common prefix/suffix (edit distance is invariant to shared
     # affixes) -- near-duplicate pairs, the hot case of the verify tier,
     # collapse to a tiny middle section.
+    la, lb = len(a), len(b)
     n = min(la, lb)
     neq = a[:n] != b[:n]
     pre = int(np.argmax(neq)) if neq.any() else n
@@ -170,21 +108,11 @@ def _indel_distance(a: np.ndarray, b: np.ndarray, dmax: int | None = None) -> in
         if suf:
             a, b = a[: la - suf], b[: lb - suf]
             la, lb = la - suf, lb - suf
-    if la == 0 or lb == 0:
-        return la + lb
     if la < lb:  # iterate over the longer string's rows
         a, b, la, lb = b, a, lb, la
-    if dmax is not None and la - lb > dmax:
+    if dmax is not None and la - lb > dmax:  # dist >= la - lb
         return dmax + 1
-    width = lb if dmax is None else min(2 * dmax + 1, lb)
-    if la * width > _BITPARALLEL_CROSSOVER:
-        d = _indel_bitparallel(a, b, dmax)
-        if dmax is not None and d > dmax:
-            return dmax + 1
-        return d
-    if dmax is not None and 2 * dmax < lb:
-        return _indel_banded(a, b, dmax)
-    return _indel_full(a, b, dmax)
+    return _indel_bitparallel(a, b, dmax)
 
 
 def indel_distance_str(x: str, y: str, dmax: int | None = None) -> int:
@@ -195,9 +123,9 @@ def indel_distance_str(x: str, y: str, dmax: int | None = None) -> int:
 
 def levenshtein_ratio_py(x: str, y: str, dmax: int | None = None) -> int:
     """int(round(100 * (lx+ly-dist2)/(lx+ly))) -- python-Levenshtein parity
-    (/root/reference/doppelspeller/common.py:161-163). If banding truncates
-    (dist > dmax) the returned ratio is an upper-bounded 0-safe value below
-    any threshold that implied dmax."""
+    (/root/reference/doppelspeller/common.py:161-163). If dist > dmax the
+    kernel returns dmax + 1, so the ratio is an upper bound that stays
+    below any threshold that implied dmax."""
     total = len(x) + len(y)
     if total == 0:
         return 100
@@ -252,9 +180,9 @@ def levenshtein_ratio_pairs(
     x: Column | str, y: Column | str, threshold: float | None = None
 ) -> Column:
     """Arrow-batched pandas UDF computing the cost-2 Levenshtein ratio per
-    pair. ``threshold`` enables DP banding (early exit); pass None for the
-    exact unbanded ratio. Callers gating on the ROUNDED integer ratio must
-    pass (t - 0.5) so raw ratios in [t-0.5, t) stay inside the band."""
+    pair. ``threshold`` caps the DP (early exit); pass None for the exact
+    uncapped ratio. Callers gating on the ROUNDED integer ratio must
+    pass (t - 0.5) so raw ratios in [t-0.5, t) stay inside the cap."""
     thr = threshold
 
     @F.pandas_udf(IntegerType())
@@ -333,47 +261,6 @@ def bag_l1_col(ccv_a: Column | str, ccv_b: Column | str, bins: int = _CCV_BINS) 
     )
 
 
-_BGV_BINS = 256
-
-
-def byte_bigram_vector_udf(text: Column | str, bins: int = _BGV_BINS) -> Column:
-    """Per-DOC byte-BIGRAM count vector (array<int> of ``bins``): adjacent
-    byte pairs hashed to ``bins`` buckets. One unit indel edit changes at
-    most 3 bigram counts (removes <= 2 at the edit site, adds <= 1 merged),
-    so L1(BG_a, BG_b) <= 3 * d -- an EXACT lower bound on the indel
-    distance that, unlike the unigram bag, SEES ORDER: boilerplate pairs
-    with near-identical byte histograms but different wording differ in
-    bigram counts. Folding to ``bins`` buckets only lowers the L1, so
-    the bound survives hashing. Computed once per doc, never per pair."""
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _bgv(xs: pd.Series) -> pd.Series:
-        out = []
-        for s in xs.fillna(""):
-            b = np.frombuffer(s.encode("utf-8", "ignore"), dtype=np.uint8)
-            if len(b) < 2:
-                out.append(np.zeros(bins, dtype=np.int32))
-                continue
-            big = (b[:-1].astype(np.uint32) << 8) | b[1:]
-            out.append(np.bincount(big % bins, minlength=bins).astype(np.int32))
-        return pd.Series(out)
-
-    c = F.col(text) if isinstance(text, str) else text
-    return _bgv(c)
-
-
-def bigram_l1_col(bg_a: Column | str, bg_b: Column | str) -> Column:
-    """L1 distance between two byte-bigram count vectors; divide by 3 for
-    the exact indel-distance lower bound (see byte_bigram_vector_udf)."""
-    ca = F.col(bg_a) if isinstance(bg_a, str) else bg_a
-    cb = F.col(bg_b) if isinstance(bg_b, str) else bg_b
-    return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: F.abs(x - y)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-
-
 def indel_distance_pairs(
     x: Column | str, y: Column | str, dmax: int | None = None
 ) -> Column:
@@ -396,41 +283,16 @@ def indel_distance_pairs(
     return _dist.asNondeterministic()(cx, cy)
 
 
-def staged_levenshtein_ratio_col(
-    x: Column | str,
-    y: Column | str,
-    config: DedupConfig = DEFAULT_CONFIG,
-) -> Column:
-    """Full gate chain D4->D2->D5 as one column expression.
-
-    NOTE: the when/otherwise wrapping does NOT keep gated rows out of the
-    Python worker -- Spark's ExtractPythonUDFs rule evaluates a pandas UDF
-    appearing anywhere in a projection for every row, then applies the
-    conditional to the results. The expression stays cheap only because
-    staged_ratio_py re-checks the deletion gate in Python before the DP.
-    On large pair sets apply the gate as a REAL ``.filter(
-    deletion_ratio_col(x, y) >= threshold)`` before this projection, the
-    way verify.py's need_lev and match.py's tier 3 do."""
-    thr = config.lev_threshold
-
-    @F.pandas_udf(IntegerType())
-    def _staged(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = np.empty(len(xs), dtype=np.int32)
-        for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
-            out[i] = staged_ratio_py(a, b, thr)
-        return pd.Series(out)
-
-    cx = F.col(x) if isinstance(x, str) else x
-    cy = F.col(y) if isinstance(y, str) else y
-    # optimizer barrier (see levenshtein_ratio_pairs) -- kernel is pure
-    return F.when(deletion_ratio_col(cx, cy) < F.lit(float(thr)), F.lit(0)).otherwise(
-        _staged.asNondeterministic()(cx, cy)
-    )
+_BGV_BINS = 256
 
 
 def _bigram_counts_py(s: str, bins: int = _BGV_BINS) -> np.ndarray:
-    """Byte-bigram count vector of one string (see byte_bigram_vector_udf
-    for the bound semantics)."""
+    """Byte-bigram count vector of one string: adjacent byte pairs hashed
+    to ``bins`` buckets. One unit indel edit changes at most 3 bigram
+    counts (removes <= 2 at the edit site, adds <= 1 merged), so
+    L1(BG_a, BG_b) <= 3 * d -- an EXACT lower bound on the indel distance
+    that, unlike the unigram bag, SEES ORDER. Folding to ``bins`` buckets
+    only lowers the L1, so the bound survives hashing."""
     b = np.frombuffer(s.encode("utf-8", "ignore"), dtype=np.uint8)
     if len(b) < 2:
         return np.zeros(bins, dtype=np.int32)
@@ -443,22 +305,28 @@ def bigram_gated_staged_ratio_udf(
     y: Column | str,
     config: DedupConfig = DEFAULT_CONFIG,
 ) -> Column:
-    """staged_levenshtein_ratio_col with the exact byte-bigram DP-admission
-    bound applied PAIR-SIDE inside the UDF: one unit indel changes <= 3
-    bigram counts, so L1(BG_a, BG_b) > 3 * dmax proves the direct ratio
+    """The staged D4->D2->D5 gate chain (staged_ratio_py) as one column,
+    with the exact byte-bigram DP-admission bound applied PAIR-SIDE inside
+    the UDF: one unit indel changes <= 3 bigram counts (see
+    _bigram_counts_py), so L1(BG_a, BG_b) > 3 * dmax proves the direct ratio
     can never clear the threshold, and the same bound over token-sorted
     text proves it for the token-sort fallback -- a pair is DP'd only if
     either path remains arithmetically possible (zero recall loss; gated
     pairs return 0, below any threshold filter).
 
-    Pair-side, not doc-side: the doc-side variant (byte_bigram_vector_udf
+    Pair-side, not doc-side: a doc-side variant (per-doc bigram vectors
     joined onto both pair sides) shipped every doc's 256-int direct +
     token-sorted vectors through two extra join exchanges to gate a pair
     population that is already small after the narrow sketch gates --
     two Python UDF passes over ALL docs plus two shuffles of ~2KB/doc to
     save per-pair numpy work measured in microseconds. Counting bigrams
-    inside the DP UDF costs O(len) per pair (trivial next to one banded
+    inside the DP UDF costs O(len) per pair (trivial next to one
     DP row) and deletes both exchanges from the verify plan.
+
+    The deletion-ratio gate runs as native columns BEFORE the UDF is
+    reached only when the caller filters on it first (verify.py's
+    need_lev does): Spark evaluates a pandas UDF inside a when/otherwise
+    for every row, so the UDF re-checks the gate before any DP.
 
     r6: each of the two DP paths is admission-gated INDEPENDENTLY, per
     the staged chain's own structure -- the direct DP is skipped when the
@@ -510,8 +378,8 @@ def bigram_gated_staged_ratio_udf(
 
     cx = F.col(x) if isinstance(x, str) else x
     cy = F.col(y) if isinstance(y, str) else y
-    # native deletion-ratio pre-gate + optimizer barrier, exactly like
-    # staged_levenshtein_ratio_col
+    # native deletion-ratio pre-gate + optimizer barrier (see
+    # levenshtein_ratio_pairs) -- the kernel is pure
     return F.when(deletion_ratio_col(cx, cy) < F.lit(float(thr)), F.lit(0)).otherwise(
         _gated.asNondeterministic()(cx, cy)
     )

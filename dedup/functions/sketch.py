@@ -85,16 +85,6 @@ def _mulmod_p(a: np.uint64, x: np.ndarray, work: np.ndarray | None = None) -> np
     return acc
 
 
-def _perm_hashes(x: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """All-permutation hash matrix: shape (num_perm, len(x)), uint64 < p.
-    Only for small x (tests / tiny batches): materializes num_perm * |x|."""
-    p = MERSENNE_PRIME
-    out = np.empty((len(a), len(x)), dtype=np.uint64)
-    for i in range(len(a)):
-        out[i] = (_mulmod_p(np.uint64(a[i]), x) + b[i]) % p
-    return out
-
-
 def _to_field(hashes: np.ndarray) -> np.ndarray:
     """Map signed-int64 xxhash64 values into [0, p)."""
     return hashes.astype(np.uint64) % MERSENNE_PRIME
@@ -196,56 +186,6 @@ def minhash_signature_udf(
     return _sig(c)
 
 
-def block_minhash_udf(
-    pos_hashes: Column | str, stride: int, config: DedupConfig = DEFAULT_CONFIG
-) -> Column:
-    """Positional gram-hash sequence -> array<array<bigint>>: one MinHash
-    signature per non-overlapping ``stride``-gram BLOCK of the sequence
-    (last block = the tail).
-
-    Why blocks instead of sketching each sliding window directly: MinHash
-    of a set union is the elementwise min of the parts' MinHashes, so with
-    window = 2 * stride every sliding window's signature is EXACTLY
-    zip_with(least) of two adjacent block signatures (the containment
-    windower composes them JVM-side). Each gram then crosses the Python
-    boundary and feeds the permutation kernel ONCE instead of once per
-    overlapping window -- half the sketch compute and half the Arrow
-    transfer of the r4 per-window plan, with bit-identical band keys."""
-    a_params, b_params = config.perm_params()
-    num_perm = config.num_perm
-    s = int(stride)
-
-    @F.pandas_udf(ArrayType(ArrayType(LongType())))
-    def _blocks(batches: pd.Series) -> pd.Series:
-        n = len(batches)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        arrs: list[np.ndarray] = []
-        seg_sizes: list[int] = []
-        row_nblocks = np.zeros(n, dtype=np.int64)
-        for r_i, v in enumerate(batches):
-            if v is None or len(v) == 0:
-                continue
-            a = np.asarray(v, dtype=np.int64)
-            nb = (len(a) + s - 1) // s
-            row_nblocks[r_i] = nb
-            arrs.append(a)
-            seg_sizes.extend([s] * (nb - 1))
-            seg_sizes.append(len(a) - s * (nb - 1))
-        flat = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-        sizes = np.asarray(seg_sizes, dtype=np.int64)
-        sigs = _minhash_matrix(sizes, flat, a_params, b_params, num_perm)
-        out: list[list] = []
-        pos = 0
-        for nb in row_nblocks:
-            out.append([sigs[pos + j] for j in range(nb)])
-            pos += nb
-        return pd.Series(out, dtype=object)
-
-    c = F.col(pos_hashes) if isinstance(pos_hashes, str) else pos_hashes
-    return _blocks(c)
-
-
 def byte_kgram_codes(text: str, k: int) -> np.ndarray:
     """Positional k-gram sequence of ``text`` as exact big-endian byte
     codes (int64, < 2^(8k)): element i is the k bytes of the UTF-8
@@ -273,7 +213,13 @@ def block_minhash_text_udf(
 ) -> Column:
     """Normalized TEXT -> array<array<bigint>>: one MinHash signature per
     non-overlapping ``stride``-gram block of the positional byte-k-gram
-    sequence (see byte_kgram_codes; block semantics as block_minhash_udf).
+    sequence (see byte_kgram_codes; last block = the tail).
+
+    Why blocks instead of sketching each sliding window directly: MinHash
+    of a set union is the elementwise min of the parts' MinHashes, so with
+    window = 2 * stride every sliding window's signature is EXACTLY
+    zip_with(least) of two adjacent block signatures. Each gram then feeds
+    the permutation kernel ONCE instead of once per overlapping window.
 
     Fuses shingling INTO the sketch UDF: the positional gram array never
     materializes as a Spark column, so (a) the interpreted higher-order

@@ -78,21 +78,6 @@ def brute_force_topk(
     )
 
 
-def srp_bucket_col(vec_col: Column | str, n_planes: int = 16, dim: int = 64, seed: int = 13) -> Column:
-    """Sign-random-projection bucket id: sign bits of <v, r_j> for n_planes
-    seeded hyperplanes, packed into a bigint. Native columns: each plane is
-    a literal array; dot via zip_with/aggregate."""
-    rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(n_planes, dim))
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bucket = F.lit(0).cast("bigint")
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[j]])
-        d = dot_col(v, plane)
-        bucket = bucket + F.when(d > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-    return bucket
-
-
 def srp_buckets_udf(
     vec_col: Column | str,
     n_planes: int = 12,
@@ -104,7 +89,7 @@ def srp_buckets_udf(
     (array<bigint>, element t = table t's bucket): the whole batch's
     vectors become one (n, dim) matrix, all tables' hyperplanes one
     (n_tables * n_planes, dim) matrix, and every sign bit falls out of a
-    single matmul. Replaces the per-table srp_bucket_col chain --
+    single matmul. Replaces a per-table JVM column chain --
     n_tables * n_planes INTERPRETED 64-element zip_with/aggregate dot
     products per row (~2s serial per 2.6k vectors at the entry query) --
     with ~microseconds per row. Plane matrices and sign convention

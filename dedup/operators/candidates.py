@@ -35,7 +35,6 @@ import pyspark.sql.functions as F
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.normalize import normalize_text_col, normalize_ascii_col
 from dedup.functions.sketch import band_hashes_col, doc_sketch_udf
-from dedup.phasetimer import phase
 from dedup.tracking import register
 
 
@@ -141,14 +140,12 @@ def candidate_pairs(
     # (the vast majority of band keys) can never pair and are dropped
     # before the persist, so the cache holds only collision groups -- far
     # smaller than the r3 all-postings cache.
-    groups = phase(
-        "k_band_groups",
-        lambda: bands.groupBy("band_hash")
+    groups = (
+        bands.groupBy("band_hash")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .withColumn("gsz", F.size("ids"))
         .filter(F.col("gsz") > 1)
-        .persist(),
-        count=True,
+        .persist()
     )
     register(groups, tracker)
 

@@ -43,7 +43,6 @@ from pyspark.sql.types import DoubleType
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.sketch import window_band_hashes_text_udf
 from dedup.operators.candidates import pair_structs
-from dedup.phasetimer import phase
 from dedup.tracking import register
 
 
@@ -132,7 +131,7 @@ def _window_slices(gram_hashes: Column, window: int, stride: int) -> Column:
     No longer on the production path (the candidate generator composes
     window signatures from block MinHashes instead -- bit-identical, half
     the sketch work); kept as the direct-slicing cross-check used by
-    tests/tools (tools/probe_verify.py, tests/test_containment.py)."""
+    tests/test_containment.py."""
     n = F.size(gram_hashes)
     n_win = F.greatest(F.ceil((n - F.lit(window)) / F.lit(stride)) + 1, F.lit(1))
     return F.transform(
@@ -258,16 +257,12 @@ def containment_candidates(
     # instead of riding every shuffle row and fattening the collect_list
     # buffers. Sorting ids sorts identically to sorting (id, n_grams)
     # structs, so the fan-out's i<j combination multiset is unchanged.
-    groups = phase(
-        "c_window_sketch_groups",
-        lambda: bands.groupBy("band_hash")
-        .agg(
-            F.array_sort(F.collect_list("id")).alias("mem")
-        )
+    groups = (
+        bands.groupBy("band_hash")
+        .agg(F.array_sort(F.collect_list("id")).alias("mem"))
         .withColumn("gsz", F.size("mem"))
         .filter(F.col("gsz") > 1)
-        .persist(),
-        count=True,
+        .persist()
     )
     register(groups, tracker)
     window_band_skew = groups.filter(
@@ -338,7 +333,6 @@ def containment_candidates(
         )
         .persist()
     )
-    scored = phase("c_pair_fanout_hits", lambda: scored, count=True)
     register(scored, tracker)
     # RANKED PARTNER CAPS (config.containment_max_partners): a doc
     # colliding with hundreds of partners is shared boilerplate; verifying
@@ -428,7 +422,7 @@ def verify_containment(
         .filter(F.col("containment") >= thr - 0.2)  # below both bands: dead
         .select("id_short", "id_long", "containment")
     )
-    scored = phase("c_gram_intersect", lambda: scored.localCheckpoint())
+    scored = scored.localCheckpoint()
     register(scored, tracker)
 
     sure = scored.filter(F.col("containment") >= thr).withColumn(

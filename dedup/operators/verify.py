@@ -40,7 +40,6 @@ from dedup.functions.similarity import (
     minhash_estimate_col,
 )
 from dedup.functions.sketch import hamming_col
-from dedup.phasetimer import phase
 from dedup.tracking import register
 
 
@@ -169,14 +168,9 @@ def verify_pairs(
     # (sketch-verified, lev) consume ``scored``, and lazy cache population
     # races between concurrent branch subtrees can recompute the whole
     # cascade per branch.
-    scored = phase(
-        "v_sketch_scored",
-        lambda: jac.unionByName(
-            p1.filter(~(F.col("est") >= F.lit(gate))).withColumn(
-                "jaccard", F.lit(0.0)
-            )
-        ).localCheckpoint(),
-    )
+    scored = jac.unionByName(
+        p1.filter(~(F.col("est") >= F.lit(gate))).withColumn("jaccard", F.lit(0.0))
+    ).localCheckpoint()
     register(scored, tracker)
 
     jac_ok = F.col("jaccard") >= F.lit(config.jaccard_threshold)

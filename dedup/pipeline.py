@@ -212,7 +212,3 @@ def run_pipeline(
 
     report.total_seconds = time.time() - t0
     return report
-
-
-def load_clusters(spark: SparkSession, warehouse: str) -> DataFrame:
-    return spark.read.parquet(f"{warehouse}/clusters")

@@ -12,7 +12,6 @@ from dedup.functions.similarity import (
     indel_distance_str,
     levenshtein_ratio_pairs,
     levenshtein_ratio_py,
-    staged_levenshtein_ratio_col,
     staged_ratio_py,
     token_sort_py,
 )
@@ -40,13 +39,46 @@ def ref_ratio(x: str, y: str) -> int:
     return int(np.rint(100.0 * (total - brute_indel(x, y)) / total))
 
 
+def _mutate(rng: random.Random, x: str, alphabet: str, edits: int) -> str:
+    y = list(x)
+    for _ in range(edits):
+        pos = rng.randrange(len(y) + 1)
+        if rng.random() < 0.5 and y:
+            del y[pos % len(y)]
+        else:
+            y.insert(pos, rng.choice(alphabet))
+    return "".join(y)
+
+
 def test_indel_randomized_parity():
+    """One capped contract at every size: indel_distance_str(x, y, dmax)
+    == min(exact, dmax + 1), exact when dmax is None. Lengths run 0-600
+    chars, across short pairs, long near-duplicates (distances straddle
+    the threshold-derived cap) and long unrelated pairs."""
+    alphabet = "abcde "
     rng = random.Random(99)
-    for _ in range(500):
-        x = "".join(rng.choice("abcde ") for _ in range(rng.randint(0, 25)))
-        y = "".join(rng.choice("abcde ") for _ in range(rng.randint(0, 25)))
-        assert indel_distance_str(x, y) == brute_indel(x, y)
+    pairs = []
+    for _ in range(300):
+        x = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 25)))
+        y = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 25)))
+        pairs.append((x, y))
+    for i in range(90):
+        x = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 600)))
+        if i % 3:
+            y = _mutate(rng, x, alphabet, rng.randint(0, 40))
+        else:
+            y = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 600)))
+        pairs.append((x, y))
+    for x, y in pairs:
+        exact = brute_indel(x, y)
+        assert indel_distance_str(x, y) == exact
         assert levenshtein_ratio_py(x, y) == ref_ratio(x, y)
+        thr_dmax = int(np.floor((len(x) + len(y)) * (1 - 94 / 100.0))) + 1
+        for dmax in (0, thr_dmax, exact - 1, exact):
+            if dmax < 0:
+                continue
+            got = indel_distance_str(x, y, dmax)
+            assert got == min(exact, dmax + 1), (x, y, dmax, got, exact)
 
 
 # F4 golden pairs
@@ -100,7 +132,7 @@ def test_staged_matches_reference_composition():
             assert got <= t  # same non-match decision
 
 
-def test_spark_columns_match_python(spark, config):
+def test_spark_columns_match_python(spark):
     rng = random.Random(5)
     pairs = []
     from dedup.generate import misspell
@@ -114,12 +146,10 @@ def test_spark_columns_match_python(spark, config):
         "x",
         "y",
         levenshtein_ratio_pairs("x", "y").alias("plain"),
-        staged_levenshtein_ratio_col("x", "y", config).alias("staged"),
         deletion_ratio_col("x", "y").alias("delr"),
     ).collect()
     for r in rows:
         assert r["plain"] == ref_ratio(r["x"], r["y"])
-        assert r["staged"] == staged_ratio_py(r["x"], r["y"], config.lev_threshold)
         lx, ly = len(r["x"]), len(r["y"])
         assert r["delr"] == pytest.approx(((lx + ly - abs(lx - ly)) / (lx + ly)) * 100)
 
@@ -246,9 +276,8 @@ def test_bigram_l1_lower_bounds_indel_distance():
 
 
 def test_bitparallel_early_exit_parity():
-    """_indel_bitparallel with dmax must equal the exact distance whenever
-    that distance is <= dmax, and report only dist > dmax otherwise (the
-    r6 popcount early exit is a bound, never an approximation)."""
+    """_indel_bitparallel with dmax must return min(exact, dmax + 1): the
+    popcount early exit is a bound, never an approximation."""
     import random
 
     import numpy as np
@@ -260,15 +289,7 @@ def test_bitparallel_early_exit_parity():
         n = rng.randint(1, 400)
         x = "".join(rng.choice("abcdef ") for _ in range(n))
         # mutate a copy so distances span the dmax boundary
-        y = list(x)
-        for _ in range(rng.randint(0, 30)):
-            op = rng.random()
-            pos = rng.randrange(len(y) + 1) if y else 0
-            if op < 0.5 and y:
-                del y[pos % len(y)]
-            else:
-                y.insert(pos, rng.choice("abcdef "))
-        y = "".join(y)
+        y = _mutate(rng, x, "abcdef ", rng.randint(0, 30))
         a = np.frombuffer(x.encode(), dtype=np.uint8)
         b = np.frombuffer(y.encode(), dtype=np.uint8)
         exact = _indel_bitparallel(a, b)
@@ -276,10 +297,7 @@ def test_bitparallel_early_exit_parity():
             if dmax < 0:
                 continue
             got = _indel_bitparallel(a, b, dmax)
-            if exact <= dmax:
-                assert got == exact, (x, y, dmax)
-            else:
-                assert got > dmax, (x, y, dmax)
+            assert got == min(exact, dmax + 1), (x, y, dmax)
 
 
 def test_bigram_gated_udf_above_threshold_parity(spark):

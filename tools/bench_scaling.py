@@ -188,9 +188,8 @@ def main():
         "total_secs_small": small["value"],
         "total_secs_big": big["value"],
         "sf_dir": sf_dir,
-        # full per-run history: tools/append_scaling_run.py extends the
-        # campaign from THIS list (never from a log re-parse), so earlier
-        # appended pairs survive repeated appends
+        # full per-run history, so a campaign can be extended from this
+        # list rather than from a log re-parse
         "raw_runs": {
             str(n): [
                 {

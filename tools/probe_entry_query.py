@@ -1,8 +1,6 @@
-"""Run ONE declared entry query with the noop sink and phase timing on,
-so the operator's internal barriers (c_window_sketch_groups,
-c_pair_fanout_hits, c_gram_intersect, v_sketch_scored ...) print their
-wall seconds. Usage:
-    SPARK_GRAFT_PHASE_TIMING=1 python tools/probe_entry_query.py <query> [sf_dir] [repeats]
+"""Run ONE declared entry query with the noop sink and print its wall
+seconds per repeat. Usage:
+    python tools/probe_entry_query.py <query> [sf_dir] [repeats]
 """
 
 from __future__ import annotations
