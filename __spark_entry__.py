@@ -21,7 +21,7 @@ from dedup.functions.similarity import exact_jaccard_col
 from dedup.functions.sketch import hamming_col, simhash_udf
 from dedup.knn import brute_force_topk, srp_near_dup_pairs
 from dedup.operators.assemble import assemble_conversations
-from dedup.operators.candidates import candidate_pairs, prepare_docs
+from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs
 from dedup.operators.cluster import connected_components
 from dedup.operators.exact import exact_duplicate_groups
 from dedup.operators.grouping import group_argmax_unique, grouped_top_k
@@ -177,7 +177,7 @@ def q_dup_pairs(spark, sf_dir):
     prep = track_cache(
         prepare_docs(_docs(spark, sf_dir), "doc_id", "text", CFG, ascii_fast_path=True)
     )
-    cand = candidate_pairs(prep, CFG).pairs
+    cand = candidate_pairs(band_postings(prep, CFG), CFG).pairs
     g = prep.select("doc_id", "gram_hashes", "minhash")
     gate = jaccard_gate_threshold(CFG)
     pairs = (
@@ -350,7 +350,7 @@ def q_minhash_candidates(spark, sf_dir):
     pair set, which the oracle enumerates directly."""
     corpus, planted = _raw_docs_with_dups(spark, sf_dir)
     prep = prepare_docs(corpus, "doc_id", "text", CFG, ascii_fast_path=True)
-    cand = candidate_pairs(prep, CFG).pairs
+    cand = candidate_pairs(band_postings(prep, CFG), CFG).pairs
     return cand.join(planted, ["id_a", "id_b"], "inner")
 
 

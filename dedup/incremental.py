@@ -1,24 +1,27 @@
 """Incremental re-dedup of appended conversations (SURVEY.md par.2.11):
 new transcripts arrive, and instead of re-running the pipeline over the
-full corpus, only (new x new) and (new x existing) candidate pairs are
-generated.
+full corpus, only candidate pairs that touch a new doc are generated and
+verified.
+
+Contract: a batch's candidates equal the batch path's candidates
+(dedup/operators/candidates.py ``candidate_pairs``) over the corpus plus
+the batch, restricted to pairs that touch the batch. There is one LSH
+candidate generator; this module only chooses the postings it runs on.
 
 Per-batch cost contract (the scale property this module exists for):
   * SKETCH work (normalize/shingle/MinHash/band UDFs) runs over the NEW
     batch only -- O(batch). The existing corpus is touched exclusively
     through its persisted BAND POSTINGS table (``existing_bands``), an
-    append-only narrow (doc_id, band_hash) table the caller
-    maintains (dedup/streaming.py appends each batch's ``new_bands``).
-    Re-deriving postings from ``existing_prepared`` every batch would make
-    per-batch cost O(corpus) and continuous dedup degrade linearly -- the
-    legacy fallback below does exactly that and exists only for one-shot
-    callers without a postings table.
-  * The new-vs-old join is pruned to the new side's band keys FIRST
-    (broadcast semi-join on the micro-batch's keys), then capped by the
-    same ``max_band_group`` boilerplate defense as the batch path
-    (dedup/operators/candidates.py) -- one boilerplate band key in the
-    historical corpus must not make a micro-batch quadratic. Dropped
-    groups are returned in ``band_skew`` (no silent truncation).
+    append-only narrow (doc_id, band_hash) table the caller maintains
+    (dedup/streaming.py appends each batch's ``new_bands``).
+  * The corpus postings are pruned to the batch's band keys first
+    (broadcast semi-join). Every collision group that holds a new doc is
+    therefore complete, and ``candidate_pairs`` sizes, caps and
+    hit-counts it exactly as the batch path would. Groups over
+    ``max_band_group`` are dropped into ``band_skew`` (no silent
+    truncation), so the pair fan-out is at most C(max_band_group, 2) per
+    touched group -- one boilerplate band key in the historical corpus
+    cannot make a micro-batch quadratic.
   * Verification fetches heavy columns (gram hashes, text) only for docs
     that actually appear in a candidate pair (broadcast semi-join on pair
     ids), so the corpus' fat columns never shuffle per batch.
@@ -32,13 +35,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from dedup.config import DedupConfig, DEFAULT_CONFIG
-from dedup.functions.sketch import band_hashes_col
 from dedup.operators.assemble import assemble_conversations
-from dedup.operators.candidates import candidate_pairs, prepare_docs
+from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs
 from dedup.operators.verify import verify_pairs
 from dedup.tracking import register
 
@@ -47,161 +49,96 @@ from dedup.tracking import register
 class IncrementalResult:
     new_prepared: DataFrame       # sketches of the appended conversations
     new_bands: DataFrame          # band postings of the new docs (append to corpus bands)
-    verified_pairs: DataFrame     # new-new and new-old verified edges
+    verified_pairs: DataFrame     # verified edges touching a new doc
     band_skew: DataFrame          # (band_hash, group_size) groups dropped by the cap
-
-
-def _bands(prepared: DataFrame, config: DedupConfig) -> DataFrame:
-    # (doc_id, band_hash) only: the band index is folded into the hash by
-    # band_hashes_col, so carrying it in the PERSISTED corpus postings --
-    # and through every per-batch semi-join -- was a third of the table's
-    # bytes for zero information (r6; SKETCH_FORMAT_VERSION bumped).
-    return prepared.select(
-        "doc_id",
-        F.explode(band_hashes_col("minhash", config)).alias("band_hash"),
-    )
 
 
 def incremental_dedup(
     new_transcripts: DataFrame,
-    existing_prepared: DataFrame,
+    existing_prepared: DataFrame | None,
+    existing_bands: DataFrame | None,
     config: DedupConfig = DEFAULT_CONFIG,
-    broadcast_new: bool = True,
-    existing_bands: DataFrame | None = None,
     tracker: list[DataFrame] | None = None,
 ) -> IncrementalResult:
     """Dedup appended conversations against an existing prepared corpus.
 
     ``existing_bands``: the corpus band-postings table (doc_id,
-    band_hash). Pass it to get the O(batch) contract; when None, postings
-    are re-derived from ``existing_prepared`` (O(corpus) band-UDF work --
-    legacy one-shot path only).
+    band_hash), the only way the corpus is searched. ``existing_prepared``
+    and ``existing_bands`` are both None for an empty corpus (the first
+    batch of a stream).
 
     Returns the new side's sketches + band postings (callers append both
     to their corpus tables) and verified duplicate edges touching the new
     docs, plus the skew-cap ledger."""
+    if (existing_prepared is None) != (existing_bands is None):
+        raise ValueError("pass both existing_prepared and existing_bands, or neither")
     assembled = assemble_conversations(new_transcripts, config)
     new_prepared = prepare_docs(assembled, "conv_id", "doc_text", config)
-    # consumed by: new-new LSH, new-old band join, verify join, and the
+    # consumed by: band postings, the new-doc filter, verify join, and the
     # caller's corpus append -- localCheckpoint so the sketch UDFs run once.
     new_prepared = new_prepared.localCheckpoint()
     register(new_prepared, tracker)
-
-    # new x new pairs: the ordinary LSH path on the (small) new side
-    nn_res = candidate_pairs(new_prepared, config, tracker=tracker)
-    nn = nn_res.pairs
-
-    # new x existing pairs: one band-key equi-join. The corpus side is
-    # touched only through its postings; the new side's postings broadcast
-    # when micro-batch-sized.
-    new_bands = _bands(new_prepared, config).localCheckpoint()
+    new_bands = band_postings(new_prepared, config).localCheckpoint()
     register(new_bands, tracker)
-    old_bands = (
-        existing_bands
-        if existing_bands is not None
-        else _bands(existing_prepared, config)
-    )
+    new_ids = F.broadcast(new_prepared.select("doc_id"))
 
-    # 1. prune the corpus postings to band keys the batch actually touches
-    new_keys = new_bands.select("band_hash").dropDuplicates()
-    if broadcast_new:
-        new_keys = F.broadcast(new_keys)
-    old_hit = old_bands.join(new_keys, ["band_hash"], "left_semi")
+    postings = new_bands
+    if existing_bands is not None:
+        # corpus postings on the batch's band keys; a doc this batch
+        # re-prepares drops its superseded postings (anti-join)
+        new_keys = F.broadcast(new_bands.select("band_hash").dropDuplicates())
+        touched = existing_bands.join(new_keys, ["band_hash"], "left_semi").join(
+            new_ids, "doc_id", "left_anti"
+        )
+        postings = new_bands.unionByName(touched)
+    res = candidate_pairs(postings, config, tracker=tracker)
 
-    # 2. boilerplate-band cap on the pruned corpus side, with accounting
-    #    (same defense as candidates.py: a hot historical band key must not
-    #    blow up |new_in_group| x |old_in_group|).
-    old_sizes = old_hit.groupBy("band_hash").agg(
-        F.count(F.lit(1)).alias("group_size")
-    )
-    band_skew = old_sizes.filter(
-        F.col("group_size") > config.max_band_group
-    ).unionByName(nn_res.band_skew.select("band_hash", "group_size"))
-    # inner join (not semi): the pair filter below needs group_size to
-    # apply the hit-count noise exemption
-    old_ok = old_hit.join(
-        old_sizes.filter(F.col("group_size") <= config.max_band_group),
-        ["band_hash"],
-        "inner",
-    )
-
-    nb = new_bands
-    if broadcast_new:
-        nb = F.broadcast(nb)
-    # same band-hit-count discipline as candidates.py: single-hit pairs are
-    # candidates only when their quietest colliding group is small; pairs
-    # that only ever meet inside big boilerplate groups need >= 2 distinct
-    # band collisions (recall cost <= 5e-6 per true J>=0.8 pair). The group
-    # size here counts the OLD side of the pruned postings -- slightly more
-    # lenient than the batch path's full-group count, never stricter.
-    no = (
-        nb.select("band_hash", F.col("doc_id").alias("id_a"))
-        .join(
-            old_ok.select(
-                "band_hash",
-                F.col("doc_id").alias("id_b"),
-                F.col("group_size").alias("gsz"),
-            ),
-            ["band_hash"],
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "gsz",
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("band_hits"),
-            F.min("gsz").alias("min_gsz"),
-        )
-        .filter(
-            (F.col("band_hits") >= config.lsh_min_band_hits)
-            | (F.col("min_gsz") <= config.lsh_noise_group_size)
-        )
+    # touched groups also fan out old x old pairs: keep those touching a new doc
+    is_new = new_prepared.select("doc_id", F.lit(True).alias("new"))
+    pairs = (
+        res.pairs.join(F.broadcast(is_new.toDF("id_a", "a_new")), "id_a", "left")
+        .join(F.broadcast(is_new.toDF("id_b", "b_new")), "id_b", "left")
+        .filter(F.col("a_new") | F.col("b_new"))
         .select("id_a", "id_b")
+        .localCheckpoint()
     )
-
-    pairs = nn.unionByName(no).dropDuplicates(["id_a", "id_b"])
-    pairs = pairs.localCheckpoint()
     register(pairs, tracker)
 
-    # 3. heavy columns only for docs that appear in a pair: the corpus'
-    #    gram arrays / text never shuffle per batch.
-    pair_ids = (
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-        .dropDuplicates()
-    )
-    existing_needed = existing_prepared.join(
-        F.broadcast(pair_ids), "doc_id", "left_semi"
-    )
-    # SUPERSEDE semantics (cross-batch conversation assembly): when the
-    # caller's corpus carries a ``batch`` version column, a doc re-prepared
-    # in a later batch supersedes its older partial rows -- latest wins.
-    # The window runs AFTER the semi-join prune, so it only ever sorts the
-    # handful of fetched rows, preserving the O(batch) contract.
-    if "batch" in existing_needed.columns:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
-        existing_needed = (
-            existing_needed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "batch")
+    both = new_prepared
+    if existing_prepared is not None:
+        # heavy columns only for docs that appear in a pair: the corpus'
+        # gram arrays / text never shuffle per batch.
+        pair_ids = (
+            pairs.select(F.col("id_a").alias("doc_id"))
+            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
+            .dropDuplicates()
         )
-    # deterministic new-wins union: a re-seen doc exists on BOTH sides (its
-    # re-prepared full version in new_prepared, its superseded partial in
-    # the corpus); verification must see the new version, never an
-    # arbitrary dropDuplicates winner.
-    existing_only = existing_needed.join(
-        F.broadcast(new_prepared.select("doc_id")), "doc_id", "left_anti"
-    )
-    both = new_prepared.unionByName(existing_only).dropDuplicates(["doc_id"])
+        existing_needed = existing_prepared.join(
+            F.broadcast(pair_ids), "doc_id", "left_semi"
+        )
+        # SUPERSEDE semantics (cross-batch conversation assembly): when the
+        # caller's corpus carries a ``batch`` version column, a doc
+        # re-prepared in a later batch supersedes its older partial rows --
+        # latest wins. The window runs AFTER the semi-join prune, so it only
+        # ever sorts the handful of fetched rows, preserving the O(batch)
+        # contract.
+        if "batch" in existing_needed.columns:
+            w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
+            existing_needed = (
+                existing_needed.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn", "batch")
+            )
+        # deterministic new-wins union: a re-seen doc exists on BOTH sides
+        # (its re-prepared full version in new_prepared, its superseded
+        # partial in the corpus); verification must see the new version,
+        # never an arbitrary dropDuplicates winner.
+        existing_only = existing_needed.join(new_ids, "doc_id", "left_anti")
+        both = new_prepared.unionByName(existing_only).dropDuplicates(["doc_id"])
     verified = verify_pairs(pairs, both, config, tracker=tracker)
     return IncrementalResult(
         new_prepared=new_prepared,
         new_bands=new_bands,
         verified_pairs=verified,
-        band_skew=band_skew,
+        band_skew=res.band_skew,
     )

@@ -102,16 +102,33 @@ def pair_structs(ids: Column) -> Column:
     )
 
 
+def band_postings(prepared: DataFrame, config: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
+    """prepared docs (doc_id, minhash) -> band postings (doc_id, band_hash),
+    one row per LSH band: the single postings format, shared by the batch
+    path and the persisted streaming corpus table."""
+    # band rows carry ONLY (doc_id, band_hash): the band index already
+    # participates in the hash (band_hashes_col hashes (i, slice)), so
+    # grouping by the hash alone forms the identical collision groups --
+    # carrying band_idx through the explode + shuffle + groupBy key was a
+    # third of every band row's bytes for zero information (VERDICT r5
+    # next-round #5; a cross-band 64-bit hash collision could only merge
+    # two groups and ADD candidate pairs, never lose one).
+    return prepared.select(
+        "doc_id",
+        F.explode(band_hashes_col("minhash", config)).alias("band_hash"),
+    )
+
+
 def candidate_pairs(
-    prepared: DataFrame,
+    postings: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
     tracker: list[DataFrame] | None = None,
 ) -> CandidateResult:
-    """prepared docs (doc_id, minhash) -> candidate (id_a < id_b) pairs.
+    """band postings (doc_id, band_hash) -> candidate (id_a < id_b) pairs.
 
-    Plan shape: posexplode(band_hashes) -> ONE groupBy on the band key that
-    folds group-size accounting AND posting-list assembly into a single
-    shuffle (collect_list) -> local pair fan-out for cool groups / salted
+    Plan shape: ONE groupBy on the band key that folds group-size
+    accounting AND posting-list assembly into a single shuffle
+    (collect_list) -> local pair fan-out for cool groups / salted
     self-join for hot groups -> band-hit-counted pair dedup.
 
     The r3 plan ran sizes-agg + bands-join + band-key self-join -- three
@@ -125,23 +142,12 @@ def candidate_pairs(
     drivers (pipeline stages, streaming micro-batches) can unpersist them
     once the pairs have materialized -- otherwise cached band groups
     accumulate across batches."""
-    # band rows carry ONLY (doc_id, band_hash): the band index already
-    # participates in the hash (band_hashes_col hashes (i, slice)), so
-    # grouping by the hash alone forms the identical collision groups --
-    # carrying band_idx through the explode + shuffle + groupBy key was a
-    # third of every band row's bytes for zero information (VERDICT r5
-    # next-round #5; a cross-band 64-bit hash collision could only merge
-    # two groups and ADD candidate pairs, never lose one).
-    bands = prepared.select(
-        "doc_id",
-        F.explode(band_hashes_col("minhash", config)).alias("band_hash"),
-    )
     # Single shuffle: collision groups as sorted id lists. Singleton groups
     # (the vast majority of band keys) can never pair and are dropped
     # before the persist, so the cache holds only collision groups -- far
     # smaller than the r3 all-postings cache.
     groups = (
-        bands.groupBy("band_hash")
+        postings.groupBy("band_hash")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .withColumn("gsz", F.size("ids"))
         .filter(F.col("gsz") > 1)

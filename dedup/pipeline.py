@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from dedup.catalog import CheckpointCatalog, StageResult
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.operators.assemble import assemble_conversations
-from dedup.operators.candidates import candidate_pairs, prepare_docs
+from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs
 from dedup.operators.cluster import connected_components
 from dedup.operators.exact import (
     exact_duplicate_groups,
@@ -117,7 +117,7 @@ def run_pipeline(
     reps = representatives(prepared, exact_groups, "doc_id")
 
     def _cands():
-        res = candidate_pairs(reps, config, tracker=tracker)
+        res = candidate_pairs(band_postings(reps, config), config, tracker=tracker)
         # persist skew accounting alongside (separate table, same commit
         # discipline) -- the "no silent truncation" ledger. The write is a
         # filter over the band groups the pairs job persists anyway, and

@@ -3,9 +3,12 @@
 The reference is strictly batch (CSV in -> CSV out, SURVEY.md par.2.11);
 this module is the engine's streaming extension: ``readStream`` over a
 directory (or any streaming source) of transcript rows, and per micro-batch
-``foreachBatch`` runs the *incremental* dedup (dedup/incremental.py) against
-the corpus state accumulated so far, appending verified edges, the new
-sketches, AND the new band postings to the warehouse.
+``foreachBatch`` runs ``incremental_dedup`` (dedup/incremental.py) against
+the corpus state accumulated so far -- every micro-batch, the first one
+included (empty corpus) -- appending verified edges, the new sketches, AND
+the new band postings to the warehouse. The first micro-batch stamps the
+config fingerprint into the warehouse; a later batch under a different
+config fails instead of joining incompatible postings.
 
 Why foreachBatch and not a stateful streaming agg: LSH dedup needs joins
 against the full historical corpus (unbounded state, keyed by band hash);
@@ -23,14 +26,14 @@ latest-batch-wins read rule (``corpus_prepared_view``). Verified edges
 follow the same rule: an edge is current only if written at or after the
 last re-preparation of BOTH its endpoints (``stream_edges_view``) -- older
 edges were computed against a partial document and are superseded by the
-re-verification the re-seen batch performs. Stale band postings of a
-superseded doc version stay in ``corpus_bands`` harmlessly: they can only
-create extra candidate pairs, and verification always fetches the LATEST
-doc version (dedup/incremental.py latest-wins fetch).
+re-verification the re-seen batch performs. The re-seen batch itself
+ignores the doc's superseded postings; later batches still see them in
+``corpus_bands``, where they can add candidate pairs (verified against the
+LATEST doc version) and count toward a band group's size.
 
 Per-batch cost is O(batch), not O(corpus): the historical corpus is only
 ever touched through (a) the append-only ``corpus_bands`` postings table
-(narrow 3-column scan, equi-joined on the micro-batch's band keys -- on a
+(narrow 2-column scan, semi-joined on the micro-batch's band keys -- on a
 real deployment an Iceberg table bucket-partitioned by band_hash, so the
 join is storage-pruned) and (b) a broadcast semi-join fetching heavy
 columns for the handful of docs that land in a candidate pair. The turns
@@ -56,9 +59,10 @@ TRANSCRIPT_DDL = (
 )
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
+FINGERPRINT_FILE = "config_fingerprint"
 PREPARED_COLS = ["doc_id", "norm_text", "gram_hashes", "minhash", "simhash"]
 # (doc_id, band_hash): band_idx is folded into the hash -- see
-# dedup/incremental.py::_bands and config.SKETCH_FORMAT_VERSION
+# dedup/operators/candidates.py::band_postings and config.SKETCH_FORMAT_VERSION
 BAND_COLS = ["doc_id", "band_hash"]
 
 
@@ -141,6 +145,30 @@ def stream_edges_view(spark: SparkSession, warehouse: str) -> DataFrame:
     )
 
 
+def _check_fingerprint(warehouse: str, config: DedupConfig, first_batch: bool) -> None:
+    """The first micro-batch stamps ``config.config_fingerprint()`` into the
+    warehouse; every later batch must run under the same fingerprint.
+    Corpus sketches and postings built under another config (seed, bands,
+    shingle size, sketch format) would silently join to nothing."""
+    path = os.path.join(warehouse, FINGERPRINT_FILE)
+    want = config.config_fingerprint()
+    if first_batch:
+        os.makedirs(warehouse, exist_ok=True)
+        with open(path, "w") as fh:
+            fh.write(want)
+        return
+    try:
+        with open(path) as fh:
+            stored = fh.read().strip()
+    except FileNotFoundError:
+        stored = None
+    if stored != want:
+        raise ValueError(
+            f"warehouse {warehouse} holds corpus state built under config "
+            f"fingerprint {stored}, but this stream runs under {want}"
+        )
+
+
 def start_streaming_dedup(
     spark: SparkSession,
     stream: DataFrame,
@@ -156,6 +184,7 @@ def start_streaming_dedup(
       <warehouse>/stream_edges/batch=<id>/      (verified dup edges;
                                                  see stream_edges_view)
       <warehouse>/stream_skew/batch=<id>/       (capped-band accounting)
+      <warehouse>/config_fingerprint            (config the state was built under)
     Batch-id directories make retried micro-batches idempotent (a retry
     overwrites its own directory, never duplicates)."""
     turns_dir = os.path.join(warehouse, "turns")
@@ -167,6 +196,8 @@ def start_streaming_dedup(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        existing = _read_state(spark, corpus_dir, PREPARED_COLS, with_batch=True)
+        _check_fingerprint(warehouse, config, first_batch=existing is None)
         tracker: list[DataFrame] = []
         # batch turns feed three consumers (turns append, re-seen probe,
         # dedup input); checkpoint so the source is read once
@@ -190,41 +221,19 @@ def start_streaming_dedup(
         ).select(*TRANSCRIPT_COLS)
         effective = batch.select(*TRANSCRIPT_COLS).unionByName(reseen_turns)
 
-        existing = _read_state(spark, corpus_dir, PREPARED_COLS, with_batch=True)
-        existing_bands = _read_state(spark, bands_dir, BAND_COLS)
-        if existing is None:
-            from dedup.incremental import _bands
-            from dedup.operators.assemble import assemble_conversations
-            from dedup.operators.candidates import candidate_pairs, prepare_docs
-            from dedup.operators.verify import verify_pairs
-
-            prepared = prepare_docs(
-                assemble_conversations(effective, config), "conv_id", "doc_text", config
-            ).localCheckpoint()
-            tracker.append(prepared)
-            res = candidate_pairs(prepared, config, tracker=tracker)
-            verified = verify_pairs(res.pairs, prepared, config, tracker=tracker)
-            new_prepared, new_bands, band_skew = prepared, _bands(prepared, config), res.band_skew
-        else:
-            res = incremental_dedup(
-                effective,
-                existing,
-                config,
-                existing_bands=existing_bands,
-                tracker=tracker,
-            )
-            new_prepared, new_bands = res.new_prepared, res.new_bands
-            verified, band_skew = res.verified_pairs, res.band_skew
-        new_prepared.select(*PREPARED_COLS).write.mode("overwrite").parquet(
+        res = incremental_dedup(
+            effective, existing, _read_state(spark, bands_dir, BAND_COLS), config, tracker=tracker
+        )
+        res.new_prepared.select(*PREPARED_COLS).write.mode("overwrite").parquet(
             os.path.join(corpus_dir, f"batch={batch_id}")
         )
-        new_bands.select(*BAND_COLS).write.mode("overwrite").parquet(
+        res.new_bands.select(*BAND_COLS).write.mode("overwrite").parquet(
             os.path.join(bands_dir, f"batch={batch_id}")
         )
-        verified.write.mode("overwrite").parquet(
+        res.verified_pairs.write.mode("overwrite").parquet(
             os.path.join(edges_dir, f"batch={batch_id}")
         )
-        band_skew.write.mode("overwrite").parquet(
+        res.band_skew.write.mode("overwrite").parquet(
             os.path.join(skew_dir, f"batch={batch_id}")
         )
         # release_blocks handles localCheckpoint blocks too -- a long-lived

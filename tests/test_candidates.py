@@ -8,7 +8,7 @@ import pytest
 from dedup.config import DedupConfig
 from dedup.generate import make_corpus
 from dedup.operators.assemble import assemble_conversations
-from dedup.operators.candidates import candidate_pairs, prepare_docs
+from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +22,7 @@ def prepared(spark, config):
 
 def test_candidate_recall_of_planted_near_dups(spark, config, prepared):
     prep, corpus = prepared
-    res = candidate_pairs(prep, config)
+    res = candidate_pairs(band_postings(prep, config), config)
     cands = {(r["id_a"], r["id_b"]) for r in res.pairs.collect()}
     # ground truth near-dup pairs with high-enough true Jaccard to be LSH
     # targets: compute exact Jaccard per truth pair, gate at the threshold
@@ -64,7 +64,7 @@ def test_candidate_recall_of_planted_near_dups(spark, config, prepared):
 def test_band_skew_accounting(spark, config, prepared):
     prep, _ = prepared
     tight = config.with_(max_band_group=2, salt_hot_threshold=1)
-    res = candidate_pairs(prep, tight)
+    res = candidate_pairs(band_postings(prep, tight), tight)
     skew_rows = res.band_skew.collect()
     # the boilerplate subset guarantees oversized bands at this cap
     assert len(skew_rows) > 0
@@ -76,21 +76,20 @@ def test_salted_path_equals_plain_join(spark, config, prepared):
     must equal pairs from the plain-join path -- salting is a physical
     optimization, never a semantic one."""
     prep, _ = prepared
+
+    def pairs(cfg):
+        res = candidate_pairs(band_postings(prep, cfg), cfg)
+        return {(r["id_a"], r["id_b"]) for r in res.pairs.collect()}
+
     all_salted = config.with_(salt_hot_threshold=1)   # every group hot
     all_plain = config.with_(salt_hot_threshold=10**9)  # no group hot
-    p1 = {(r["id_a"], r["id_b"]) for r in candidate_pairs(prep, all_salted).pairs.collect()}
-    p2 = {(r["id_a"], r["id_b"]) for r in candidate_pairs(prep, all_plain).pairs.collect()}
-    assert p1 == p2
+    assert pairs(all_salted) == pairs(all_plain)
 
 
 def test_tracker_releases_persisted_band_postings(spark, config):
     """VERDICT r1 item 8: cached band postings must be releasable once the
     pairs materialize -- the tracker collects every persist() the operator
     takes, and unpersisting them leaves no storage behind."""
-    from dedup.operators.candidates import candidate_pairs, prepare_docs
-    from dedup.generate import make_corpus
-    from dedup.operators.assemble import assemble_conversations
-
     corpus = make_corpus(n_conversations=20, seed=3)
     prep = prepare_docs(
         assemble_conversations(spark.createDataFrame(corpus.transcripts), config),
@@ -99,7 +98,7 @@ def test_tracker_releases_persisted_band_postings(spark, config):
         config,
     )
     tracker = []
-    res = candidate_pairs(prep, config, tracker=tracker)
+    res = candidate_pairs(band_postings(prep, config), config, tracker=tracker)
     res.pairs.count()
     assert len(tracker) == 1  # the collision-group cache (singletons pre-dropped)
     assert all(df.storageLevel.useMemory or df.storageLevel.useDisk for df in tracker)

@@ -8,7 +8,8 @@ import pytest
 from dedup.generate import make_corpus, misspell
 from dedup.incremental import incremental_dedup
 from dedup.operators.assemble import assemble_conversations
-from dedup.operators.candidates import prepare_docs
+from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs
+from dedup.operators.verify import verify_pairs
 
 
 def test_incremental_links_new_to_existing(spark, config):
@@ -34,7 +35,7 @@ def test_incremental_links_new_to_existing(spark, config):
         __import__("pandas").concat([newbie, novel], ignore_index=True)
     )
 
-    res = incremental_dedup(batch, existing, config, broadcast_new=True)
+    res = incremental_dedup(batch, existing, band_postings(existing, config), config)
     edges = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
     flat = {x for e in edges for x in e}
     assert {"xc0000003", "c0000003"} <= flat
@@ -70,9 +71,8 @@ def test_streaming_dedup_available_now(spark, config, tmp_path):
 
 
 def test_incremental_reuses_postings_no_corpus_resketch(spark, config, monkeypatch):
-    """O(batch) contract: with ``existing_bands`` provided, the band UDF
-    never re-runs over the historical corpus -- _bands is invoked exactly
-    once (new side only) -- and edges match the legacy recompute path."""
+    """O(batch) contract: the band UDF never re-runs over the historical
+    corpus -- band_postings is invoked exactly once (new side only)."""
     import dedup.incremental as inc
 
     corpus = make_corpus(n_conversations=30, dup_fraction=0.0, seed=21)
@@ -80,30 +80,74 @@ def test_incremental_reuses_postings_no_corpus_resketch(spark, config, monkeypat
     existing = prepare_docs(
         assemble_conversations(src, config), "conv_id", "doc_text", config
     ).localCheckpoint()
-    bands = inc._bands(existing, config).localCheckpoint()
+    bands = band_postings(existing, config).localCheckpoint()
 
     batch_pd = corpus.transcripts[corpus.transcripts.conv_id == "c0000005"].copy()
     batch_pd["conv_id"] = "xc0000005"  # exact dup of an existing conversation
     batch = spark.createDataFrame(batch_pd)
 
-    legacy = inc.incremental_dedup(batch, existing, config)
-    legacy_edges = {(r["id_a"], r["id_b"]) for r in legacy.verified_pairs.collect()}
-
     calls = []
-    orig = inc._bands
+    orig = inc.band_postings
 
     def spy(prepared, cfg):
         calls.append(prepared)
         return orig(prepared, cfg)
 
-    monkeypatch.setattr(inc, "_bands", spy)
-    res = inc.incremental_dedup(batch, existing, config, existing_bands=bands)
+    monkeypatch.setattr(inc, "band_postings", spy)
+    res = inc.incremental_dedup(batch, existing, bands, config)
     edges = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
     assert len(calls) == 1, "historical corpus must not be re-banded"
-    assert edges == legacy_edges
     assert ("c0000005", "xc0000005") in edges
     # new_bands covers exactly the new docs, one posting per LSH band
     assert res.new_bands.count() == config.lsh_bands * res.new_prepared.count()
+
+
+def test_incremental_equals_batch_path_on_touched_pairs(spark, config):
+    """A batch's verified edges equal the batch path's over corpus + batch,
+    restricted to pairs touching the batch. Two corpus copies of one
+    conversation plus two batch copies make every band group of that
+    conversation 4 docs: over a cap of 3 on the full group, so the batch
+    path drops them all, whatever side of the append each copy is on."""
+    import random
+
+    import pandas as pd
+
+    cfg = config.with_(max_band_group=3)
+    corpus = make_corpus(n_conversations=20, dup_fraction=0.0, seed=31)
+    t = corpus.transcripts
+    dup = t[t.conv_id == "c0000002"]
+    near = t[t.conv_id == "c0000004"].copy()
+    rng = random.Random(5)
+    near["conv_id"] = "n0000004"
+    near["text"] = [misspell(rng, x) for x in near["text"]]
+    old_pd = pd.concat([t, dup.assign(conv_id="a0000002")], ignore_index=True)
+    new_pd = pd.concat(
+        [dup.assign(conv_id="b0000002"), dup.assign(conv_id="b1000002"), near],
+        ignore_index=True,
+    )
+    new_ids = {"b0000002", "b1000002", "n0000004"}
+
+    def prep(pdf):
+        df = assemble_conversations(spark.createDataFrame(pdf), cfg)
+        return prepare_docs(df, "conv_id", "doc_text", cfg).localCheckpoint()
+
+    existing = prep(old_pd)
+    res = incremental_dedup(
+        spark.createDataFrame(new_pd), existing, band_postings(existing, cfg), cfg
+    )
+    got = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
+
+    everything = prep(pd.concat([old_pd, new_pd], ignore_index=True))
+    ref = verify_pairs(
+        candidate_pairs(band_postings(everything, cfg), cfg).pairs, everything, cfg
+    )
+    want = {
+        (r["id_a"], r["id_b"])
+        for r in ref.collect()
+        if r["id_a"] in new_ids or r["id_b"] in new_ids
+    }
+    assert ("c0000004", "n0000004") in want
+    assert got == want
 
 
 def test_streaming_maintains_bands_table(spark, config, tmp_path):
@@ -217,3 +261,34 @@ def test_streaming_cross_batch_conversation_assembly(spark, config, tmp_path):
         (r["id_a"], r["id_b"]) for r in stream_edges_view(spark, wh_ref).collect()
     }
     assert e_split == e_ref
+
+
+def test_streaming_rejects_config_change(spark, config, tmp_path):
+    """A restart under a different config must fail loudly, naming both
+    fingerprints, instead of joining incompatible postings."""
+    from pyspark.errors import StreamingQueryException
+
+    from dedup.streaming import read_transcript_stream, start_streaming_dedup
+
+    corpus = make_corpus(n_conversations=8, dup_fraction=0.0, seed=13)
+    src = spark.createDataFrame(corpus.transcripts).withColumn(
+        "turn_idx", F.col("turn_idx").cast("int")
+    )
+    in_dir, wh, ckpt = (str(tmp_path / d) for d in ("in", "wh", "ckpt"))
+    src.filter(F.col("conv_id") != "c0000001").write.parquet(in_dir)
+    q = start_streaming_dedup(
+        spark, read_transcript_stream(spark, in_dir), wh, config, checkpoint_dir=ckpt
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+
+    src.filter(F.col("conv_id") == "c0000001").write.mode("append").parquet(in_dir)
+    other = config.with_(minhash_seed=config.minhash_seed + 1)
+    q = start_streaming_dedup(
+        spark, read_transcript_stream(spark, in_dir), wh, other, checkpoint_dir=ckpt
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(300)
+    msg = str(q.exception())
+    assert config.config_fingerprint() in msg
+    assert other.config_fingerprint() in msg
