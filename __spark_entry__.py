@@ -16,9 +16,8 @@ import pyspark.sql.functions as F
 from dedup.config import DedupConfig
 from dedup.tracking import drain_tracked, track_cache
 from dedup.functions.normalize import normalize_ascii_col
-from dedup.functions.shingle import char_ngrams_col, gram_hashes_col, words_col
+from dedup.functions.shingle import char_ngrams_col, words_col
 from dedup.functions.similarity import exact_jaccard_col
-from dedup.functions.sketch import hamming_col, simhash_udf
 from dedup.knn import brute_force_topk, srp_near_dup_pairs
 from dedup.operators.assemble import assemble_conversations
 from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs

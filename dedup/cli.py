@@ -25,7 +25,6 @@ def _build_parser() -> argparse.ArgumentParser:
     run.add_argument("--warehouse", required=True, help="stage-table warehouse dir")
     run.add_argument("--run-id", default=None)
     run.add_argument("--master", default=None)
-    run.add_argument("--ascii-fast-path", action="store_true")
 
     gen = sub.add_parser("generate", help="write a deterministic synthetic transcripts corpus")
     gen.add_argument("--out", required=True)
@@ -78,12 +77,7 @@ def main(argv: list[str] | None = None) -> int:
         transcripts = spark.read.parquet(args.input)
         t0 = time.time()
         report = run_pipeline(
-            spark,
-            transcripts,
-            args.warehouse,
-            config=config,
-            run_id=args.run_id,
-            ascii_fast_path=args.ascii_fast_path,
+            spark, transcripts, args.warehouse, config=config, run_id=args.run_id
         )
         n_turns = transcripts.count()
         secs = time.time() - t0

@@ -53,8 +53,8 @@ class DedupConfig:
     # Levenshtein-ratio threshold (reference: LEVENSHTEIN_RATIO_THRESHOLD=94,
     # settings.py:75; gate semantics predict.py:147-156).
     lev_threshold: int = 94
-    # SimHash hamming-distance threshold for the containment/long-span path.
-    simhash_bits: int = 64
+    # SimHash hamming distance at or under which verify's phase 1 keeps a
+    # pair for exact scoring even when its MinHash estimate is low.
     simhash_hamming_threshold: int = 3
     # MinHash-estimate pre-gate: skip exact set intersection when the
     # signature agreement sits more than this many binomial sigmas below
@@ -97,7 +97,6 @@ class DedupConfig:
     salt_hot_threshold: int = 32
 
     # --- long-span containment (windowed sketches + substring verify) ---
-    containment_enabled: bool = True
     containment_window: int = 256      # grams per window sketch
     containment_stride: int = 128
     containment_min_grams: int = 64    # shorter docs are noise, skip
@@ -175,9 +174,8 @@ class DedupConfig:
     # transitive); the cap mirrors max_band_group's role upstream.
     containment_max_partners: int = 16
 
-    # --- cascade (reference: top-100 predict / top-10 train, settings.py:55-56) ---
+    # --- cascade (reference: top-100 predict, settings.py:56) ---
     top_n_predict: int = 100
-    top_n_train: int = 10
     # Tier-2 candidate-generation gram-frequency cutoff: when set, candidate
     # pairs are generated only through grams with truth-df <= cutoff, then
     # rescored EXACTLY over all shared grams. None = exact all-shared-gram
@@ -196,18 +194,6 @@ class DedupConfig:
     # (reference-with-model golden: 633). 0 disables the tier (pure
     # reference tiers 1-3).
     match_accept_ratio: int = 90
-    # Tier-4b score acceptance (still deterministic, still replacing the
-    # model tier): among a query's surviving candidates with
-    # max(lev, tsort) >= match_accept_score_ratio_floor, accept the unique
-    # score-argmax when its tier-2 IDF-weighted Jaccard score >= this.
-    # None/0 disables the branch. Values grid-searched on the reference's
-    # example TRAIN split only (tools/tune_accept.py).
-    match_accept_score: float | None = None
-    # ratio floor for the score branch; participates in the DP band gate
-    # (pairs below it may carry truncated ratios, so the floor must stay
-    # within the computed band). Keep well above 0: the floor widens the
-    # deletion gate and the DP band for every pair.
-    match_accept_score_ratio_floor: int = 70
 
     # --- partitioning / shuffle knobs ---
     shuffle_partitions: int = 32
@@ -267,9 +253,6 @@ class DedupConfig:
         a = rng.randint(1, int(MERSENNE_PRIME), size=self.num_perm, dtype=np.uint64)
         b = rng.randint(0, int(MERSENNE_PRIME), size=self.num_perm, dtype=np.uint64)
         return a, b
-
-    def simhash_seed(self) -> int:
-        return self.minhash_seed ^ 0x5EED
 
     def config_fingerprint(self) -> str:
         """Stable hash of all semantic knobs PLUS the sketch wire-format

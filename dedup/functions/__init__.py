@@ -6,13 +6,7 @@ from dedup.functions.similarity import (
     levenshtein_ratio_pairs,
     token_sort_col,
 )
-from dedup.functions.sketch import (
-    band_hashes_col,
-    block_minhash_text_udf,
-    doc_sketch_udf,
-    minhash_signature_udf,
-    simhash_udf,
-)
+from dedup.functions.sketch import band_hashes_col, doc_sketch_udf
 
 __all__ = [
     "normalize_text_col",
@@ -24,8 +18,5 @@ __all__ = [
     "levenshtein_ratio_pairs",
     "token_sort_col",
     "band_hashes_col",
-    "block_minhash_text_udf",
     "doc_sketch_udf",
-    "minhash_signature_udf",
-    "simhash_udf",
 ]

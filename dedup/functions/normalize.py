@@ -15,10 +15,10 @@ Golden semantics (tested against the reference's own unit-test string,
 
 Implemented as a vectorized pandas UDF (Arrow-batched pandas ``.str`` ops;
 no per-row Python UDF) because Spark has no built-in NFD accent folding.
-For pure-ASCII inputs the same transform is expressible with built-in
-``lower/regexp_replace/trim`` columns -- ``normalize_ascii_col`` below stays
-fully JVM-side (whole-stage codegen) and is the hot path when the corpus is
-known-ASCII.
+``normalize_ascii_col`` below is a JVM-only approximation built from
+``lower/regexp_replace/trim`` columns; it is NOT equivalent, even on ASCII
+input (see its docstring), and serves the entry queries, whose DuckDB
+oracle mirrors its JVM regex semantics.
 """
 
 from __future__ import annotations
@@ -87,8 +87,20 @@ def normalize_text_col(
 def normalize_ascii_col(
     col: Column | str, config: DedupConfig = DEFAULT_CONFIG
 ) -> Column:
-    """JVM-only variant (no Python round-trip) -- exact parity for inputs
-    that are already ASCII. Keeps the scan inside whole-stage codegen."""
+    r"""JVM-only variant (no Python round-trip): keeps the scan inside
+    whole-stage codegen. Its output differs from normalize_text_col even
+    on ASCII input, because Spark's trim strips only spaces and Java's
+    ``\s`` is narrower than Python's. Measured:
+
+        input            this column        normalize_text_col
+        'hello world\n'  'hello world\n'    'hello world'
+        '\tTab start'    '\ttab start'      'tab start'
+        'x\x1cy'         '0xy'              'x\x1cy'
+
+    Non-ASCII letters are dropped, not folded: 'café naïve' becomes
+    'caf nave' here and 'cafe naive' there. The pipeline always uses
+    normalize_text_col; the entry queries use this column because their
+    DuckDB oracle mirrors its semantics."""
     c = F.col(col) if isinstance(col, str) else col
     c = F.coalesce(c, F.lit(""))
     c = F.lower(c)

@@ -3,13 +3,13 @@ pandas UDFs with numpy matrix bodies (no per-row Python UDFs -- the
 ``input_hint`` mandate; the moral successor of the reference's numba
 kernels, /root/reference/doppelspeller/match_maker.py:16-71).
 
-Inputs are ``array<bigint>`` columns of xxhash64'd shingles produced
-JVM-side (dedup/functions/shingle.py:gram_hashes_col) -- the hashing of raw
-text stays in whole-stage codegen; only the permutation/min and bit-vote
-math crosses into Python, batched.
+The sketch UDFs take normalized TEXT and shingle in numpy
+(byte_kgram_codes -- positional k-grams as exact big-endian byte codes),
+so the gram array never exists as a Spark column and Arrow ships the text
+bytes once. Band hashing and hamming distance stay native.
 
 MinHash family: h_i(x) = (a_i * x + b_i) mod p, p = 2^61-1, over x = the
-64-bit shingle hash mapped into [0, p). Deterministic (a, b) tables come
+gram code mapped into [0, p). Deterministic (a, b) tables come
 from DedupConfig.perm_params() so signatures are reproducible run-to-run
 (SURVEY.md par.7). The reference itself declared-but-never-used
 ``sequences_min_hash`` columns (/root/reference/doppelspeller/constants.py:8,17)
@@ -86,7 +86,7 @@ def _mulmod_p(a: np.uint64, x: np.ndarray, work: np.ndarray | None = None) -> np
 
 
 def _to_field(hashes: np.ndarray) -> np.ndarray:
-    """Map signed-int64 xxhash64 values into [0, p)."""
+    """Map int64 gram codes into [0, p)."""
     return hashes.astype(np.uint64) % MERSENNE_PRIME
 
 
@@ -108,7 +108,7 @@ _MINHASH_CHUNK_GRAMS = 24_000
 def _minhash_matrix(
     sizes: np.ndarray, flat: np.ndarray, a_params, b_params, num_perm: int
 ) -> np.ndarray:
-    """Segment MinHash kernel shared by the whole-doc and block UDFs:
+    """Segment MinHash kernel shared by the whole-doc and window UDFs:
     ``sizes[i]`` grams per segment, ``flat`` = the segments' int64 gram
     hashes concatenated in order. Returns an (n_segments, num_perm) int64
     signature matrix; empty segments get the MAX_HASH sentinel row (never
@@ -150,42 +150,6 @@ def _minhash_matrix(
     return sigs.astype(np.int64)
 
 
-def minhash_signature_udf(
-    gram_hashes: Column | str,
-    config: DedupConfig = DEFAULT_CONFIG,
-    num_perm: int | None = None,
-) -> Column:
-    """array<bigint> shingle hashes -> array<bigint> MinHash signature of
-    length num_perm (one segment per row; see _minhash_matrix).
-    ``num_perm`` overrides the signature length with a PREFIX of the
-    config's deterministic permutation table (used by the containment
-    window geometry, which needs far fewer permutations -- see
-    DedupConfig.containment_num_perm)."""
-    a_params, b_params = config.perm_params()
-    num_perm = num_perm or config.num_perm
-    a_params, b_params = a_params[:num_perm], b_params[:num_perm]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _sig(batches: pd.Series) -> pd.Series:
-        n = len(batches)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        sizes = np.fromiter(
-            (0 if v is None else len(v) for v in batches), dtype=np.int64, count=n
-        )
-        arrs = [
-            np.asarray(v, dtype=np.int64)
-            for v in batches
-            if v is not None and len(v)
-        ]
-        flat = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-        sigs = _minhash_matrix(sizes, flat, a_params, b_params, num_perm)
-        return pd.Series(list(sigs))
-
-    c = F.col(gram_hashes) if isinstance(gram_hashes, str) else gram_hashes
-    return _sig(c)
-
-
 def byte_kgram_codes(text: str, k: int) -> np.ndarray:
     """Positional k-gram sequence of ``text`` as exact big-endian byte
     codes (int64, < 2^(8k)): element i is the k bytes of the UTF-8
@@ -208,94 +172,28 @@ def byte_kgram_codes(text: str, k: int) -> np.ndarray:
     return out
 
 
-def block_minhash_text_udf(
-    text: Column | str, stride: int, config: DedupConfig = DEFAULT_CONFIG
-) -> Column:
-    """Normalized TEXT -> array<array<bigint>>: one MinHash signature per
-    non-overlapping ``stride``-gram block of the positional byte-k-gram
-    sequence (see byte_kgram_codes; last block = the tail).
-
-    Why blocks instead of sketching each sliding window directly: MinHash
-    of a set union is the elementwise min of the parts' MinHashes, so with
-    window = 2 * stride every sliding window's signature is EXACTLY
-    zip_with(least) of two adjacent block signatures. Each gram then feeds
-    the permutation kernel ONCE instead of once per overlapping window.
-
-    Fuses shingling INTO the sketch UDF: the positional gram array never
-    materializes as a Spark column, so (a) the interpreted higher-order
-    transform(substr(..)) + xxhash64 chain -- which ran OUTSIDE codegen at
-    ~7us/gram and dominated the containment stage's wall (c_pos_hashes,
-    92.6s of the stage's ~200s at 64k convs / local[16]) -- disappears,
-    and (b) Arrow ships the ~1x text bytes instead of the 8x positional
-    int64 array. The numpy 3-shift gram pack is memory-bandwidth-trivial
-    next to the permutation kernel that follows it.
-
-    Signature length is config.containment_num_perm (a PREFIX of the
-    whole-doc permutation table): aligned window pairs carry Jaccard
-    >= 0.6 by construction, so the window LSH runs a shorter, lower-r
-    geometry than the whole-doc path -- see the DedupConfig block."""
-    a_params, b_params = config.perm_params()
-    num_perm = config.containment_num_perm
-    a_params, b_params = a_params[:num_perm], b_params[:num_perm]
-    k = config.k_shingle
-    s = int(stride)
-
-    @F.pandas_udf(ArrayType(ArrayType(LongType())))
-    def _blocks(texts: pd.Series) -> pd.Series:
-        n = len(texts)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        arrs: list[np.ndarray] = []
-        seg_sizes: list[int] = []
-        row_nblocks = np.zeros(n, dtype=np.int64)
-        for r_i, v in enumerate(texts):
-            if v is None:
-                continue
-            a = byte_kgram_codes(v, k)
-            if len(a) == 0:
-                continue
-            nb = (len(a) + s - 1) // s
-            row_nblocks[r_i] = nb
-            arrs.append(a)
-            seg_sizes.extend([s] * (nb - 1))
-            seg_sizes.append(len(a) - s * (nb - 1))
-        flat = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-        sizes = np.asarray(seg_sizes, dtype=np.int64)
-        sigs = _minhash_matrix(sizes, flat, a_params, b_params, num_perm)
-        out: list[list] = []
-        pos = 0
-        for nb in row_nblocks:
-            out.append([sigs[pos + j] for j in range(nb)])
-            pos += nb
-        return pd.Series(out, dtype=object)
-
-    c = F.col(text) if isinstance(text, str) else text
-    return _blocks(c)
-
-
 def window_band_hashes_text_udf(
     text: Column | str, stride: int, config: DedupConfig = DEFAULT_CONFIG
 ) -> Column:
     """Normalized TEXT -> array<bigint>: the containment window path's
-    BAND HASHES, fully fused (r6) -- shingle -> per-block MinHash ->
-    window composition (min of adjacent block signatures; exact for
-    window == 2 * stride) -> per-band splitmix64 chain hash, all inside
-    one numpy batch. Element order: window-major, band-minor
-    (window 0's containment_lsh_bands hashes first).
+    band hashes, fused into one numpy batch -- shingle -> per-block
+    MinHash over non-overlapping ``stride``-gram blocks -> window
+    signatures -> per-band splitmix64 chain hash. Element order:
+    window-major, band-minor (window 0's containment_lsh_bands hashes
+    first).
 
-    Replaces the three-step JVM chain block_minhash_text_udf ->
-    window_sigs_col -> band_hashes_col: the window zip_with(least) and
-    the per-band xxhash64-over-slice both run INTERPRETED per element,
-    and the per-block signatures crossed Arrow only to be reduced to
-    hashes. Collision semantics are what LSH needs -- equal
-    (band index, band rows) => equal hash, distinct inputs collide with
-    ~2^-64 probability (splitmix64 is bijective per mixing step); band
-    hash VALUES change family vs the JVM chain, which is statistically
-    neutral: a true containment's aligned windows are equal element-wise,
-    so they collide in every band under ANY deterministic family, and
-    band-hit counts/ranks of planted pairs are family-independent.
-    Empty texts yield an empty array (no windows -- same invariant as
-    window_sigs_col's empty guard)."""
+    Invariant (tests/test_containment.py): window i's signature is the
+    MinHash, under the containment_num_perm prefix of perm_params(), of
+    the positional gram slice [i*stride, i*stride + 2*stride). MinHash of
+    a union is the elementwise min of the parts' MinHashes, so the min of
+    blocks i and i+1 equals sketching that slice directly, at half the
+    gram work. A doc of n > 0 grams gets max(ceil((n - 2*stride) / stride)
+    + 1, 1) windows; an empty text gets none. Two (window, band) keys
+    share a hash exactly when their band rows are equal: the band index
+    seeds the chain and splitmix64 is bijective per mixing step, so
+    distinct rows collide with ~2^-64 probability. Hash values are
+    specific to this family; LSH depends only on the collision
+    structure."""
     a_params, b_params = config.perm_params()
     num_perm = config.containment_num_perm
     a_params, b_params = a_params[:num_perm], b_params[:num_perm]
@@ -356,10 +254,7 @@ def window_band_hashes_text_udf(
 
 
 def band_hashes_col(
-    signature: Column | str,
-    config: DedupConfig = DEFAULT_CONFIG,
-    bands: int | None = None,
-    rows: int | None = None,
+    signature: Column | str, config: DedupConfig = DEFAULT_CONFIG
 ) -> Column:
     """MinHash signature -> array<bigint> of lsh_bands band hashes, fully
     NATIVE: xxhash64 over (band_idx, the band's r signature values). The
@@ -372,12 +267,8 @@ def band_hashes_col(
     for candidate generation, which was a measured per-stage FIXED cost
     (worker fork + numpy/pandas import across all task threads) that did
     not shrink with cores (VERDICT r4: candidate_pairs flat at 0.28
-    efficiency across 4 vs 16 cores).
-
-    ``bands``/``rows`` override the whole-doc (b, r) -- the containment
-    window path passes its own geometry (see containment_lsh_bands)."""
-    bands = bands or config.lsh_bands
-    rows = rows or config.lsh_rows
+    efficiency across 4 vs 16 cores)."""
+    bands, rows = config.lsh_bands, config.lsh_rows
     c = F.col(signature) if isinstance(signature, str) else signature
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -391,40 +282,6 @@ def band_hashes_col(
 # reasoning as _MINHASH_CHUNK_GRAMS; the earlier 256k bound put a 16 MB
 # matrix on every worker and 32 workers on one memory controller).
 _SIMHASH_CHUNK_GRAMS = 32_000
-
-
-def simhash_udf(
-    gram_hashes: Column | str, config: DedupConfig = DEFAULT_CONFIG
-) -> Column:
-    """64-bit SimHash over shingle hashes: per-bit +/-1 votes, sign -> bit.
-    Downstream hamming distance is native SQL ``bit_count(a ^ b)`` -- no UDF
-    on the pair side (SURVEY.md par.7 step 5).
-
-    Vectorized across ROWS like the MinHash UDF (flat concat + segment
-    reduce): the whole Arrow batch's hashes become one flat uint64 vector,
-    bits unpack via np.unpackbits (little-endian bit order == shift order),
-    per-doc bit votes are one np.add.reduceat, and the winning bits pack
-    back with np.packbits -- no Python loop over rows or bits. Row-chunked
-    so the G x 64 bit matrix stays memory-bounded for gram-heavy batches."""
-
-    @F.pandas_udf(LongType())
-    def _simhash(batches: pd.Series) -> pd.Series:
-        n = len(batches)
-        if n == 0:
-            return pd.Series([], dtype=np.int64)
-        sizes = np.fromiter(
-            (0 if v is None else len(v) for v in batches), dtype=np.int64, count=n
-        )
-        arrs = [
-            np.asarray(v, dtype=np.int64)
-            for v in batches
-            if v is not None and len(v)
-        ]
-        flat = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-        return pd.Series(_simhash_vector(sizes, flat))
-
-    c = F.col(gram_hashes) if isinstance(gram_hashes, str) else gram_hashes
-    return _simhash(c)
 
 
 def _simhash_vector(sizes: np.ndarray, flat: np.ndarray) -> np.ndarray:
@@ -492,24 +349,23 @@ def doc_sketch_udf(
     minhash array<bigint>, simhash bigint): the whole per-doc sketch
     pipeline in ONE Arrow round trip.
 
-    Fuses shingling into the sketch UDF (same move as
-    block_minhash_text_udf, which removed 92.6s/stage at 64k convs):
-    positional byte-k-gram codes (byte_kgram_codes) -> np.unique for the
-    distinct gram set -> MinHash over the raw codes + SimHash over their
-    splitmix64-mixed view, all from one flat vector. The
-    interpreted transform(substr)+xxhash64+array_distinct chain the
-    prepared stage previously ran JVM-side (~7us/gram, outside codegen)
-    disappears, and the gram array crosses the Python boundary once
-    (outbound) instead of twice inbound (MinHash UDF + SimHash UDF).
+    Fuses shingling into the sketch UDF: positional byte-k-gram codes
+    (byte_kgram_codes) -> np.unique for the distinct gram set -> MinHash
+    over the raw codes + SimHash over their splitmix64-mixed view, all
+    from one flat vector. The interpreted transform(substr)+xxhash64+
+    array_distinct chain the prepared stage previously ran JVM-side
+    (~7us/gram, outside codegen) disappears, and the gram array crosses
+    the Python boundary once (outbound) instead of twice inbound.
 
-    Values: gram_hashes are raw byte-gram codes, not xxhash64 of gram
-    strings -- a collision-free encoding of the doc's distinct k-gram
-    set, so every set-level consumer (exact Jaccard, containment
-    |S∩L|/|S|, n_grams) computes identical numbers for ASCII text;
-    MinHash/SimHash/LSH keys change hash family, which is statistically
-    neutral (tests assert planted recall, and the dup_pairs_jaccard
-    oracle equality holds because the verified output depends only on
-    exact Jaccard)."""
+    Values: gram_hashes are the sorted big-endian byte codes of the doc's
+    distinct k-grams -- for ASCII text exactly the distinct
+    char_ngrams_col grams, each packed into an int (tests/test_sketch.py).
+    That encoding is collision-free, so every set-level consumer (exact
+    Jaccard, containment |S∩L|/|S|, n_grams) computes identical numbers
+    for ASCII text; MinHash/SimHash/LSH keys use their own hash family,
+    which is statistically neutral (tests assert planted recall, and the
+    dup_pairs_jaccard oracle equality holds because the verified output
+    depends only on exact Jaccard)."""
     from pyspark.sql.types import StructField, StructType
 
     a_params, b_params = config.perm_params()

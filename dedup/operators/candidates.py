@@ -45,10 +45,11 @@ def prepare_docs(
     config: DedupConfig = DEFAULT_CONFIG,
     ascii_fast_path: bool = False,
 ) -> DataFrame:
-    """One projection pass: normalize -> shingle -> hash shingles ->
-    MinHash signature + SimHash sketch. Everything except the two sketch
-    UDFs stays in whole-stage codegen; the sketch UDFs receive only the
-    ``array<bigint>`` hash column (narrow Arrow transfer, no raw text)."""
+    """One projection pass: normalize -> one fused sketch UDF (distinct
+    gram codes, MinHash signature, SimHash). ``ascii_fast_path`` selects
+    normalize_ascii_col, whose output differs from the default normalizer
+    (see its docstring); only the entry queries set it, to match their
+    oracle."""
     norm = (
         normalize_ascii_col(text_col, config)
         if ascii_fast_path

@@ -126,49 +126,6 @@ def lcs_substring_ratio_udf(text_a: Column | str, text_b: Column | str) -> Colum
 # windowed-sketch candidate generation
 # ---------------------------------------------------------------------------
 
-def _window_slices(gram_hashes: Column, window: int, stride: int) -> Column:
-    """array<array<bigint>>: sliding windows over the gram-hash sequence.
-    No longer on the production path (the candidate generator composes
-    window signatures from block MinHashes instead -- bit-identical, half
-    the sketch work); kept as the direct-slicing cross-check used by
-    tests/test_containment.py."""
-    n = F.size(gram_hashes)
-    n_win = F.greatest(F.ceil((n - F.lit(window)) / F.lit(stride)) + 1, F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), n_win.cast("int") - 1),
-        lambda i: F.slice(gram_hashes, i * stride + 1, window),
-    )
-
-
-def window_sigs_col(blk_sigs: Column | str) -> Column:
-    """Per-block MinHash signatures -> per-WINDOW signatures, natively:
-    window i = zip_with(least) of blocks i and i+1 (single-block tail /
-    single-block doc uses block i alone). Exactly equal to MinHashing each
-    sliding window slice directly when window == 2 * stride, because
-    MinHash of a set union is the elementwise min of the parts' MinHashes
-    (parity-tested against direct slicing in tests/test_containment.py).
-
-    Window count = max(n_blocks - 1, 1) == the sliding-window count
-    ceil((n - w) / s) + 1 floored at 1, for w == 2*s.
-
-    Empty ``blk_sigs`` yields an EMPTY window array (ADVICE r5 #3): the
-    unguarded transform produced one all-null window whose band hashes
-    degenerated to hash(band_idx) -- every empty doc colliding in every
-    band. Unreachable on the production path (containment_min_grams
-    filters empty docs upstream) but the invariant no longer depends on
-    that upstream filter."""
-    bs = F.col(blk_sigs) if isinstance(blk_sigs, str) else blk_sigs
-    return F.when(F.size(bs) <= 0, F.array().cast("array<array<bigint>>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(bs) - 2, F.lit(0))),
-            lambda i: F.when(
-                F.get(bs, i + 1).isNotNull(),
-                F.zip_with(F.get(bs, i), F.get(bs, i + 1), lambda x, y: F.least(x, y)),
-            ).otherwise(F.get(bs, i)),
-        )
-    )
-
-
 @dataclass
 class ContainmentCandidates:
     pairs: DataFrame            # (id_short, id_long)
@@ -187,12 +144,12 @@ def containment_candidates(
 
     EVERY doc is windowed uniformly (window W grams, stride s = W/2; docs
     shorter than W emit one whole-doc window), each window gets its own
-    MinHash (composed from per-block sketches -- see block_minhash_text_udf)
-    + native band hashes, and windows meet on band keys exactly like the
-    ordinary LSH path. Windows slice the POSITIONAL gram sequence
-    (duplicates preserved): element i is the gram at char i, so a span
-    shared at ANY offset yields window pairs aligned within stride/2
-    regardless of what grams the long doc used earlier. (The r3 plan
+    MinHash (composed from per-block sketches) and band hashes -- one
+    fused UDF, window_band_hashes_text_udf -- and windows meet on band
+    keys exactly like the ordinary LSH path. Windows slice the POSITIONAL
+    gram sequence (duplicates preserved): element i is the gram at char i,
+    so a span shared at ANY offset yields window pairs aligned within
+    stride/2 regardless of what grams the long doc used earlier. (The r3 plan
     sliced the DISTINCT first-occurrence sequence, which drifts for
     mid-document embeddings -- VERDICT r3 missing #1.) Geometry: a shared
     span of >= W grams guarantees some window pair aligned within W/4,
@@ -201,17 +158,16 @@ def containment_candidates(
     perturb signatures.
 
     Plan shape mirrors candidate_pairs: ONE groupBy on the band key folds
-    size accounting + member-list assembly (collect_list of (id, n_grams)
-    structs); pair fan-out is local array math bounded by
-    containment_max_band_group
+    size accounting + member-list assembly (sorted collect_list of ids);
+    pair fan-out is local array math bounded by containment_max_band_group
     (window groups need no salted path: the cap stays small because an
     oversized WINDOW group is per-span boilerplate that the whole-doc tier
     already links transitively)."""
     s = config.containment_stride
-    # Shingling is FUSED into the block-sketch UDF (block_minhash_text_udf
-    # computes positional byte-k-gram codes from norm_text in numpy): the
-    # positional gram array never exists as a Spark column, so the
-    # interpreted transform(substr)+xxhash64 chain -- 92.6s of this
+    # Shingling is FUSED into the window sketch UDF (it computes positional
+    # byte-k-gram codes from norm_text in numpy): the positional gram
+    # array never exists as a Spark column, so the interpreted
+    # transform(substr)+xxhash64 chain -- 92.6s of this
     # stage's ~200s at 64k convs / local[16], plus a persist barrier --
     # is gone, and Arrow ships text bytes instead of 8-byte-per-gram
     # arrays. ``n_grams`` (DISTINCT gram count, for the short/long
@@ -271,12 +227,13 @@ def containment_candidates(
         "band_hash", F.col("gsz").alias("group_size")
     )
     ok = groups.filter(F.col("gsz") <= config.containment_max_band_group)
-    # NO family collapse here, unlike candidate_pairs: window-band groups
-    # are keyed by array<struct> member lists, so the collapse groupBy
-    # falls back to SortAggregate (complex grouping key) over the ~20x
-    # more numerous window groups -- measured at 64k convs / local[16] it
-    # COST 43s against the fan-out volume it saved (window families
-    # repeat across far fewer bands than whole-doc boilerplate families).
+    # NO family collapse here, unlike candidate_pairs: window families
+    # repeat across far fewer bands than whole-doc boilerplate families,
+    # so collapsing the ~20x more numerous window groups costs more than
+    # the fan-out it saves. Measured on this stage alone at 3.6k turns
+    # (2x3 interleaved runs, identical outputs): routing it through
+    # candidate_pairs took 32 -> 35 Spark jobs, 96 -> 115 stages and
+    # 8.75 -> 10.1 s median wall.
     raw = (
         # repartition before the fan-out: the cached collision groups sit
         # in however few partitions AQE coalesced the band groupBy to, and

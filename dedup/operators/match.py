@@ -71,8 +71,7 @@ def truth_idf(truth: DataFrame, config: DedupConfig = DEFAULT_CONFIG) -> DataFra
     ``gram`` in the output is the 64-bit xxhash64 of the gram string, not
     the string: every downstream consumer only ever equi-joins on it, and an
     8-byte shuffle key beats a variable-width UTF-8 one at corpus scale
-    (identical semantics absent 64-bit collisions -- the same trade
-    gram_hashes_col makes for the dedup path)."""
+    (identical semantics absent 64-bit collisions)."""
     n_truth = truth.count()
     return (
         truth.select(F.explode("grams").alias("g"))
@@ -206,18 +205,15 @@ def jaccard_topk_candidates(
     )
 
 
-def cascade_pair_features(
+def match_titles(
     queries_raw: DataFrame,
     truth_raw: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
     top_n: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Tiers 1-2 plus the per-pair feature computation shared by tiers 3/4:
-    returns (queries, exact, pairs) where ``pairs`` carries
-    (query_id, title_id, score, del_ratio, lev, tsort) for every tier-2
-    candidate surviving the rounding-aware deletion gate. Split out of
-    ``match_titles`` so the threshold tuner (tools/tune_accept.py) can grid
-    search acceptance rules over the exact same features the cascade uses."""
+) -> DataFrame:
+    """Full cascade. queries_raw: (query_id, title); truth_raw:
+    (title_id, title). Returns (query_id, title_id, prediction, tier) with
+    title_id = -1 for unmatched."""
     # normalized+shingled sides feed multiple cascade tiers (exact join,
     # candidate gen, close-match re-join, finalize anti-join): cache both
     # so normalization runs once per row. (The pipeline equivalent is the
@@ -259,10 +255,10 @@ def cascade_pair_features(
     # UDF projections: Spark's ExtractPythonUDFs rule pulls a pandas UDF
     # out of a when/otherwise and evaluates it for every projected row, so
     # gating inside the expression would not keep gated rows away from the
-    # Python worker. The gate (and the DP band) sit at the LOOSEST
-    # acceptance threshold in play (tier-4's, when enabled): ratios at or
-    # above it are exact; truncated values below it can never be accepted
-    # or win an argmax from a >=gate row.
+    # Python worker. The gate (and the DP band) sit at the LOOSER of the
+    # two acceptance thresholds (tier 3's and, when enabled, tier 4's):
+    # ratios at or above it are exact; truncated values below it can never
+    # be accepted or win an argmax from a >=gate row.
     t4 = config.match_accept_ratio
     thr = config.lev_threshold
     # Rounding-aware gating: emitted ratios are int(round(...)), so a pair
@@ -271,16 +267,7 @@ def cascade_pair_features(
     # (gate - 0.5) so every pair that can round up to the gate is computed
     # exactly -- gating at the integer gate silently truncated raw ratios
     # in [t-0.5, t) once total length outgrew the integer-implied band.
-    # the gate is the LOOSEST acceptance floor in play: tier 3's threshold,
-    # tier 4a's accept ratio, and (when the score branch is on) tier 4b's
-    # ratio floor -- every pair whose rounded ratio can reach any of them
-    # must be computed exactly (unbanded within the floor's band).
-    floors = [thr]
-    if t4:
-        floors.append(t4)
-    if config.match_accept_score:
-        floors.append(config.match_accept_score_ratio_floor)
-    gate = min(floors) - 0.5
+    gate = min(thr, t4 or thr) - 0.5
     pairs = (
         cands.join(
             remaining.select("query_id", F.col("norm_text").alias("q_text")),
@@ -301,32 +288,12 @@ def cascade_pair_features(
                 token_sort_col("q_text"), token_sort_col("t_text"), threshold=gate
             ),
         )
-        # the tier-2 IDF-Jaccard score rides along: tier-4's score-acceptance
-        # branch uses it as an independent signal (heavily misspelled titles
-        # keep high rare-gram overlap even when the char-level ratio dips)
-        .select("query_id", "title_id", "score", "del_ratio", "lev", "tsort")
+        .select("query_id", "title_id", "del_ratio", "lev", "tsort")
     )
     # both tier branches read `pairs`; eager checkpoint so the two ratio
     # UDF columns are computed once, not once per branch subtree. Tracked:
     # checkpoint blocks live in the block manager like cache blocks do.
     pairs = track(pairs.localCheckpoint())
-    return queries, exact, pairs
-
-
-def match_titles(
-    queries_raw: DataFrame,
-    truth_raw: DataFrame,
-    config: DedupConfig = DEFAULT_CONFIG,
-    top_n: int | None = None,
-) -> DataFrame:
-    """Full cascade. queries_raw: (query_id, title); truth_raw:
-    (title_id, title). Returns (query_id, title_id, prediction, tier) with
-    title_id = -1 for unmatched."""
-    queries, exact, pairs = cascade_pair_features(
-        queries_raw, truth_raw, config, top_n
-    )
-    t4 = config.match_accept_ratio
-    thr = config.lev_threshold
 
     # tier 3 proper: the reference's staged chain reconstructed from the
     # two ratio columns (deletion gate -> lev -> token-sort fallback,
@@ -365,32 +332,6 @@ def match_titles(
                 "title_id",
                 (F.col("r") / 100.0).alias("prediction"),
                 F.lit("accept").alias("tier"),
-            )
-        )
-
-    # ---- tier 4b: IDF-Jaccard score acceptance. A heavily misspelled
-    # query keeps high rare-gram overlap with its true title even when the
-    # char-level ratio dips below t4 (each edit disturbs <= 3 grams, and
-    # the surviving rare grams dominate the idf mass), so the tier-2 score
-    # is an INDEPENDENT acceptance signal: among candidates with ratio >=
-    # a floor, accept the query's unique score-argmax when the score
-    # clears match_accept_score. Thresholds grid-searched on the
-    # reference's example TRAIN split only (config.py provenance note).
-    s4 = config.match_accept_score
-    if s4:
-        rest = pairs.join(matched.select("query_id"), "query_id", "left_anti")
-        rest = rest.withColumn("r", F.greatest("lev", "tsort")).filter(
-            F.col("r") >= F.lit(config.match_accept_score_ratio_floor)
-        )
-        accept_s = group_argmax_unique(rest, ["query_id"], "score").filter(
-            F.col("score") >= F.lit(float(s4))
-        )
-        matched = matched.unionByName(
-            accept_s.select(
-                "query_id",
-                "title_id",
-                F.col("score").alias("prediction"),
-                F.lit("accept_score").alias("tier"),
             )
         )
 

@@ -29,20 +29,6 @@ from dedup.operators.exact import (
 )
 from dedup.operators.verify import verify_pairs
 
-STAGES = [
-    "assembled",
-    "prepared",
-    "exact_groups",
-    "candidate_pairs",
-    "band_skew",
-    "verified_pairs",
-    "window_band_skew",
-    "containment_capped",
-    "containment_pairs",
-    "clusters",
-]
-
-
 @dataclass
 class PipelineReport:
     run_id: str
@@ -69,7 +55,6 @@ def run_pipeline(
     warehouse: str,
     config: DedupConfig = DEFAULT_CONFIG,
     run_id: str | None = None,
-    ascii_fast_path: bool = False,
 ) -> PipelineReport:
     """Execute (or resume) the full dedup pipeline. Every stage table that
     already exists with a matching config fingerprint is reused untouched,
@@ -102,10 +87,7 @@ def run_pipeline(
     report.stages.append(r)
 
     prepared, r = cat.write_or_resume(
-        "prepared",
-        lambda: prepare_docs(
-            assembled, "conv_id", "doc_text", config, ascii_fast_path=ascii_fast_path
-        ),
+        "prepared", lambda: prepare_docs(assembled, "conv_id", "doc_text", config)
     )
     report.stages.append(r)
 
@@ -137,49 +119,49 @@ def run_pipeline(
     report.stages.append(r)
     drain_tracker()
 
-    containment = None
-    if config.containment_enabled:
-        from dedup.operators.containment import (
-            containment_candidates,
-            verify_containment,
+    # imported at call time, on purpose: per-layer tracing patches these two
+    # names on their module, which a module-level import would bypass
+    from dedup.operators.containment import (
+        containment_candidates,
+        verify_containment,
+    )
+
+    def _containment():
+        cres = containment_candidates(reps, config, tracker=tracker)
+        # accounting ledgers (no silent truncation): oversized window
+        # band groups + pairs dropped by the ranked partner caps --
+        # same commit discipline as band_skew.
+        cat.write(
+            "window_band_skew",
+            cres.window_band_skew,
+            stage="containment_pairs",
+            num_files=4,
         )
+        # the capped ledger is written AGGREGATED per short doc: the raw
+        # dropped-pair list is O(shorts x pre-cap partners) -- unbounded
+        # for boilerplate families at corpus scale -- while per-short
+        # counts are O(docs) and carry the same accounting guarantee.
+        cat.write(
+            "containment_capped",
+            cres.capped_pairs.groupBy("id_short", "reason").agg(
+                F.count(F.lit(1)).alias("pairs_dropped"),
+                F.max("band_hits").alias("max_band_hits_dropped"),
+            ),
+            stage="containment_pairs",
+            num_files=4,
+        )
+        return verify_containment(cres.pairs, reps, config, tracker=tracker)
 
-        def _containment():
-            cres = containment_candidates(reps, config, tracker=tracker)
-            # accounting ledgers (no silent truncation): oversized window
-            # band groups + pairs dropped by the ranked partner caps --
-            # same commit discipline as band_skew.
-            cat.write(
-                "window_band_skew",
-                cres.window_band_skew,
-                stage="containment_pairs",
-                num_files=4,
-            )
-            # the capped ledger is written AGGREGATED per short doc: the raw
-            # dropped-pair list is O(shorts x pre-cap partners) -- unbounded
-            # for boilerplate families at corpus scale -- while per-short
-            # counts are O(docs) and carry the same accounting guarantee.
-            cat.write(
-                "containment_capped",
-                cres.capped_pairs.groupBy("id_short", "reason").agg(
-                    F.count(F.lit(1)).alias("pairs_dropped"),
-                    F.max("band_hits").alias("max_band_hits_dropped"),
-                ),
-                stage="containment_pairs",
-                num_files=4,
-            )
-            return verify_containment(cres.pairs, reps, config, tracker=tracker)
-
-        containment, r = cat.write_or_resume("containment_pairs", _containment)
-        report.stages.append(r)
-        drain_tracker()
+    containment, r = cat.write_or_resume("containment_pairs", _containment)
+    report.stages.append(r)
+    drain_tracker()
 
     def _clusters():
         near_edges = verified.select("id_a", "id_b")
         exact_edges = exact_duplicate_pairs(exact_groups).select("id_a", "id_b")
-        edges = near_edges.unionByName(exact_edges)
-        if containment is not None:
-            edges = edges.unionByName(containment.select("id_a", "id_b"))
+        edges = near_edges.unionByName(exact_edges).unionByName(
+            containment.select("id_a", "id_b")
+        )
         cc = connected_components(edges, config, tracker=tracker)
         # singletons: docs in no edge get their own cluster
         all_docs = prepared.select(F.col("doc_id").alias("node"))

@@ -3,10 +3,9 @@ LCS-substring verification (the north_rule suffix-array substring tier)."""
 
 import random
 
-import pyspark.sql.functions as F
+import numpy as np
 import pytest
 
-from dedup.config import DedupConfig
 from dedup.generate import _random_text
 from dedup.operators.candidates import prepare_docs
 from dedup.operators.containment import (
@@ -49,53 +48,101 @@ def contain_corpus(spark, config):
     return prep, cfg
 
 
+MERSENNE = (1 << 61) - 1
+
+
+def _exact_window_sigs(text, cfg):
+    """Reference window sketch in plain Python integers: every sliding
+    window slice [i*s, i*s + w) of the positional byte-k-gram codes,
+    MinHashed under the containment_num_perm prefix of perm_params()."""
+    n_perm = cfg.containment_num_perm
+    a, b = cfg.perm_params()
+    perms = [(int(x), int(y)) for x, y in zip(a[:n_perm], b[:n_perm])]
+    data, k = text.encode("utf-8"), cfg.k_shingle
+    codes = [int.from_bytes(data[i : i + k], "big") for i in range(len(data) - k + 1)]
+    if not codes:
+        return []
+    w, s = cfg.containment_window, cfg.containment_stride
+    n_win = max(-(-(len(codes) - w) // s) + 1, 1)
+    windows = [set(codes[i * s : i * s + w]) for i in range(n_win)]
+    return [
+        [min((ai * x + bi) % MERSENNE for x in win) for ai, bi in perms]
+        for win in windows
+    ]
+
+
+def _fused_window_band_hashes(spark, texts, cfg):
+    from dedup.functions.sketch import window_band_hashes_text_udf
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, t string")
+    return {
+        r["id"]: list(r["h"])
+        for r in df.select(
+            "id", window_band_hashes_text_udf("t", cfg.containment_stride, cfg).alias("h")
+        ).collect()
+    }
+
+
 def test_block_composed_window_sigs_match_direct_slicing(spark, config):
     """The production windower composes each window's MinHash from two
     adjacent block sketches (min of MinHashes == MinHash of the union).
     This must be BIT-IDENTICAL to MinHashing each sliding window slice
-    directly -- same signatures, hence same band keys and candidates."""
-    from dedup.functions.sketch import (
-        block_minhash_text_udf,
-        byte_kgram_codes,
-        minhash_signature_udf,
-    )
-    from dedup.operators.containment import _window_slices, window_sigs_col
+    directly: the fused UDF's band hashes equal the same splitmix64 band
+    chain applied to an exact per-slice MinHash, so the band keys (hence
+    the candidates) are those of direct slicing."""
+    from dedup.functions.sketch import _mix64
 
     rng = random.Random(11)
     cfg = config.with_(containment_window=64, containment_stride=32)
-    w, s = cfg.containment_window, cfg.containment_stride
+    nb, nr = cfg.containment_lsh_bands, cfg.containment_lsh_rows
     # lengths straddle every boundary case: < stride, == stride, < window,
     # == window, just past, mid-block tail, many blocks
     texts = [_random_text(rng, n) for n in (5, 8, 12, 16, 20, 33, 60, 150)]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, t string")
-    # direct path: the SAME positional byte-gram code sequence the fused
-    # UDF builds internally, sliced into overlapping windows and MinHashed
-    # per window slice
-    pos = spark.createDataFrame(
-        [(i, [int(c) for c in byte_kgram_codes(t, cfg.k_shingle)]) for i, t in enumerate(texts)],
-        "id int, ph array<bigint>",
+    fused = _fused_window_band_hashes(spark, texts, cfg)
+    band_seed = _mix64(
+        (np.arange(nb, dtype=np.uint64) + np.uint64(1)) * np.uint64(0x9E3779B97F4A7C15)
     )
-    direct = pos.select(
-        "id",
-        F.posexplode(_window_slices(F.col("ph"), w, s)).alias("wi", "wh"),
-    ).select(
-        "id",
-        "wi",
-        # same 32-perm prefix geometry as the production window sketch
-        minhash_signature_udf("wh", cfg, num_perm=cfg.containment_num_perm).alias(
-            "sig"
-        ),
-    )
-    # two-step select like the production plan: a Python-UDF output column
-    # cannot be referenced inside a higher-order-function lambda directly
-    composed = (
-        df.select("id", block_minhash_text_udf("t", s, cfg).alias("bs"))
-        .select("id", window_sigs_col("bs").alias("ws"))
-        .select("id", F.posexplode("ws").alias("wi", "sig"))
-    )
-    a = {(r["id"], r["wi"]): list(r["sig"]) for r in direct.collect()}
-    b = {(r["id"], r["wi"]): list(r["sig"]) for r in composed.collect()}
-    assert a == b
+    for i, t in enumerate(texts):
+        sigs = np.array(_exact_window_sigs(t, cfg), dtype=np.uint64)
+        assert len(sigs) > 0
+        v = sigs.reshape(len(sigs), nb, nr)
+        acc = np.broadcast_to(band_seed, (len(sigs), nb)).copy()
+        for r in range(nr):
+            acc = _mix64(acc ^ v[:, :, r])
+        assert fused[i] == acc.view(np.int64).ravel().tolist(), i
+
+
+def test_fused_window_band_hashes_collision_structure(spark, config):
+    """Against an exact MinHash of every sliding window slice: each doc
+    gets the same window count (an empty doc none), and two (doc, window,
+    band) keys share a fused hash exactly when their band rows are equal.
+    LSH candidates depend only on this collision structure."""
+    rng = random.Random(23)
+    cfg = config.with_(containment_window=64, containment_stride=32)
+    nb, nr = cfg.containment_lsh_bands, cfg.containment_lsh_rows
+    base = _random_text(rng, 200)
+    texts = [
+        base,                        # identical pair -> all-band collisions
+        base,
+        base[:80],                   # prefix -> shared first window
+        _random_text(rng, 150),      # unrelated
+        _random_text(rng, 20),       # single-block doc
+        "",                          # empty -> no windows
+    ]
+    fused = _fused_window_band_hashes(spark, texts, cfg)
+    rows, hashes = {}, {}
+    for i, t in enumerate(texts):
+        sigs = _exact_window_sigs(t, cfg)
+        assert len(fused[i]) == nb * len(sigs), (i, len(fused[i]), len(sigs))
+        for w, sig in enumerate(sigs):
+            for b in range(nb):
+                rows[(i, w, b)] = (b, tuple(sig[b * nr : (b + 1) * nr]))
+                hashes[(i, w, b)] = fused[i][w * nb + b]
+    assert fused[len(texts) - 1] == []
+    # equal band rows <=> equal hash: the (row, hash) pairing is one-to-one
+    linked = {(rows[key], hashes[key]) for key in rows}
+    assert len(linked) == len(set(rows.values())) == len(set(hashes.values()))
+    assert len(set(rows.values())) < len(rows)  # the corpus does collide
 
 
 def test_containment_candidates_surface_planted(spark, contain_corpus):
@@ -209,81 +256,3 @@ def test_pipeline_links_containment_cluster(spark, config, tmp_path):
     got = {r["conv_id"]: r["cluster_id"] for r in spark.read.parquet(f"{wh}/clusters").collect()}
     assert got["short"] == got["longer"]
     assert got["other"] != got["short"]
-
-
-def test_fused_window_band_hashes_collision_structure(spark, config):
-    """r6 fused windower: window_band_hashes_text_udf must produce band
-    keys with the SAME collision structure as the reference chain
-    (block sketches -> window_sigs_col -> per-band slices): two windows
-    collide in band b under the fused hash exactly when their band-b
-    signature rows are equal. Hash VALUES differ by family (that is
-    statistically neutral for LSH); the structure is what candidates
-    depend on."""
-    from dedup.functions.sketch import (
-        block_minhash_text_udf,
-        window_band_hashes_text_udf,
-    )
-    from dedup.operators.containment import window_sigs_col
-
-    rng = random.Random(23)
-    cfg = config.with_(containment_window=64, containment_stride=32)
-    s = cfg.containment_stride
-    nb, nr = cfg.containment_lsh_bands, cfg.containment_lsh_rows
-    base = _random_text(rng, 200)
-    texts = [
-        base,                        # identical pair -> all-band collisions
-        base,
-        base[:80],                   # prefix -> shared first window
-        _random_text(rng, 150),      # unrelated
-        _random_text(rng, 20),       # single-block doc
-        "",                          # empty -> no windows
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "id int, t string"
-    )
-    ref = (
-        df.select("id", block_minhash_text_udf("t", s, cfg).alias("bs"))
-        .select("id", window_sigs_col("bs").alias("ws"))
-        .select("id", F.posexplode("ws").alias("wi", "sig"))
-        .collect()
-    )
-    fused = {
-        r["id"]: list(r["h"])
-        for r in df.select(
-            "id", window_band_hashes_text_udf("t", s, cfg).alias("h")
-        ).collect()
-    }
-    # index fused hashes as (id, window, band) -> hash
-    fh = {}
-    counts = {}
-    for i, hs in fused.items():
-        assert len(hs) % nb == 0
-        counts[i] = len(hs) // nb
-        for w in range(len(hs) // nb):
-            for b in range(nb):
-                fh[(i, w, b)] = hs[w * nb + b]
-    # same window counts as the reference chain (empty doc -> zero)
-    ref_counts = {}
-    rows = {}
-    for r in ref:
-        ref_counts[r["id"]] = ref_counts.get(r["id"], 0) + 1
-        sig = list(r["sig"])
-        for b in range(nb):
-            rows[(r["id"], r["wi"], b)] = tuple(sig[b * nr : (b + 1) * nr])
-    for i in range(len(texts)):
-        assert counts.get(i, 0) == ref_counts.get(i, 0), i
-    # collision structure: equal band rows <=> equal fused hash
-    keys = sorted(rows)
-    assert keys == sorted(fh)
-    for k1 in keys:
-        for k2 in keys:
-            if k1 >= k2:
-                continue
-            same_rows = rows[k1] == rows[k2] and k1[2] == k2[2]
-            same_hash = fh[k1] == fh[k2]
-            if same_rows:
-                assert same_hash, (k1, k2)
-            elif same_hash:
-                # cross-content or cross-band hash collision: 2^-64 event,
-                # deterministic seed means it would be a real bug here
-                raise AssertionError(f"unexpected hash collision {k1} {k2}")

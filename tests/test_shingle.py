@@ -1,9 +1,7 @@
 """Shingling parity: char 3-gram *set*, full-length grams only
 (/root/reference/doppelspeller/common.py:150-151)."""
 
-import pyspark.sql.functions as F
-
-from dedup.functions.shingle import char_ngrams_col, gram_hashes_col, words_col
+from dedup.functions.shingle import char_ngrams_col, words_col
 
 
 def ref_n_grams(title: str, k: int = 3) -> set[str]:
@@ -17,23 +15,6 @@ def test_char_ngrams_matches_reference_set(spark):
     for r in rows:
         assert set(r["g"]) == ref_n_grams(r["t"]), r["t"]
         assert len(r["g"]) == len(set(r["g"]))  # distinct
-
-
-def test_gram_hashes_align(spark):
-    df = spark.createDataFrame([("abcdef",)], "t string")
-    row = df.select(
-        char_ngrams_col("t", 3).alias("g")
-    ).select("g", gram_hashes_col("g").alias("h")).first()
-    assert len(row["g"]) == len(row["h"])
-    # hashes of equal grams are equal across rows
-    df2 = spark.createDataFrame([("abcx",), ("yabc",)], "t string")
-    rows = df2.select(
-        char_ngrams_col("t", 3).alias("g")
-    ).select("g", gram_hashes_col("g").alias("h")).collect()
-    m = {}
-    for r in rows:
-        for g, h in zip(r["g"], r["h"]):
-            assert m.setdefault(g, h) == h
 
 
 def test_words_col_matches_python_split(spark):

@@ -1,12 +1,12 @@
-"""MinHash estimator property test (estimate within Chernoff-ish bound of
-exact Jaccard), determinism across runs, band math, SimHash behavior."""
+"""Sketches of the production kernel (doc_sketch_udf): MinHash estimator
+property test (estimate within Chernoff-ish bound of exact Jaccard),
+determinism across runs, band math, SimHash behavior, gram encoding."""
 
 import numpy as np
 import pyspark.sql.functions as F
 
-from dedup.config import DedupConfig
-from dedup.functions.shingle import char_ngrams_col, gram_hashes_col
-from dedup.functions.sketch import band_hashes_col, hamming_col, minhash_signature_udf, simhash_udf
+from dedup.functions.shingle import char_ngrams_col
+from dedup.functions.sketch import band_hashes_col, doc_sketch_udf, hamming_col
 
 
 def _prep(spark, config, texts):
@@ -15,17 +15,14 @@ def _prep(spark, config, texts):
         "id",
         "t",
         char_ngrams_col("t", config.k_shingle).alias("g"),
+        doc_sketch_udf("t", config).alias("sk"),
     ).select(
         "id",
         "t",
         "g",
-        gram_hashes_col("g").alias("h"),
-    ).select(
-        "id",
-        "t",
-        "g",
-        minhash_signature_udf("h", config).alias("sig"),
-        simhash_udf("h", config).alias("sim"),
+        F.col("sk.gram_hashes").alias("h"),
+        F.col("sk.minhash").alias("sig"),
+        F.col("sk.simhash").alias("sim"),
     )
 
 
@@ -87,3 +84,13 @@ def test_simhash_hamming(spark, config):
     assert h[(0, 0)] == 0
     assert h[(0, 1)] <= 8          # near-dup -> small hamming
     assert h[(0, 2)] > 12          # unrelated -> large hamming
+
+
+def test_gram_hashes_are_byte_codes_of_distinct_grams(spark, config):
+    """Exact Jaccard and the containment score read gram_hashes as the
+    doc's gram SET, so the encoding must be collision-free: each value is
+    the big-endian byte code of one distinct char_ngrams_col gram."""
+    texts = ["abcdef", "abcabcabc", "aaaa", "ab", "", "a b  c d", "000 zzz 000"]
+    for r in _prep(spark, config, texts).collect():
+        codes = sorted(int.from_bytes(g.encode("ascii"), "big") for g in r["g"])
+        assert list(r["h"]) == codes, r["t"]
