@@ -108,7 +108,6 @@ class CheckpointCatalog:
         name: str,
         df: DataFrame,
         stage: str | None = None,
-        partition_cols: list[str] | None = None,
         num_files: int | None = None,
     ) -> StageResult:
         """Materialize ``df`` as a committed stage table (idempotent commit:
@@ -117,7 +116,6 @@ class CheckpointCatalog:
         staging, final = self._staging(name), self.path(name)
         if os.path.exists(staging):
             shutil.rmtree(staging)
-        writer = df.write.mode("overwrite")
         if num_files:
             # repartition, NOT coalesce: coalesce propagates upstream
             # through narrow deps to the previous shuffle/cache boundary,
@@ -127,10 +125,7 @@ class CheckpointCatalog:
             # repartition exchange isolates upstream parallelism; for the
             # small tables this knob is meant for, its shuffle is trivial.
             df = df.repartition(num_files)
-            writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
+        df.write.mode("overwrite").parquet(staging)
         t_job = time.time()
 
         # per-partition lineage from the parquet FOOTERS -- row counts are

@@ -4,7 +4,7 @@ Mirrors the role of the reference's ``settings.py``
 (/root/reference/doppelspeller/settings.py:14-77): every semantic constant
 (shingle size, Levenshtein threshold, top-k) lives here so parity with the
 reference config is a single object, and scale knobs (partitions, band
-caps, salt counts) sit next to them.
+caps) sit next to them.
 """
 
 from __future__ import annotations
@@ -76,9 +76,9 @@ class DedupConfig:
     # A band group larger than this is boilerplate, not near-dup signal:
     # it is capped (pairs beyond the cap are dropped WITH accounting in the
     # metrics table -- no silent truncation). SURVEY.md par. 4 item 1.
+    # Every kept group fans out its pairs locally in one task, so this also
+    # bounds one task's fan-out at C(max_band_group, 2) pairs (19,900).
     max_band_group: int = 200
-    # salt fan-out used to split moderately hot band groups across tasks
-    salt_buckets: int = 8
     # Candidate pairs must collide in at least this many DISTINCT bands,
     # UNLESS their quietest colliding band group is <= lsh_noise_group_size
     # (then a single hit suffices). Math: at (b=32, r=4) a J>=0.8 pair
@@ -92,9 +92,6 @@ class DedupConfig:
     # gram floor) that collide once in a quiet band.
     lsh_min_band_hits: int = 2
     lsh_noise_group_size: int = 16
-    # band groups larger than this take the salted-join path; smaller ones
-    # join plainly (salting everything would n_salt-x the shuffle volume)
-    salt_hot_threshold: int = 32
 
     # --- long-span containment (windowed sketches + substring verify) ---
     containment_window: int = 256      # grams per window sketch

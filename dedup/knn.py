@@ -96,7 +96,9 @@ def srp_buckets_udf(
     (strictly > 0) are identical; floating-point summation order differs
     from the JVM chain, which can flip the sign of a numerically-zero dot
     product -- statistically neutral for an LSH bucketing (identical
-    vectors still land in identical buckets under any summation order)."""
+    vectors still land in identical buckets under any summation order).
+    A null vector gets a null bucket array; a vector whose length is not
+    ``dim`` raises ValueError."""
     planes = np.stack(
         [
             np.random.RandomState(seed + t).normal(size=(n_planes, dim))
@@ -108,13 +110,23 @@ def srp_buckets_udf(
 
     @F.pandas_udf(ArrayType(LongType()))
     def _buckets(vs: pd.Series) -> pd.Series:
-        n = len(vs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        m = np.asarray(vs.tolist(), dtype=np.float64)  # (n, D)
-        bits = (m @ flat.T > 0).reshape(n, n_tables, n_planes)
+        # a null vector gets a null bucket array (no candidates); a vector
+        # of another length is a caller error, not something to bucket
+        out = pd.Series([None] * len(vs), dtype=object)
+        present = vs[vs.notna()]
+        if present.empty:
+            return out
+        lens = present.map(len)
+        if (lens != dim).any():
+            raise ValueError(
+                f"srp_buckets_udf expects vectors of length dim={dim}, "
+                f"got length {lens[lens != dim].iloc[0]}"
+            )
+        m = np.stack(present.tolist()).astype(np.float64)  # (n, D)
+        bits = (m @ flat.T > 0).reshape(len(m), n_tables, n_planes)
         buckets = bits @ weights  # (n, T)
-        return pd.Series(list(buckets))
+        out.loc[present.index] = pd.Series(list(buckets), index=present.index)
+        return out
 
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return _buckets(v)

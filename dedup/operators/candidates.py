@@ -1,28 +1,26 @@
-"""Candidate-pair generation: MinHash + LSH band equi-join with skew
-accounting.
+"""Candidate-pair generation: MinHash + LSH band collision groups with
+skew accounting.
 
 This REPLACES (not ports) the reference's brute-force candidate scan --
 one query's IDF posting lists accumulated against all N truth titles
 (/root/reference/doppelspeller/match_maker.py:16-50,192-203), O(Q*N) work
 that is the single biggest scaling wall (SURVEY.md J2). LSH makes candidate
-count O(#near-dups): docs sharing any (band_idx, band_hash) key meet in an
-equi-join; everything else never shuffles together.
+count O(#near-dups): docs sharing any band hash meet in one collision
+group; everything else never pairs up.
 
-Skew story (north_rule "salted hash join to defuse hot-band skew"):
-boilerplate-heavy corpora (identical system prompts) produce band groups
-with thousands of members => a naive self-join does size^2 work inside one
-key. Three defenses, in order:
+Skew story: boilerplate-heavy corpora (identical system prompts) produce
+band groups with thousands of members => a naive self-join does size^2
+work inside one key. Two defenses, in order:
   1. exact tier already collapsed *identical* docs to one representative;
   2. band groups larger than ``max_band_group`` are counted + dropped into
      a skew-accounting DataFrame (returned, persisted to metrics -- no
      silent truncation). A real near-dup pair lost here still meets in any
      of the other b-1 bands, so recall loss is (fraction of oversized
-     bands)^b -- measured, not assumed;
-  3. surviving groups split at ``salt_hot_threshold``: cool groups fan out
-     pairs LOCALLY from their collected id list (no join at all); hot
-     groups take a salted self-join -- the build side is split into
-     ``salt_buckets`` sub-keys so one hot band spreads over several tasks
-     (AQE skew-join then handles residual partition skew).
+     bands)^b -- measured, not assumed.
+Every surviving group fans out its pairs LOCALLY from its sorted id list
+(no join at all), so one group costs at most C(max_band_group, 2) pairs
+in one task. ``collision_groups`` and ``band_hit_pairs`` are shared with
+the containment tier's window bands.
 """
 
 from __future__ import annotations
@@ -103,6 +101,76 @@ def pair_structs(ids: Column) -> Column:
     )
 
 
+def collision_groups(
+    postings: DataFrame,
+    id_col: str,
+    max_group: int,
+    tracker: list[DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """band postings (id_col, band_hash) -> (groups, skew): collision
+    groups (band_hash, ids, gsz) of 2..max_group members as sorted id
+    lists, and the ledger (band_hash, group_size) of the larger ones.
+
+    ONE groupBy on the band key folds group-size accounting AND posting-list
+    assembly into a single shuffle (collect_list). Singleton groups (the
+    vast majority of band keys) can never pair and are dropped before the
+    persist, so the cache holds only collision groups; it is appended to
+    ``tracker`` so long-lived callers (pipeline stages, streaming
+    micro-batches) can unpersist it once the pairs have materialized."""
+    groups = (
+        postings.groupBy("band_hash")
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .withColumn("gsz", F.size("ids"))
+        .filter(F.col("gsz") > 1)
+        .persist()
+    )
+    register(groups, tracker)
+    skew = groups.filter(F.col("gsz") > max_group).select(
+        "band_hash", F.col("gsz").alias("group_size")
+    )
+    return groups.filter(F.col("gsz") <= max_group), skew
+
+
+def band_hit_pairs(
+    rows: DataFrame,
+    key: str,
+    weight: Column,
+    partitions: int,
+    min_hits: int,
+    noise_group: int,
+) -> DataFrame:
+    """rows (ids, gsz, ...) -> (id_a, id_b, band_hits, min_gsz): every
+    i < j pair of each sorted id list, its ``weight`` summed per pair into
+    band_hits, kept if band_hits >= ``min_hits`` OR its quietest colliding
+    group has <= ``noise_group`` members.
+
+    The fan-out is local array math, so it runs behind a hash repartition
+    on ``key``: the grouped input is byte-tiny, AQE coalesces it to one or
+    two partitions, and the interpreted transform/flatten fan-out (sum
+    gsz^2/2 struct builds) would then run near-serially in the map side of
+    the pair groupBy (measured: ~4s of the candidate job's 5.5s at sf0.1).
+
+    Band-hit counting replaces a plain pair dedup: a true near-dup pair
+    collides in many bands, while boilerplate-similar pairs mostly collide
+    once inside big groups -- which verify would pay ~100x their worth to
+    reject. Pairs whose quietest colliding group is small stay even with a
+    single hit: isolated collisions are cheap to verify and may be
+    legitimate low-J duplicates."""
+    return (
+        rows.repartition(partitions, key)
+        .select(
+            "gsz",
+            weight.alias("w"),
+            F.explode(pair_structs(F.col("ids"))).alias("p"),
+        )
+        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"), "gsz", "w")
+        .filter(F.col("id_a") < F.col("id_b"))  # a doc twice in one group
+        .groupBy("id_a", "id_b")
+        .agg(F.sum("w").alias("band_hits"), F.min("gsz").alias("min_gsz"))
+        .filter((F.col("band_hits") >= min_hits) | (F.col("min_gsz") <= noise_group))
+    )
+
+
 def band_postings(prepared: DataFrame, config: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
     """prepared docs (doc_id, minhash) -> band postings (doc_id, band_hash),
     one row per LSH band: the single postings format, shared by the batch
@@ -127,39 +195,12 @@ def candidate_pairs(
 ) -> CandidateResult:
     """band postings (doc_id, band_hash) -> candidate (id_a < id_b) pairs.
 
-    Plan shape: ONE groupBy on the band key that folds group-size
-    accounting AND posting-list assembly into a single shuffle
-    (collect_list) -> local pair fan-out for cool groups / salted
-    self-join for hot groups -> band-hit-counted pair dedup.
+    Plan shape: collision groups (one band groupBy) -> family collapse ->
+    local pair fan-out -> band-hit-counted pair dedup.
 
-    The r3 plan ran sizes-agg + bands-join + band-key self-join -- three
-    byte-small shuffles plus a persist of every posting -- and its fixed
-    overhead dominated at any parallelism (measured 0.495 scaling
-    efficiency, VERDICT r3). Folding into collect_list leaves exactly two
-    shuffles (band groupBy, pair groupBy); per-group fan-out is bounded by
-    ``max_band_group`` so a group row can never straggle.
-
-    ``tracker``: persisted intermediates are appended here so long-lived
-    drivers (pipeline stages, streaming micro-batches) can unpersist them
-    once the pairs have materialized -- otherwise cached band groups
-    accumulate across batches."""
-    # Single shuffle: collision groups as sorted id lists. Singleton groups
-    # (the vast majority of band keys) can never pair and are dropped
-    # before the persist, so the cache holds only collision groups -- far
-    # smaller than the r3 all-postings cache.
-    groups = (
-        postings.groupBy("band_hash")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .withColumn("gsz", F.size("ids"))
-        .filter(F.col("gsz") > 1)
-        .persist()
-    )
-    register(groups, tracker)
-
-    band_skew = groups.filter(F.col("gsz") > config.max_band_group).select(
-        "band_hash", F.col("gsz").alias("group_size")
-    )
-    ok = groups.filter(F.col("gsz") <= config.max_band_group)
+    ``tracker``: persisted intermediates are appended here (see
+    collision_groups)."""
+    ok, band_skew = collision_groups(postings, "doc_id", config.max_band_group, tracker)
 
     # FAMILY COLLAPSE before any pair fan-out: near-dup clusters (and
     # boilerplate families) produce the IDENTICAL sorted id list in many
@@ -177,82 +218,12 @@ def candidate_pairs(
         F.count(F.lit(1)).alias("n_bands"),
         F.min("gsz").alias("gsz"),  # gsz is a function of ids: min == the value
     )
-
-    # Cool families (the bulk): pair fan-out is local array math on the
-    # sorted id list -- no join, no shuffle, ids already ascending so
-    # id_a < id_b holds by construction.
-    # repartition first: the family agg's output is byte-tiny, so AQE
-    # coalesces it to one or two partitions -- and the interpreted
-    # transform/flatten fan-out (sum gsz^2/2 struct builds) then runs
-    # near-serially in the map side of the pair groupBy (measured: the
-    # candidate job spent ~4s of its 5.5s there at sf0.1). Hash
-    # repartition on the family key spreads the fan-out across the
-    # cluster at the cost of shuffling a few thousand skinny rows.
-    cool = fam.filter(F.col("gsz") <= config.salt_hot_threshold).repartition(
-        config.shuffle_partitions, "ids"
-    )
-    cool_pairs = cool.select(
-        "gsz", "n_bands", F.explode(pair_structs(F.col("ids"))).alias("p")
-    ).select(
-        F.col("p.id_a").alias("id_a"),
-        F.col("p.id_b").alias("id_b"),
-        "gsz",
-        "n_bands",
-    )
-
-    # Hot families (the boilerplate tail) keep the SALTED self-join (the
-    # north_rule skew defense): at cluster scale ``max_band_group`` may be
-    # raised to 10^4+, where a single family row's local fan-out (gsz^2/2
-    # pairs in ONE task) would straggle -- the salted join spreads one hot
-    # family over salt_buckets reducers instead. Probe side gets a
-    # deterministic salt bucket from its doc_id, build side explodes over
-    # all buckets, so shuffle volume stays ~1x for the cool slice. The
-    # family id is a hash of the member list (a collision would only merge
-    # two families' candidate sets -- extra pairs for verify, no loss).
-    hot = fam.filter(F.col("gsz") > config.salt_hot_threshold)
-    hot_post = hot.select(
-        F.xxhash64("ids").alias("fam_id"),
-        "gsz",
-        "n_bands",
-        F.explode("ids").alias("doc_id"),
-    )
-    n_salt = config.salt_buckets
-    hot_left = hot_post.select(
-        "fam_id",
-        F.col("doc_id").alias("id_a"),
-        "gsz",
-        "n_bands",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)).cast("bigint").alias("salt"),
-    )
-    hot_right = hot_post.select(
-        "fam_id",
-        F.col("doc_id").alias("id_b"),
-        F.explode(F.sequence(F.lit(0).cast("bigint"), F.lit(n_salt - 1).cast("bigint"))).alias("salt"),
-    )
-    hot_pairs = hot_left.join(
-        hot_right, on=["fam_id", "salt"], how="inner"
-    ).select("id_a", "id_b", "gsz", "n_bands")
-
-    # Band-hit counting replaces a plain pair dedup (same discipline as the
-    # containment path): a true J >= threshold pair collides in >= 2 of the
-    # 32 bands w.p. 1 - 5e-6, while the r=4 scheme's soft knee floods the
-    # candidate set with single-hit boilerplate collisions (J ~ 0.3-0.5)
-    # that the verify tier then pays ~100x their worth to reject. Pairs
-    # whose quietest colliding group is small stay candidates even with a
-    # single hit -- isolated collisions are cheap to verify and may be
-    # legitimate low-J Levenshtein-tier duplicates.
-    pairs = (
-        cool_pairs.unionByName(hot_pairs)
-        .filter(F.col("id_a") < F.col("id_b"))  # hot join emits unordered pairs
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum("n_bands").alias("band_hits"),
-            F.min("gsz").alias("min_gsz"),
-        )
-        .filter(
-            (F.col("band_hits") >= config.lsh_min_band_hits)
-            | (F.col("min_gsz") <= config.lsh_noise_group_size)
-        )
-        .select("id_a", "id_b")
-    )
+    pairs = band_hit_pairs(
+        fam,
+        "ids",
+        F.col("n_bands"),
+        config.shuffle_partitions,
+        config.lsh_min_band_hits,
+        config.lsh_noise_group_size,
+    ).select("id_a", "id_b")
     return CandidateResult(pairs=pairs, band_skew=band_skew)

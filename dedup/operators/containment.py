@@ -42,7 +42,7 @@ from pyspark.sql.types import DoubleType
 
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.sketch import window_band_hashes_text_udf
-from dedup.operators.candidates import pair_structs
+from dedup.operators.candidates import band_hit_pairs, collision_groups
 from dedup.tracking import register
 
 
@@ -157,12 +157,12 @@ def containment_candidates(
     (b, r). MinHash is set-semantics, so in-window duplicate grams do not
     perturb signatures.
 
-    Plan shape mirrors candidate_pairs: ONE groupBy on the band key folds
-    size accounting + member-list assembly (sorted collect_list of ids);
-    pair fan-out is local array math bounded by containment_max_band_group
-    (window groups need no salted path: the cap stays small because an
-    oversized WINDOW group is per-span boilerplate that the whole-doc tier
-    already links transitively)."""
+    Plan shape shares candidate_pairs' collision_groups and
+    band_hit_pairs: ONE groupBy on the band key folds size accounting +
+    member-list assembly; pair fan-out is local array math bounded by
+    containment_max_band_group, a small cap because an oversized WINDOW
+    group is per-span boilerplate that the whole-doc tier already links
+    transitively."""
     s = config.containment_stride
     # Shingling is FUSED into the window sketch UDF (it computes positional
     # byte-k-gram codes from norm_text in numpy): the positional gram
@@ -203,71 +203,39 @@ def containment_candidates(
             window_band_hashes_text_udf("norm_text", s, config)
         ).alias("band_hash"),
     )
-    # single shuffle: collision groups as sorted id member lists (a doc may
-    # appear twice in one group -- two of its windows colliding on the same
-    # band key -- and the fan-out preserves that multiplicity in band_hits,
-    # exactly as the r3 self-join did). The band rows deliberately carry
-    # ONLY (id, band_hash): n_grams is a function of id, so
-    # short/long orientation joins it onto the AGGREGATED pair set below
-    # (~1000x fewer rows at 100k convs: 423k pairs vs 24M band rows)
-    # instead of riding every shuffle row and fattening the collect_list
-    # buffers. Sorting ids sorts identically to sorting (id, n_grams)
-    # structs, so the fan-out's i<j combination multiset is unchanged.
-    groups = (
-        bands.groupBy("band_hash")
-        .agg(F.array_sort(F.collect_list("id")).alias("mem"))
-        .withColumn("gsz", F.size("mem"))
-        .filter(F.col("gsz") > 1)
-        .persist()
+    # collision groups as sorted id member lists (a doc may appear twice
+    # in one group -- two of its windows colliding on the same band key --
+    # and the fan-out preserves that multiplicity in band_hits, exactly as
+    # the r3 self-join did). The band rows deliberately carry ONLY
+    # (id, band_hash): n_grams is a function of id, so short/long
+    # orientation joins it onto the AGGREGATED pair set below (~1000x
+    # fewer rows at 100k convs: 423k pairs vs 24M band rows) instead of
+    # riding every shuffle row and fattening the collect_list buffers.
+    # Sorting ids sorts identically to sorting (id, n_grams) structs, so
+    # the fan-out's i<j combination multiset is unchanged.
+    ok, window_band_skew = collision_groups(
+        bands, "id", config.containment_max_band_group, tracker
     )
-    register(groups, tracker)
-    window_band_skew = groups.filter(
-        F.col("gsz") > config.containment_max_band_group
-    ).select(
-        "band_hash", F.col("gsz").alias("group_size")
-    )
-    ok = groups.filter(F.col("gsz") <= config.containment_max_band_group)
     # NO family collapse here, unlike candidate_pairs: window families
     # repeat across far fewer bands than whole-doc boilerplate families,
     # so collapsing the ~20x more numerous window groups costs more than
     # the fan-out it saves. Measured on this stage alone at 3.6k turns
     # (2x3 interleaved runs, identical outputs): routing it through
     # candidate_pairs took 32 -> 35 Spark jobs, 96 -> 115 stages and
-    # 8.75 -> 10.1 s median wall.
-    raw = (
-        # repartition before the fan-out: the cached collision groups sit
-        # in however few partitions AQE coalesced the band groupBy to, and
-        # the interpreted pair_structs explode would otherwise run there
-        # (same fix as candidate_pairs' cool fan-out; band_hash spreads
-        # groups evenly)
-        ok.repartition(config.shuffle_partitions, "band_hash")
-        .select("gsz", F.explode(pair_structs(F.col("mem"))).alias("p"))
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            "gsz",
-        )
-        .filter(F.col("id_a") < F.col("id_b"))  # drop same-doc window pairs
-    )
-    pair_hits = (
-        # band-hit counting replaces a plain dedup, but the noise filter is
-        # CONDITIONAL on collision-group size: a pair whose best collision
-        # happened in a quiet band group (gsz <= noise_group_size) is kept
-        # even with a single hit -- it is cheap to verify and dropping it
-        # would silently lose edit-diluted single-window containments. Only
-        # pairs that exclusively collide inside big boilerplate groups must
-        # clear containment_min_band_hits. Aggregating on the unordered
-        # (id_a < id_b) key is a bijection onto (id_short, id_long) groups,
-        # so counting before orientation is arithmetically identical.
-        raw.groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("band_hits"),
-            F.min("gsz").alias("min_gsz"),
-        )
-        .filter(
-            (F.col("band_hits") >= config.containment_min_band_hits)
-            | (F.col("min_gsz") <= config.containment_noise_group_size)
-        )
+    # 8.75 -> 10.1 s median wall. Each group row is one band hit (weight
+    # 1), and a pair whose best collision happened in a quiet band group
+    # is kept even with a single hit: dropping it would silently lose
+    # edit-diluted single-window containments. Counting on the unordered
+    # (id_a < id_b) key is a bijection onto (id_short, id_long) groups,
+    # so counting before orientation is arithmetically identical; the
+    # id_a < id_b filter also drops same-doc window pairs.
+    pair_hits = band_hit_pairs(
+        ok,
+        "band_hash",
+        F.lit(1),
+        config.shuffle_partitions,
+        config.containment_min_band_hits,
+        config.containment_noise_group_size,
     )
     sizes = docs.select("id", "n_grams")
     scored = (

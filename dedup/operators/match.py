@@ -30,8 +30,8 @@ Scale notes: the gram inverted-index join shuffles on xxhash64(gram)
 (8-byte keys, not variable-width strings); df
 counts and idf are distributed aggs (never a driver dictionary -- the
 reference's in-memory gram dictionary, match_maker.py:144-153, is the
-thing that cannot scale). Hot grams are exactly the skew case LSH salting
-handles in the dedup path; for title-mode parity the per-gram fan-out is
+thing that cannot scale). Hot grams are exactly the skew case the LSH
+band-group cap handles in the dedup path; for title-mode parity the per-gram fan-out is
 bounded by df * queries-per-gram and AQE skew-join splits hot partitions.
 """
 

@@ -98,7 +98,12 @@ def verify_pairs(
     p1 = (
         pairs.join(la.hint("shuffle_hash"), "id_a")
         .join(lb.hint("shuffle_hash"), "id_b")
-        .withColumn("est", minhash_estimate_col("mh_a", "mh_b"))
+        # a null signature gives a null estimate, which would make both
+        # union branches' gate tests below null and drop the pair: count
+        # it as no agreement so the SimHash tier still sees it
+        .withColumn(
+            "est", F.coalesce(minhash_estimate_col("mh_a", "mh_b"), F.lit(0.0))
+        )
         .withColumn("hamming", hamming_col("sim_a", "sim_b"))
         .withColumn(
             "del_ratio",

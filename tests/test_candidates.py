@@ -1,6 +1,10 @@
 """LSH candidate generation: planted near-dup pairs must surface as
-candidates (recall), boilerplate mega-bands must be accounted, salting
-must not lose pairs."""
+candidates (recall), boilerplate mega-bands must be accounted, and on
+hand-built postings the pairs and skew ledger must equal a plain-Python
+band-hit count."""
+
+import itertools
+from collections import defaultdict
 
 import pyspark.sql.functions as F
 import pytest
@@ -63,7 +67,7 @@ def test_candidate_recall_of_planted_near_dups(spark, config, prepared):
 
 def test_band_skew_accounting(spark, config, prepared):
     prep, _ = prepared
-    tight = config.with_(max_band_group=2, salt_hot_threshold=1)
+    tight = config.with_(max_band_group=2)
     res = candidate_pairs(band_postings(prep, tight), tight)
     skew_rows = res.band_skew.collect()
     # the boilerplate subset guarantees oversized bands at this cap
@@ -71,19 +75,42 @@ def test_band_skew_accounting(spark, config, prepared):
     assert all(r["group_size"] > 2 for r in skew_rows)
 
 
-def test_salted_path_equals_plain_join(spark, config, prepared):
-    """Pairs from a config that forces EVERYTHING through the salted path
-    must equal pairs from the plain-join path -- salting is a physical
-    optimization, never a semantic one."""
-    prep, _ = prepared
+def test_candidate_pairs_match_band_hit_oracle(spark, config):
+    """candidate_pairs == a plain-Python band-hit count over hand-built
+    postings: a 40-member family over 3 bands, a group over
+    max_band_group (ledger only), a quiet group of 5 whose single-hit
+    pairs the noise exemption keeps, a group of 20 whose single-hit pairs
+    are dropped, and cross-group pairs with one or two hits."""
+    fam = [f"f{i:02d}" for i in range(40)]
+    big = [f"b{i:03d}" for i in range(config.max_band_group + 1)]
+    quiet = [f"q{i}" for i in range(5)]
+    loud = [f"l{i:02d}" for i in range(20)]
+    groups = {1: fam, 2: fam, 3: fam, 10: big, 20: quiet, 30: loud,
+              31: ["l00", "l01"], 40: ["f00", "l05"]}
+    postings = [(d, h) for h, ids in groups.items() for d in ids]
 
-    def pairs(cfg):
-        res = candidate_pairs(band_postings(prep, cfg), cfg)
-        return {(r["id_a"], r["id_b"]) for r in res.pairs.collect()}
+    hits, min_gsz = defaultdict(int), {}
+    for ids in groups.values():
+        if len(ids) > config.max_band_group:
+            continue
+        for a, b in itertools.combinations(sorted(ids), 2):
+            hits[a, b] += 1
+            min_gsz[a, b] = min(min_gsz.get((a, b), len(ids)), len(ids))
+    want = {
+        p for p, n in hits.items()
+        if n >= config.lsh_min_band_hits or min_gsz[p] <= config.lsh_noise_group_size
+    }
+    # the cases above are all exercised
+    assert set(itertools.combinations(fam, 2)) <= want
+    assert ("q0", "q4") in want and ("l00", "l01") in want and ("f00", "l05") in want
+    assert ("l02", "l03") not in want and not any("b000" in p for p in want)
 
-    all_salted = config.with_(salt_hot_threshold=1)   # every group hot
-    all_plain = config.with_(salt_hot_threshold=10**9)  # no group hot
-    assert pairs(all_salted) == pairs(all_plain)
+    df = spark.createDataFrame(postings, "doc_id string, band_hash bigint")
+    res = candidate_pairs(df, config)
+    assert {(r["id_a"], r["id_b"]) for r in res.pairs.collect()} == want
+    assert {(r["band_hash"], r["group_size"]) for r in res.band_skew.collect()} == {
+        (10, len(big))
+    }
 
 
 def test_tracker_releases_persisted_band_postings(spark, config):

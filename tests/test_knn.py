@@ -1,11 +1,12 @@
 """Embedding similarity search: brute-force cosine top-k exactness vs
-numpy; SRP-bucketed near-dup pairs recall vs brute force."""
+numpy; SRP-bucketed near-dup pairs recall vs brute force; SRP buckets of
+null and wrong-length vectors."""
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from dedup.knn import brute_force_topk, cosine_col, srp_near_dup_pairs
+from dedup.knn import brute_force_topk, cosine_col, srp_buckets_udf, srp_near_dup_pairs
 
 
 @pytest.fixture(scope="module")
@@ -61,3 +62,19 @@ def test_srp_near_dup_recall(spark, vectors):
     assert got <= want or all(  # every emitted pair truly clears the threshold
         (mat[a] @ mat[b]) / (norms[a] * norms[b]) >= 0.95 - 1e-9 for a, b in got
     )
+
+
+def _buckets(spark, vectors, dim):
+    df = spark.createDataFrame([(v,) for v in vectors], "v array<double>")
+    return [r["b"] for r in df.select(srp_buckets_udf("v", dim=dim).alias("b")).collect()]
+
+
+def test_srp_buckets_null_vector_has_no_buckets(spark):
+    got = _buckets(spark, [[1.0, 0.5, -2.0, 0.0], None], dim=4)
+    assert len(got[0]) == 4  # one bucket per table
+    assert got[1] is None
+
+
+def test_srp_buckets_wrong_length_raises(spark):
+    with pytest.raises(Exception, match=r"dim=4, got length 3"):
+        _buckets(spark, [[1.0, 0.5, -2.0, 0.0], [1.0, 2.0, 3.0]], dim=4)
