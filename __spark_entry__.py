@@ -211,11 +211,11 @@ def q_dup_clusters(spark, sf_dir):
     pairs = q_dup_pairs(spark, sf_dir).select("id_a", "id_b")
     cc = connected_components(pairs, CFG)
     docs = _docs(spark, sf_dir).select(F.col("doc_id").alias("node"))
-    # cc has one row per DUPLICATED doc (a small fraction of the corpus at
-    # any scale factor): broadcast it so the docs side is never shuffled
-    # just to attach cluster ids (r06; was a sort-merge join)
+    # cc has one row per DUPLICATED doc. No broadcast hint: on the driver
+    # union-find path cc is a local relation, which the planner already
+    # broadcasts; at scale the join strategy is left to size statistics
     return (
-        docs.join(F.broadcast(cc), "node", "left")
+        docs.join(cc, "node", "left")
         .select(
             F.col("node").alias("doc_id"),
             F.coalesce("cluster_id", "node").alias("cluster_id"),
@@ -436,8 +436,8 @@ def q_containment_pairs(spark, sf_dir):
         pfx.alias("norm_text"),
     )
     corpus = d.select("doc_id", "norm_text").unionByName(shorts)
-    # feeds pos_df, phase-0 sizes, both phase-1 gram sides and both phase-2
-    # text sides -- uncached, the normalize+shingle+sketch chain recomputes
+    # feeds the candidates, both phase-1 gram sides and both phase-2 text
+    # sides -- uncached, the normalize+shingle+sketch chain recomputes
     # per branch (measured ~10x)
     prep = track_cache(
         prepare_docs(corpus, "doc_id", "norm_text", CONT_CFG, ascii_fast_path=True)

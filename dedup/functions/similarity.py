@@ -214,7 +214,6 @@ _CCV_BINS = 64
 # token-sort fallback (conversation norm_text keeps '\n' turn separators),
 # but non-whitespace byte counts are. Folding whitespace into a skippable
 # bucket keeps the bound exact for BOTH ratio paths.
-_WS_BYTES = (0x20, 0x09, 0x0A, 0x0D)
 
 
 def char_count_vector_udf(text: Column | str, bins: int = _CCV_BINS) -> Column:

@@ -57,16 +57,13 @@ def unescape_turn_text(c: F.Column | str) -> F.Column:
 def assemble_conversations(
     transcripts: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    repartition: bool = True,
 ) -> DataFrame:
     """(conv_id, turn_idx, role, text, tool, ts) -> one row per conv_id:
     (conv_id, n_turns, doc_text, first_ts).
 
     Tie-breaking on duplicate turn_idx is deterministic ((ts, role) then
     text) so assembly is idempotent across retries/resumes."""
-    df = transcripts
-    if repartition:
-        df = df.repartition(config.conv_partitions, "conv_id")
+    df = transcripts.repartition(config.conv_partitions, "conv_id")
     ordered = F.array_sort(
         F.collect_list(
             F.struct(

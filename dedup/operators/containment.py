@@ -256,39 +256,50 @@ def containment_candidates(
             .alias("id_long"),
             "band_hits",
         )
+    )
+    pairs, capped = rank_partner_caps(scored, config.containment_max_partners, tracker)
+    return ContainmentCandidates(pairs, window_band_skew, capped)
+
+
+def rank_partner_caps(
+    scored: DataFrame, cap: int, tracker: list[DataFrame] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """RANKED PARTNER CAPS over unique (id_short, id_long, band_hits) pairs
+    -> (kept (id_short, id_long), capped (+ reason 'short_cap'/'long_cap')).
+    A doc colliding with hundreds of partners is shared boilerplate;
+    verifying every such pair ships the fat gram arrays ~|partners| times.
+    Each short keeps its ``cap`` strongest partners (band-hit rank, id
+    tiebreak); among those survivors each long keeps its ``4 * cap``
+    strongest. True containments rank top (aligned windows hit nearly
+    every band); capped boilerplate edges stay reachable transitively.
+    Every dropped pair lands in the capped LEDGER (no silent truncation).
+
+    One ranked frame, persisted once and read by both outputs: the long
+    window also partitions on the short-cap verdict, so a survivor's rank
+    counts survivors only, as a second pass over them would."""
+    r1 = F.row_number().over(
+        Window.partitionBy("id_short").orderBy(
+            F.col("band_hits").desc(), F.col("id_long").asc()
+        )
+    )
+    r2 = F.row_number().over(
+        Window.partitionBy("id_long", "in_short").orderBy(
+            F.col("band_hits").desc(), F.col("id_short").asc()
+        )
+    )
+    ranked = (
+        scored.withColumn("in_short", r1 <= cap)
+        .withColumn(
+            "reason",
+            F.when(~F.col("in_short"), "short_cap").when(r2 > 4 * cap, "long_cap"),
+        )
+        .drop("in_short")
         .persist()
     )
-    register(scored, tracker)
-    # RANKED PARTNER CAPS (config.containment_max_partners): a doc
-    # colliding with hundreds of partners is shared boilerplate; verifying
-    # every such pair ships the fat gram arrays ~|partners| times. Keep the
-    # strongest-signal partners per short (band-hit rank, deterministic id
-    # tiebreak), then bound the long side at 4x. True containments rank
-    # top (aligned windows hit nearly every band); capped boilerplate
-    # family edges remain reachable transitively through stronger edges.
-    # Every dropped pair lands in the capped_pairs LEDGER -- same "no
-    # silent truncation" discipline as the band-skew tables.
-    cap = config.containment_max_partners
-    w_short = Window.partitionBy("id_short").orderBy(
-        F.col("band_hits").desc(), F.col("id_long").asc()
-    )
-    s1 = scored.withColumn("__r", F.row_number().over(w_short))
-    drop_short = s1.filter(F.col("__r") > cap).select(
-        "id_short", "id_long", "band_hits", F.lit("short_cap").alias("reason")
-    )
-    kept1 = s1.filter(F.col("__r") <= cap).drop("__r")
-    w_long = Window.partitionBy("id_long").orderBy(
-        F.col("band_hits").desc(), F.col("id_short").asc()
-    )
-    s2 = kept1.withColumn("__r", F.row_number().over(w_long))
-    drop_long = s2.filter(F.col("__r") > 4 * cap).select(
-        "id_short", "id_long", "band_hits", F.lit("long_cap").alias("reason")
-    )
-    kept = s2.filter(F.col("__r") <= 4 * cap)
-    return ContainmentCandidates(
-        pairs=kept.select("id_short", "id_long"),
-        window_band_skew=window_band_skew,
-        capped_pairs=drop_short.unionByName(drop_long),
+    register(ranked, tracker)
+    return (
+        ranked.filter(F.col("reason").isNull()).select("id_short", "id_long"),
+        ranked.filter(F.col("reason").isNotNull()),
     )
 
 
@@ -302,27 +313,20 @@ def verify_containment(
     canonical id order. Containment = |short ∩ long| / |short| on gram-hash
     sets (native); LCS-substring UDF only for the uncertain band.
 
-    THREE-PHASE (what rides the pair join dominates -- same lesson as
-    verify.py): (0) a narrow (doc_id, n_grams) join drops too-short pairs
-    before any array ships; (1) the gram-array join + intersection runs
-    ONCE and is checkpointed as a SKINNY (ids, containment) table -- the
-    sure/unsure branches must not each re-run the fat join, and the fat
-    arrays must not be materialized into the checkpoint; (2) texts join
-    only for the uncertain band that actually pays the LCS kernel."""
-    thr = config.containment_threshold
+    PRECONDITION: ``cands`` is ``containment_candidates(prepared,
+    config).pairs`` over the same ``prepared`` and config. Its pairs are
+    unique and both ids already pass the ``containment_min_grams`` gate
+    (only such docs are banded), so no length gate or final de-duplication
+    runs here: orientation to (id_a, id_b) is a bijection and the
+    sure/unsure branches are disjoint.
 
-    # phase 0: narrow length gate
-    sizes = prepared.select("doc_id", F.size("gram_hashes").alias("n_grams"))
-    cands = (
-        cands.join(
-            sizes.select(
-                F.col("doc_id").alias("id_short"), F.col("n_grams").alias("n_s")
-            ),
-            "id_short",
-        )
-        .filter(F.col("n_s") >= config.containment_min_grams)
-        .select("id_short", "id_long")
-    )
+    TWO-PHASE (what rides the pair join dominates -- same lesson as
+    verify.py): (1) the gram-array join + intersection runs ONCE and is
+    checkpointed as a SKINNY (ids, containment) table -- the sure/unsure
+    branches must not each re-run the fat join, and the fat arrays must
+    not be materialized into the checkpoint; (2) texts join only for the
+    uncertain band that actually pays the LCS kernel."""
+    thr = config.containment_threshold
 
     # phase 1: gram intersection, once, skinny output
     g = prepared.select("doc_id", "gram_hashes")
@@ -383,4 +387,4 @@ def verify_containment(
         "containment",
         "lcs_ratio",
         F.lit("containment").alias("tier"),
-    ).dropDuplicates(["id_a", "id_b"])
+    )

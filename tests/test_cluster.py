@@ -53,6 +53,13 @@ def test_driver_union_find_matches_distributed(spark, config):
     assert dist == drv
 
 
+@pytest.mark.parametrize("driver_path", [False, True])
+def test_empty_edge_set(spark, config, driver_path):
+    assert _cc(spark, config, [], driver_path=driver_path) == {}
+    # self-loops only: nothing survives the src != dst filter either
+    assert _cc(spark, config, [(5, 5), (7, 7)], driver_path=driver_path) == {}
+
+
 def test_string_node_ids(spark, config):
     df = spark.createDataFrame(
         [("cb", "cc"), ("ca", "cb"), ("cx", "cy")], "id_a string, id_b string"

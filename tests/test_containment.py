@@ -2,8 +2,10 @@
 LCS-substring verification (the north_rule suffix-array substring tier)."""
 
 import random
+from collections import defaultdict
 
 import numpy as np
+import pyspark.sql.functions as F
 import pytest
 
 from dedup.generate import _random_text
@@ -11,6 +13,7 @@ from dedup.operators.candidates import prepare_docs
 from dedup.operators.containment import (
     containment_candidates,
     lcs_substring_len,
+    rank_partner_caps,
     verify_containment,
 )
 
@@ -38,6 +41,9 @@ def contain_corpus(spark, config):
     rows.append(("L0", filler() + " " + shorts["s0"] + " " + filler()))
     rows.append(("L1", shorts["s1"] + " " + filler() + " " + filler()))
     rows.append(("L2", filler() + " " + filler()))  # container with no dup
+    # verbatim span of L0 with too few distinct grams to pass the
+    # containment_min_grams gate: it must never reach an edge
+    rows.append(("tiny", shorts["s0"][:24]))
     df = spark.createDataFrame(rows, "conv_id string, doc_text string")
     # containment needs window-scale docs: small window config for the test
     cfg = config.with_(
@@ -46,6 +52,19 @@ def contain_corpus(spark, config):
     prep = prepare_docs(df, "conv_id", "doc_text", cfg).cache()
     prep.count()
     return prep, cfg
+
+
+def _checked_edges(edges, prep, cfg):
+    """Collect containment edges, asserting what verify_containment relies
+    on its candidates for: unique (id_a, id_b) and no doc under the
+    containment_min_grams gate."""
+    rows = edges.collect()
+    keys = [(r["id_a"], r["id_b"]) for r in rows]
+    assert len(keys) == len(set(keys)), "duplicate containment edges"
+    n_grams = dict(prep.select("doc_id", F.size("gram_hashes")).collect())
+    under = {i for k in keys for i in k if n_grams[i] < cfg.containment_min_grams}
+    assert not under, f"docs under containment_min_grams in edges: {under}"
+    return rows
 
 
 MERSENNE = (1 << 61) - 1
@@ -157,8 +176,10 @@ def test_containment_candidates_surface_planted(spark, contain_corpus):
 
 def test_containment_verify(spark, contain_corpus):
     prep, cfg = contain_corpus
+    n_tiny = prep.filter(F.col("doc_id") == "tiny").select(F.size("gram_hashes")).first()[0]
+    assert n_tiny < cfg.containment_min_grams  # the fixture exercises the gate
     edges = verify_containment(containment_candidates(prep, cfg).pairs, prep, cfg)
-    got = {(r["id_a"], r["id_b"]): r for r in edges.collect()}
+    got = {(r["id_a"], r["id_b"]): r for r in _checked_edges(edges, prep, cfg)}
     assert ("L0", "s0") in got and got[("L0", "s0")]["containment"] >= 0.9
     assert ("L1", "s1") in got
     # the no-dup container never links to an unrelated short doc
@@ -191,7 +212,10 @@ def test_containment_mid_document_recall(spark, config):
     df = spark.createDataFrame(rows, "conv_id string, doc_text string")
     prep = prepare_docs(df, "conv_id", "doc_text", cfg)
     edges = verify_containment(containment_candidates(prep, cfg).pairs, prep, cfg)
-    got = {(r["id_a"], r["id_b"]): r["containment"] for r in edges.collect()}
+    got = {
+        (r["id_a"], r["id_b"]): r["containment"]
+        for r in _checked_edges(edges, prep, cfg)
+    }
     missed = [p for p in planted if p not in got]
     assert not missed, f"mid-embedded containments missed: {missed}"
     # exact substring => distinct-gram subset => containment exactly 1.0
@@ -228,6 +252,48 @@ def test_containment_capped_pairs_ledger(spark, config):
     surfaced = (kept | capped) & planted
     missing = planted - surfaced
     assert not missing, f"planted pairs neither kept nor accounted: {missing}"
+
+
+def test_rank_partner_caps_matches_oracle(spark):
+    """One ranked frame == the two-pass cap oracle: each short keeps its
+    ``cap`` best partners (band_hits desc, id_long asc), then each long
+    keeps its ``4 * cap`` best among those survivors (band_hits desc,
+    id_short asc). Hand-built pairs make both caps bind, with band_hits
+    ties everywhere."""
+    rng = random.Random(3)
+    cap = 2
+    longs = [100 + j for j in range(5)]
+    rows = [
+        (s, l, rng.randint(1, 3))
+        for s in range(30)
+        for l in rng.sample(longs, rng.randint(1, 5))
+    ]
+    by_short = defaultdict(list)
+    for r in rows:
+        by_short[r[0]].append(r)
+    want, survivors = {}, defaultdict(list)
+    for rs in by_short.values():
+        for i, r in enumerate(sorted(rs, key=lambda r: (-r[2], r[1]))):
+            if i < cap:
+                survivors[r[1]].append(r)
+            else:
+                want[r[:2]] = "short_cap"
+    for rs in survivors.values():
+        for r in sorted(rs, key=lambda r: (-r[2], r[0]))[4 * cap :]:
+            want[r[:2]] = "long_cap"
+    assert set(want.values()) == {"short_cap", "long_cap"}  # both caps bind
+
+    scored = spark.createDataFrame(rows, "id_short long, id_long long, band_hits long")
+    kept_df, capped_df = rank_partner_caps(scored, cap)
+    kept = {(r["id_short"], r["id_long"]) for r in kept_df.collect()}
+    capped_rows = capped_df.collect()
+    capped = {(r["id_short"], r["id_long"]): r["reason"] for r in capped_rows}
+    assert len(capped) == len(capped_rows)
+    assert capped == want
+    assert not kept & capped.keys()
+    assert kept | capped.keys() == {r[:2] for r in rows}
+    hits = {r[:2]: r[2] for r in rows}
+    assert all(r["band_hits"] == hits[(r["id_short"], r["id_long"])] for r in capped_rows)
 
 
 def test_pipeline_links_containment_cluster(spark, config, tmp_path):
