@@ -4,7 +4,7 @@
 
 PY ?= python
 
-.PHONY: test bench bench-scaling dist check-entry clean
+.PHONY: test bench bench-scaling dist check-entry loc clean
 
 # same command as the ROADMAP tier-1 gate
 test:
@@ -13,6 +13,10 @@ test:
 
 check-entry:
 	$(PY) tools/check_entry.py /root/testdata/sf0.01
+
+# dedup/ + tools/ line total, the size ROADMAP aim 2 tracks
+loc:
+	@cat dedup/*.py dedup/*/*.py tools/*.py | wc -l
 
 bench:
 	$(PY) bench.py

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from dedup.config import DedupConfig
-from dedup.tracking import drain_tracked, track_cache
+from dedup.tracking import drain_tracked, register
 from dedup.functions.normalize import normalize_ascii_col
 from dedup.functions.shingle import char_ngrams_col, words_col
 from dedup.functions.similarity import exact_jaccard_col
@@ -48,14 +48,21 @@ def _norm_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _docs_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic derived corpus with planted exact dups: the documents
-    table unioned with a shifted-id copy of every 7th document."""
-    d = _norm_docs(spark, sf_dir)
-    copies = d.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    return d.unionByName(copies)
+def _spread(df: DataFrame, key: str) -> DataFrame:
+    """Hash-repartition a scan on ``key`` into ``shuffle_partitions``: the
+    scans are one split, so the interpreted per-row transforms that follow
+    would otherwise run in a single task (r06)."""
+    return df.repartition(CFG.shuffle_partitions, key)
+
+
+def _with_planted_dups(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Deterministic planted exact dups: ``d`` unioned with a copy of every
+    7th document under doc_id + 1,000,000, and the planted (id_a, id_b)
+    pairs."""
+    src = d.filter(F.col("doc_id") % 7 == 0)
+    copy_id = F.col("doc_id") + F.lit(1_000_000)
+    planted = src.select(F.col("doc_id").alias("id_a"), copy_id.alias("id_b"))
+    return d.unionByName(src.withColumn("doc_id", copy_id)), planted
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +75,9 @@ def q_normalize(spark, sf_dir):
 
 def q_exact_groups(spark, sf_dir):
     return (
-        exact_duplicate_groups(_docs_with_dups(spark, sf_dir), "doc_id", "norm_text")
+        exact_duplicate_groups(
+            _with_planted_dups(_norm_docs(spark, sf_dir))[0], "doc_id", "norm_text"
+        )
         .select(
             "representative",
             F.col("group_size").cast("long").alias("group_size"),
@@ -79,9 +88,7 @@ def q_exact_groups(spark, sf_dir):
 
 
 def q_ngram_df(spark, sf_dir):
-    # repartition: the scan is one split and the interpreted gram transform
-    # would otherwise run serially in the pre-shuffle stage (r06)
-    d = _norm_docs(spark, sf_dir).repartition(CFG.shuffle_partitions, "doc_id")
+    d = _spread(_norm_docs(spark, sf_dir), "doc_id")
     return (
         d.select(F.explode(char_ngrams_col("norm_text", 3)).alias("gram"))
         .groupBy("gram")
@@ -90,7 +97,7 @@ def q_ngram_df(spark, sf_dir):
 
 
 def q_word_idf(spark, sf_dir):
-    d = _norm_docs(spark, sf_dir).repartition(CFG.shuffle_partitions, "doc_id")
+    d = _spread(_norm_docs(spark, sf_dir), "doc_id")
     n = d.count()
     return (
         d.select(F.explode(F.array_distinct(words_col("norm_text"))).alias("word"))
@@ -105,16 +112,13 @@ def q_jaccard_topk(spark, sf_dir):
     match_maker.py:50) -- queries are every 10th doc, truth is all docs."""
     from dedup.operators.match import jaccard_topk_candidates
 
-    # shared by query side, truth side, and the idf agg; tracked so the
+    # shared by query side, truth side, and the idf agg; registered so the
     # next entry query (or the bench loop) releases it -- an un-released
     # cache here starved later queries in the shared bench session (r2).
-    # repartition first: the parquet scan is ONE split, so the interpreted
-    # gram-transform chain otherwise materializes the whole cache in a
-    # single task (~4s serial at sf0.1; r06).
-    d = track_cache(
-        _norm_docs(spark, sf_dir)
-        .repartition(CFG.shuffle_partitions, "doc_id")
+    d = register(
+        _spread(_norm_docs(spark, sf_dir), "doc_id")
         .withColumn("grams", char_ngrams_col("norm_text", 3))
+        .cache()
     )
     queries = d.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("query_id"), "norm_text", "grams"
@@ -148,10 +152,10 @@ def q_jaccard_pruned(spark, sf_dir):
     only of pairs sharing exclusively stop-grams."""
     from dedup.operators.match import jaccard_topk_candidates
 
-    d = track_cache(
-        _norm_docs(spark, sf_dir)
-        .repartition(CFG.shuffle_partitions, "doc_id")  # see q_jaccard_topk
+    d = register(
+        _spread(_norm_docs(spark, sf_dir), "doc_id")
         .withColumn("grams", char_ngrams_col("norm_text", 3))
+        .cache()
     )
     queries = d.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("query_id"), "norm_text", "grams"
@@ -172,9 +176,10 @@ def q_dup_pairs(spark, sf_dir):
     from dedup.functions.similarity import minhash_estimate_col
     from dedup.operators.verify import jaccard_gate_threshold
 
-    # feeds the LSH branch and both pair-join sides; tracked (see q_jaccard_topk)
-    prep = track_cache(
+    # feeds the LSH branch and both pair-join sides; registered (see q_jaccard_topk)
+    prep = register(
         prepare_docs(_docs(spark, sf_dir), "doc_id", "text", CFG, ascii_fast_path=True)
+        .cache()
     )
     cand = candidate_pairs(band_postings(prep, CFG), CFG).pairs
     g = prep.select("doc_id", "gram_hashes", "minhash")
@@ -304,12 +309,10 @@ def q_word_count_vectors(spark, sf_dir):
 
 
 def q_knn(spark, sf_dir):
-    # repartition: the scan is one split, and the interpreted zip_with dot
-    # products of the broadcast nested-loop join would otherwise run in a
-    # single task (r06)
+    # the zip_with dot products of the broadcast nested-loop join are the
+    # interpreted per-row work _spread keeps out of a single task
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(CFG.shuffle_partitions, "vec_id")
+        _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
     )
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -328,26 +331,13 @@ def q_knn(spark, sf_dir):
 # full (unplanted) candidate sets are separately verified end-to-end by
 # dup_pairs_jaccard's brute-force all-pairs oracle.
 
-def _raw_docs_with_dups(spark, sf_dir):
-    """Raw-text twin of _docs_with_dups: every 7th document gets an exact
-    shifted-id copy (deterministic planted exact duplicates)."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    copies = d.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    return d.unionByName(copies), d.filter(F.col("doc_id") % 7 == 0).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + F.lit(1_000_000)).alias("id_b"),
-    )
-
-
 def q_minhash_candidates(spark, sf_dir):
     """LSH recall gate: an exact duplicate has an identical MinHash
     signature, hence identical hashes in ALL 32 bands, so the candidate
     join finds it with probability 1 (the max_band_group cap cannot drop a
     pair from every band for groups this small). The result is the planted
     pair set, which the oracle enumerates directly."""
-    corpus, planted = _raw_docs_with_dups(spark, sf_dir)
+    corpus, planted = _with_planted_dups(_docs(spark, sf_dir).select("doc_id", "text"))
     prep = prepare_docs(corpus, "doc_id", "text", CFG, ascii_fast_path=True)
     cand = candidate_pairs(band_postings(prep, CFG), CFG).pairs
     return cand.join(planted, ["id_a", "id_b"], "inner")
@@ -359,7 +349,7 @@ def q_simhash_pairs(spark, sf_dir):
     with hamming exactly 0."""
     from dedup.operators.simhash_join import simhash_near_pairs
 
-    corpus, planted = _raw_docs_with_dups(spark, sf_dir)
+    corpus, planted = _with_planted_dups(_docs(spark, sf_dir).select("doc_id", "text"))
     prep = prepare_docs(corpus, "doc_id", "text", CFG, ascii_fast_path=True)
     pairs = simhash_near_pairs(
         prep.select("doc_id", "simhash"),
@@ -423,9 +413,7 @@ def q_containment_pairs(spark, sf_dir):
         verify_containment,
     )
 
-    d = track_cache(
-        _norm_docs(spark, sf_dir).repartition(CFG.shuffle_partitions, "doc_id")
-    )
+    d = register(_spread(_norm_docs(spark, sf_dir), "doc_id").cache())
     pfx = F.trim(F.substring("norm_text", 1, _PFX_CHARS))
     eligible = d.filter(
         (F.length("norm_text") >= 320)
@@ -439,8 +427,9 @@ def q_containment_pairs(spark, sf_dir):
     # feeds the candidates, both phase-1 gram sides and both phase-2 text
     # sides -- uncached, the normalize+shingle+sketch chain recomputes
     # per branch (measured ~10x)
-    prep = track_cache(
+    prep = register(
         prepare_docs(corpus, "doc_id", "norm_text", CONT_CFG, ascii_fast_path=True)
+        .cache()
     )
     verified = verify_containment(
         containment_candidates(prep, CONT_CFG).pairs, prep, CONT_CFG
@@ -473,9 +462,7 @@ def q_containment_mid(spark, sf_dir):
     # repartition + cache: d feeds three join sides, the corpus union AND
     # the planted re-derivation; the gram-count filter uses the vectorized
     # UDF (ASCII-exact -- see q_containment_pairs r06 note).
-    d = track_cache(
-        _norm_docs(spark, sf_dir).repartition(CFG.shuffle_partitions, "doc_id")
-    )
+    d = register(_spread(_norm_docs(spark, sf_dir), "doc_id").cache())
     a = d.select(F.col("doc_id").alias("aid"), F.col("norm_text").alias("ta"))
     b = d.select(F.col("doc_id").alias("bid"), F.col("norm_text").alias("tb"))
     c = d.select(F.col("doc_id").alias("cid"), F.col("norm_text").alias("tc"))
@@ -494,8 +481,9 @@ def q_containment_mid(spark, sf_dir):
         F.concat_ws(" ", "ta", "tb", "tc").alias("norm_text"),
     )
     corpus = d.select("doc_id", "norm_text").unionByName(longs)
-    prep = track_cache(  # see q_containment_pairs
+    prep = register(  # see q_containment_pairs
         prepare_docs(corpus, "doc_id", "norm_text", CONT_CFG, ascii_fast_path=True)
+        .cache()
     )
     verified = verify_containment(
         containment_candidates(prep, CONT_CFG).pairs, prep, CONT_CFG
@@ -516,8 +504,7 @@ def q_srp_near_dups(spark, sf_dir):
     recover exactly those pairs (cosine 1.0), which the oracle enumerates
     directly."""
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(CFG.shuffle_partitions, "vec_id")  # see q_knn (r06)
+        _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id")
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )

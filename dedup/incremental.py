@@ -58,7 +58,6 @@ def incremental_dedup(
     existing_prepared: DataFrame | None,
     existing_bands: DataFrame | None,
     config: DedupConfig = DEFAULT_CONFIG,
-    tracker: list[DataFrame] | None = None,
 ) -> IncrementalResult:
     """Dedup appended conversations against an existing prepared corpus.
 
@@ -69,17 +68,17 @@ def incremental_dedup(
 
     Returns the new side's sketches + band postings (callers append both
     to their corpus tables) and verified duplicate edges touching the new
-    docs, plus the skew-cap ledger."""
+    docs, plus the skew-cap ledger. Its checkpoints are registered
+    (dedup/tracking.py): run it and the writes of its results inside one
+    scope."""
     if (existing_prepared is None) != (existing_bands is None):
         raise ValueError("pass both existing_prepared and existing_bands, or neither")
     assembled = assemble_conversations(new_transcripts, config)
     new_prepared = prepare_docs(assembled, "conv_id", "doc_text", config)
     # consumed by: band postings, the new-doc filter, verify join, and the
     # caller's corpus append -- localCheckpoint so the sketch UDFs run once.
-    new_prepared = new_prepared.localCheckpoint()
-    register(new_prepared, tracker)
-    new_bands = band_postings(new_prepared, config).localCheckpoint()
-    register(new_bands, tracker)
+    new_prepared = register(new_prepared.localCheckpoint())
+    new_bands = register(band_postings(new_prepared, config).localCheckpoint())
     new_ids = F.broadcast(new_prepared.select("doc_id"))
 
     postings = new_bands
@@ -91,18 +90,17 @@ def incremental_dedup(
             new_ids, "doc_id", "left_anti"
         )
         postings = new_bands.unionByName(touched)
-    res = candidate_pairs(postings, config, tracker=tracker)
+    res = candidate_pairs(postings, config)
 
     # touched groups also fan out old x old pairs: keep those touching a new doc
     is_new = new_prepared.select("doc_id", F.lit(True).alias("new"))
-    pairs = (
+    pairs = register(
         res.pairs.join(F.broadcast(is_new.toDF("id_a", "a_new")), "id_a", "left")
         .join(F.broadcast(is_new.toDF("id_b", "b_new")), "id_b", "left")
         .filter(F.col("a_new") | F.col("b_new"))
         .select("id_a", "id_b")
         .localCheckpoint()
     )
-    register(pairs, tracker)
 
     both = new_prepared
     if existing_prepared is not None:
@@ -135,7 +133,7 @@ def incremental_dedup(
         # never an arbitrary dropDuplicates winner.
         existing_only = existing_needed.join(new_ids, "doc_id", "left_anti")
         both = new_prepared.unionByName(existing_only).dropDuplicates(["doc_id"])
-    verified = verify_pairs(pairs, both, config, tracker=tracker)
+    verified = verify_pairs(pairs, both, config)
     return IncrementalResult(
         new_prepared=new_prepared,
         new_bands=new_bands,

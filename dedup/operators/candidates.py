@@ -105,7 +105,6 @@ def collision_groups(
     postings: DataFrame,
     id_col: str,
     max_group: int,
-    tracker: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """band postings (id_col, band_hash) -> (groups, skew): collision
     groups (band_hash, ids, gsz) of 2..max_group members as sorted id
@@ -114,9 +113,9 @@ def collision_groups(
     ONE groupBy on the band key folds group-size accounting AND posting-list
     assembly into a single shuffle (collect_list). Singleton groups (the
     vast majority of band keys) can never pair and are dropped before the
-    persist, so the cache holds only collision groups; it is appended to
-    ``tracker`` so long-lived callers (pipeline stages, streaming
-    micro-batches) can unpersist it once the pairs have materialized."""
+    persist, so the cache holds only collision groups; it is registered
+    (dedup/tracking.py) so the caller's scope releases it once the pairs
+    have materialized."""
     groups = (
         postings.groupBy("band_hash")
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
@@ -124,7 +123,7 @@ def collision_groups(
         .filter(F.col("gsz") > 1)
         .persist()
     )
-    register(groups, tracker)
+    register(groups)
     skew = groups.filter(F.col("gsz") > max_group).select(
         "band_hash", F.col("gsz").alias("group_size")
     )
@@ -191,16 +190,12 @@ def band_postings(prepared: DataFrame, config: DedupConfig = DEFAULT_CONFIG) -> 
 def candidate_pairs(
     postings: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    tracker: list[DataFrame] | None = None,
 ) -> CandidateResult:
     """band postings (doc_id, band_hash) -> candidate (id_a < id_b) pairs.
 
     Plan shape: collision groups (one band groupBy) -> family collapse ->
-    local pair fan-out -> band-hit-counted pair dedup.
-
-    ``tracker``: persisted intermediates are appended here (see
-    collision_groups)."""
-    ok, band_skew = collision_groups(postings, "doc_id", config.max_band_group, tracker)
+    local pair fan-out -> band-hit-counted pair dedup."""
+    ok, band_skew = collision_groups(postings, "doc_id", config.max_band_group)
 
     # FAMILY COLLAPSE before any pair fan-out: near-dup clusters (and
     # boilerplate families) produce the IDENTICAL sorted id list in many

@@ -136,7 +136,6 @@ class ContainmentCandidates:
 def containment_candidates(
     prepared: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    tracker: list[DataFrame] | None = None,
 ) -> ContainmentCandidates:
     """(id_short, id_long) candidates sharing a long contiguous gram span,
     plus two accounting ledgers (no silent truncation): oversized window
@@ -214,7 +213,7 @@ def containment_candidates(
     # Sorting ids sorts identically to sorting (id, n_grams) structs, so
     # the fan-out's i<j combination multiset is unchanged.
     ok, window_band_skew = collision_groups(
-        bands, "id", config.containment_max_band_group, tracker
+        bands, "id", config.containment_max_band_group
     )
     # NO family collapse here, unlike candidate_pairs: window families
     # repeat across far fewer bands than whole-doc boilerplate families,
@@ -257,13 +256,11 @@ def containment_candidates(
             "band_hits",
         )
     )
-    pairs, capped = rank_partner_caps(scored, config.containment_max_partners, tracker)
+    pairs, capped = rank_partner_caps(scored, config.containment_max_partners)
     return ContainmentCandidates(pairs, window_band_skew, capped)
 
 
-def rank_partner_caps(
-    scored: DataFrame, cap: int, tracker: list[DataFrame] | None = None
-) -> tuple[DataFrame, DataFrame]:
+def rank_partner_caps(scored: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
     """RANKED PARTNER CAPS over unique (id_short, id_long, band_hits) pairs
     -> (kept (id_short, id_long), capped (+ reason 'short_cap'/'long_cap')).
     A doc colliding with hundreds of partners is shared boilerplate;
@@ -296,7 +293,7 @@ def rank_partner_caps(
         .drop("in_short")
         .persist()
     )
-    register(ranked, tracker)
+    register(ranked)
     return (
         ranked.filter(F.col("reason").isNull()).select("id_short", "id_long"),
         ranked.filter(F.col("reason").isNotNull()),
@@ -307,7 +304,6 @@ def verify_containment(
     cands: DataFrame,
     prepared: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    tracker: list[DataFrame] | None = None,
 ) -> DataFrame:
     """-> (id_a, id_b, containment, lcs_ratio, tier='containment') edges,
     canonical id order. Containment = |short ∩ long| / |short| on gram-hash
@@ -352,7 +348,7 @@ def verify_containment(
         .select("id_short", "id_long", "containment")
     )
     scored = scored.localCheckpoint()
-    register(scored, tracker)
+    register(scored)
 
     sure = scored.filter(F.col("containment") >= thr).withColumn(
         "lcs_ratio", F.lit(None).cast("double")

@@ -10,8 +10,8 @@ group continues into the (much more expensive) near-dup tiers.
 Scale: groupBy on ``xxhash64(norm_text)`` -- a map-side-combinable hash
 agg, the cheapest possible first tier. We group on the 64-bit hash, not the
 full text, so shuffle rows are ~16 bytes of key instead of kilobytes of
-text; collision risk at 10^9 docs is ~1e-2 pairs under birthday math and is
-neutralized by keeping min/max text check optional via ``paranoid``.
+text. Collision risk at 10^9 docs is ~1e-2 pairs under birthday math, and
+nothing splits a collision apart: its two texts would share one group.
 """
 
 from __future__ import annotations
@@ -24,25 +24,16 @@ def exact_duplicate_groups(
     docs: DataFrame,
     id_col: str = "conv_id",
     text_col: str = "norm_text",
-    paranoid: bool = False,
 ) -> DataFrame:
     """docs -> (exact_key, member_ids array, group_size, representative).
 
     ``representative`` = min(id) -- the deterministic canonical member that
     proceeds to later tiers on behalf of the whole group."""
-    key = [F.xxhash64(F.col(text_col)).alias("exact_key")]
-    if paranoid:
-        # belt-and-braces at planetary scale: split hash collisions apart
-        key.append(F.md5(F.col(text_col)).alias("exact_key2"))
-    grouped = (
-        docs.groupBy(*key)
-        .agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("member_ids"),
-            F.count(F.lit(1)).alias("group_size"),
-            F.min(F.col(id_col)).alias("representative"),
-        )
+    return docs.groupBy(F.xxhash64(F.col(text_col)).alias("exact_key")).agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("member_ids"),
+        F.count(F.lit(1)).alias("group_size"),
+        F.min(F.col(id_col)).alias("representative"),
     )
-    return grouped
 
 
 def exact_duplicate_pairs(groups: DataFrame) -> DataFrame:

@@ -49,7 +49,7 @@ from dedup.functions.similarity import (
     token_sort_col,
 )
 from dedup.operators.grouping import grouped_top_k, group_argmax_unique
-from dedup.tracking import track
+from dedup.tracking import register
 
 NOT_FOUND = -1  # reference TRAIN_NOT_FOUND_VALUE, settings.py:33
 
@@ -82,15 +82,11 @@ def truth_idf(truth: DataFrame, config: DedupConfig = DEFAULT_CONFIG) -> DataFra
     )
 
 
-# sentinel: "use config.top_n_predict" (distinct from top_n=None = no ranking)
-_TOP_N_FROM_CONFIG = object()
-
-
 def jaccard_topk_candidates(
     queries: DataFrame,
     truth: DataFrame,
-    config: DedupConfig = DEFAULT_CONFIG,
-    top_n: int | None | object = _TOP_N_FROM_CONFIG,
+    config: DedupConfig,
+    top_n: int | None,
 ) -> DataFrame:
     """IDF-weighted Jaccard top-k truth candidates per query.
 
@@ -110,15 +106,13 @@ def jaccard_topk_candidates(
         emitted scores are identical to the exact plan; only pairs sharing
         exclusively stop-grams (score <= |shared|*ln(N/cutoff) / S) can be
         absent from the pool."""
-    if top_n is _TOP_N_FROM_CONFIG:
-        top_n = config.top_n_predict
     # idf is small (one row per distinct gram with df >= 1) and is joined
     # THREE times (query side, truth side, and transitively the sums);
     # cache it so the distributed agg runs once. At corpus scale this table
-    # is still only |distinct grams| rows -- broadcastable. Registered with
-    # the session tracker: the returned frame is lazy, so release happens
-    # at the next drain point (bench/driver loop), not here.
-    idf = track(truth_idf(truth, config).cache())
+    # is still only |distinct grams| rows -- broadcastable. Registered: the
+    # returned frame is lazy, so release happens at the caller's scope exit
+    # or the next drain_tracked() (bench/driver loop), not here.
+    idf = register(truth_idf(truth, config).cache())
     max_idf = idf.agg(F.max("idf")).first()[0]
 
     q_grams = queries.select(
@@ -209,7 +203,6 @@ def match_titles(
     queries_raw: DataFrame,
     truth_raw: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    top_n: int | None = None,
 ) -> DataFrame:
     """Full cascade. queries_raw: (query_id, title); truth_raw:
     (title_id, title). Returns (query_id, title_id, prediction, tier) with
@@ -217,15 +210,15 @@ def match_titles(
     # normalized+shingled sides feed multiple cascade tiers (exact join,
     # candidate gen, close-match re-join, finalize anti-join): cache both
     # so normalization runs once per row. (The pipeline equivalent is the
-    # checkpointed 'prepared' stage table.) Tracked for deferred release --
+    # checkpointed 'prepared' stage table.) Registered for deferred release --
     # repeated match_titles calls in one driver (accuracy harness loop, a
     # matching service) must not accumulate blocks.
-    queries = track(
+    queries = register(
         _with_norm_and_grams(queries_raw, "title", config)
         .select("query_id", "norm_text", "grams")
         .cache()
     )
-    truth = track(
+    truth = register(
         _with_norm_and_grams(truth_raw, "title", config)
         .select("title_id", "norm_text", "grams")
         .cache()
@@ -246,9 +239,7 @@ def match_titles(
     remaining = queries.join(exact.select("query_id"), "query_id", "left_anti")
 
     # ---- tier 2: candidates (top-k IDF-weighted Jaccard)
-    cands = jaccard_topk_candidates(
-        remaining, truth, config, top_n or config.top_n_predict
-    )
+    cands = jaccard_topk_candidates(remaining, truth, config, config.top_n_predict)
 
     # ---- tiers 3+4: one ratio pass over the candidate pairs.
     # The deletion-ratio length gate runs as a REAL .filter() before the
@@ -291,9 +282,9 @@ def match_titles(
         .select("query_id", "title_id", "del_ratio", "lev", "tsort")
     )
     # both tier branches read `pairs`; eager checkpoint so the two ratio
-    # UDF columns are computed once, not once per branch subtree. Tracked:
+    # UDF columns are computed once, not once per branch subtree. Registered:
     # checkpoint blocks live in the block manager like cache blocks do.
-    pairs = track(pairs.localCheckpoint())
+    pairs = register(pairs.localCheckpoint())
 
     # tier 3 proper: the reference's staged chain reconstructed from the
     # two ratio columns (deletion gate -> lev -> token-sort fallback,

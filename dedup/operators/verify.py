@@ -66,14 +66,14 @@ def verify_pairs(
     pairs: DataFrame,
     prepared: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    tracker: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(id_a, id_b) candidates x prepared docs -> verified edges
     (id_a, id_b, jaccard, hamming, lev_ratio, tier).
 
-    ``tracker`` collects the eager localCheckpoint intermediates so callers
-    can unpersist them once the verified edges are materialized (only safe
-    AFTER materialization: a localCheckpoint has no lineage to recompute)."""
+    The eager localCheckpoint intermediate is registered
+    (dedup/tracking.py): the caller's scope must enclose the action that
+    materializes the verified edges (a localCheckpoint has no lineage to
+    recompute once released)."""
     thr = config.lev_threshold
 
     # ---- phase 1: narrow sketch join ----------------------------------
@@ -176,7 +176,7 @@ def verify_pairs(
     scored = jac.unionByName(
         p1.filter(~(F.col("est") >= F.lit(gate))).withColumn("jaccard", F.lit(0.0))
     ).localCheckpoint()
-    register(scored, tracker)
+    register(scored)
 
     jac_ok = F.col("jaccard") >= F.lit(config.jaccard_threshold)
 

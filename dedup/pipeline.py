@@ -28,6 +28,7 @@ from dedup.operators.exact import (
     representatives,
 )
 from dedup.operators.verify import verify_pairs
+from dedup.tracking import scope
 
 @dataclass
 class PipelineReport:
@@ -65,41 +66,32 @@ def run_pipeline(
         spark, warehouse, run_id=run_id, config_fingerprint=config.config_fingerprint()
     )
     report = PipelineReport(run_id=cat.run_id)
-    # every persist()/localCheckpoint() an operator takes lands here and is
-    # released as soon as the stage consuming it has committed its table --
-    # NOT at pipeline end: holding cached band postings / verify
-    # intermediates alive starves later stages (containment, clustering) of
-    # executor memory (measured: end-of-run draining cost those stages
-    # 25-50% wall time), and a long-lived driver (or the streaming loop)
-    # must never accumulate blocks across runs.
-    tracker: list[DataFrame] = []
 
-    def drain_tracker() -> None:
-        # release_blocks, not bare unpersist: localCheckpoint blocks are
-        # pinned at the RDD level and DataFrame.unpersist() won't free them
-        from dedup.tracking import drain
+    def stage(name: str, build) -> DataFrame:
+        # every persist()/localCheckpoint() the build takes is released as
+        # soon as its table has committed (or the build raised) -- NOT at
+        # pipeline end: holding cached band postings / verify intermediates
+        # alive starves later stages (containment, clustering) of executor
+        # memory (measured: end-of-run draining cost those stages 25-50%
+        # wall time), and a long-lived driver must never accumulate blocks
+        # across runs.
+        with scope():
+            df, r = cat.write_or_resume(name, build)
+        report.stages.append(r)
+        return df
 
-        drain(tracker)
-
-    assembled, r = cat.write_or_resume(
-        "assembled", lambda: assemble_conversations(transcripts, config)
-    )
-    report.stages.append(r)
-
-    prepared, r = cat.write_or_resume(
+    assembled = stage("assembled", lambda: assemble_conversations(transcripts, config))
+    prepared = stage(
         "prepared", lambda: prepare_docs(assembled, "conv_id", "doc_text", config)
     )
-    report.stages.append(r)
-
-    exact_groups, r = cat.write_or_resume(
+    exact_groups = stage(
         "exact_groups", lambda: exact_duplicate_groups(prepared, "doc_id", "norm_text")
     )
-    report.stages.append(r)
 
     reps = representatives(prepared, exact_groups, "doc_id")
 
     def _cands():
-        res = candidate_pairs(band_postings(reps, config), config, tracker=tracker)
+        res = candidate_pairs(band_postings(reps, config), config)
         # persist skew accounting alongside (separate table, same commit
         # discipline) -- the "no silent truncation" ledger. The write is a
         # filter over the band groups the pairs job persists anyway, and
@@ -109,15 +101,8 @@ def run_pipeline(
         cat.write("band_skew", res.band_skew, stage="candidate_pairs", num_files=4)
         return res.pairs
 
-    cands, r = cat.write_or_resume("candidate_pairs", _cands)
-    report.stages.append(r)
-    drain_tracker()
-
-    verified, r = cat.write_or_resume(
-        "verified_pairs", lambda: verify_pairs(cands, reps, config, tracker=tracker)
-    )
-    report.stages.append(r)
-    drain_tracker()
+    cands = stage("candidate_pairs", _cands)
+    verified = stage("verified_pairs", lambda: verify_pairs(cands, reps, config))
 
     # imported at call time, on purpose: per-layer tracing patches these two
     # names on their module, which a module-level import would bypass
@@ -127,7 +112,7 @@ def run_pipeline(
     )
 
     def _containment():
-        cres = containment_candidates(reps, config, tracker=tracker)
+        cres = containment_candidates(reps, config)
         # accounting ledgers (no silent truncation): oversized window
         # band groups + pairs dropped by the ranked partner caps --
         # same commit discipline as band_skew.
@@ -150,11 +135,9 @@ def run_pipeline(
             stage="containment_pairs",
             num_files=4,
         )
-        return verify_containment(cres.pairs, reps, config, tracker=tracker)
+        return verify_containment(cres.pairs, reps, config)
 
-    containment, r = cat.write_or_resume("containment_pairs", _containment)
-    report.stages.append(r)
-    drain_tracker()
+    containment = stage("containment_pairs", _containment)
 
     def _clusters():
         near_edges = verified.select("id_a", "id_b")
@@ -162,7 +145,7 @@ def run_pipeline(
         edges = near_edges.unionByName(exact_edges).unionByName(
             containment.select("id_a", "id_b")
         )
-        cc = connected_components(edges, config, tracker=tracker)
+        cc = connected_components(edges, config)
         # singletons: docs in no edge get their own cluster
         all_docs = prepared.select(F.col("doc_id").alias("node"))
         out = (
@@ -179,8 +162,7 @@ def run_pipeline(
             max(2, config.conv_partitions // 4), "conv_id"
         ).sortWithinPartitions("conv_id")
 
-    clusters, r = cat.write_or_resume("clusters", _clusters)
-    report.stages.append(r)
+    stage("clusters", _clusters)
 
     # metrics table: one row per (run_id, stage) + per-partition lineage in
     # each stage manifest. Append-style (overwrites per run_id dir).
@@ -190,7 +172,6 @@ def run_pipeline(
         "run_id string, stage string, rows long, partitions int, seconds double, resumed boolean",
     )
     cat.write(f"metrics_{cat.run_id}", metrics_df, stage="metrics")
-    drain_tracker()
 
     report.total_seconds = time.time() - t0
     return report

@@ -53,6 +53,7 @@ import pyspark.sql.functions as F
 
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.incremental import incremental_dedup
+from dedup.tracking import register, scope
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -198,49 +199,46 @@ def start_streaming_dedup(
             return
         existing = _read_state(spark, corpus_dir, PREPARED_COLS, with_batch=True)
         _check_fingerprint(warehouse, config, first_batch=existing is None)
-        tracker: list[DataFrame] = []
-        # batch turns feed three consumers (turns append, re-seen probe,
-        # dedup input); checkpoint so the source is read once
-        batch = batch_df.localCheckpoint()
-        tracker.append(batch)
-        # 1. persist this batch's raw turns FIRST (idempotent: a retry
-        #    overwrites its own dir); prior turns are read with an explicit
-        #    batch != batch_id filter so a retry never sees its own rows.
-        batch.select(*TRANSCRIPT_COLS).write.mode("overwrite").parquet(
-            os.path.join(turns_dir, f"batch={batch_id}")
-        )
+        # one scope per micro-batch: its checkpoints are released once the
+        # batch's state tables are written (or the batch raised) -- a
+        # long-lived stream must not accumulate pinned blocks across batches
+        with scope():
+            # batch turns feed three consumers (turns append, re-seen probe,
+            # dedup input); checkpoint so the source is read once
+            batch = register(batch_df.localCheckpoint())
+            # 1. persist this batch's raw turns FIRST (idempotent: a retry
+            #    overwrites its own dir); prior turns are read with an explicit
+            #    batch != batch_id filter so a retry never sees its own rows.
+            batch.select(*TRANSCRIPT_COLS).write.mode("overwrite").parquet(
+                os.path.join(turns_dir, f"batch={batch_id}")
+            )
 
-        # 2. cross-batch assembly: conv_ids seen in EARLIER batches get
-        #    their full turn set re-assembled (supersede-on-reseen).
-        prior_turns = _read_state(
-            spark, turns_dir, TRANSCRIPT_COLS, with_batch=True
-        ).filter(F.col("batch") != batch_id)
-        batch_convs = batch.select("conv_id").dropDuplicates()
-        reseen_turns = prior_turns.join(
-            F.broadcast(batch_convs), "conv_id", "left_semi"
-        ).select(*TRANSCRIPT_COLS)
-        effective = batch.select(*TRANSCRIPT_COLS).unionByName(reseen_turns)
+            # 2. cross-batch assembly: conv_ids seen in EARLIER batches get
+            #    their full turn set re-assembled (supersede-on-reseen).
+            prior_turns = _read_state(
+                spark, turns_dir, TRANSCRIPT_COLS, with_batch=True
+            ).filter(F.col("batch") != batch_id)
+            batch_convs = batch.select("conv_id").dropDuplicates()
+            reseen_turns = prior_turns.join(
+                F.broadcast(batch_convs), "conv_id", "left_semi"
+            ).select(*TRANSCRIPT_COLS)
+            effective = batch.select(*TRANSCRIPT_COLS).unionByName(reseen_turns)
 
-        res = incremental_dedup(
-            effective, existing, _read_state(spark, bands_dir, BAND_COLS), config, tracker=tracker
-        )
-        res.new_prepared.select(*PREPARED_COLS).write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, f"batch={batch_id}")
-        )
-        res.new_bands.select(*BAND_COLS).write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"batch={batch_id}")
-        )
-        res.verified_pairs.write.mode("overwrite").parquet(
-            os.path.join(edges_dir, f"batch={batch_id}")
-        )
-        res.band_skew.write.mode("overwrite").parquet(
-            os.path.join(skew_dir, f"batch={batch_id}")
-        )
-        # release_blocks handles localCheckpoint blocks too -- a long-lived
-        # stream must not accumulate pinned checkpoint RDDs across batches
-        from dedup.tracking import drain
-
-        drain(tracker)
+            res = incremental_dedup(
+                effective, existing, _read_state(spark, bands_dir, BAND_COLS), config
+            )
+            res.new_prepared.select(*PREPARED_COLS).write.mode("overwrite").parquet(
+                os.path.join(corpus_dir, f"batch={batch_id}")
+            )
+            res.new_bands.select(*BAND_COLS).write.mode("overwrite").parquet(
+                os.path.join(bands_dir, f"batch={batch_id}")
+            )
+            res.verified_pairs.write.mode("overwrite").parquet(
+                os.path.join(edges_dir, f"batch={batch_id}")
+            )
+            res.band_skew.write.mode("overwrite").parquet(
+                os.path.join(skew_dir, f"batch={batch_id}")
+            )
 
     writer = stream.writeStream.foreachBatch(process_batch).trigger(
         availableNow=True

@@ -13,6 +13,7 @@ from dedup.config import DedupConfig
 from dedup.generate import make_corpus
 from dedup.operators.assemble import assemble_conversations
 from dedup.operators.candidates import band_postings, candidate_pairs, prepare_docs
+from dedup.tracking import scope
 
 
 @pytest.fixture(scope="module")
@@ -115,8 +116,8 @@ def test_candidate_pairs_match_band_hit_oracle(spark, config):
 
 def test_tracker_releases_persisted_band_postings(spark, config):
     """VERDICT r1 item 8: cached band postings must be releasable once the
-    pairs materialize -- the tracker collects every persist() the operator
-    takes, and unpersisting them leaves no storage behind."""
+    pairs materialize -- the enclosing scope collects every persist() the
+    operator takes, and its exit leaves no storage behind."""
     corpus = make_corpus(n_conversations=20, seed=3)
     prep = prepare_docs(
         assemble_conversations(spark.createDataFrame(corpus.transcripts), config),
@@ -124,13 +125,12 @@ def test_tracker_releases_persisted_band_postings(spark, config):
         "doc_text",
         config,
     )
-    tracker = []
-    res = candidate_pairs(band_postings(prep, config), config, tracker=tracker)
-    res.pairs.count()
-    assert len(tracker) == 1  # the collision-group cache (singletons pre-dropped)
-    assert all(df.storageLevel.useMemory or df.storageLevel.useDisk for df in tracker)
-    for df in tracker:
-        df.unpersist(blocking=True)
+    with scope() as frames:
+        res = candidate_pairs(band_postings(prep, config), config)
+        res.pairs.count()
+        assert len(frames) == 1  # the collision-group cache (singletons pre-dropped)
+        held = list(frames)
+        assert all(df.storageLevel.useMemory or df.storageLevel.useDisk for df in held)
     assert all(
-        not (df.storageLevel.useMemory or df.storageLevel.useDisk) for df in tracker
+        not (df.storageLevel.useMemory or df.storageLevel.useDisk) for df in held
     )

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from dedup.operators.cluster import connected_components
+from dedup.tracking import scope
 
 
 def _cc(spark, config, edges, driver_path=False):
@@ -66,3 +67,17 @@ def test_string_node_ids(spark, config):
     )
     got = {r["node"]: r["cluster_id"] for r in connected_components(df, config).collect()}
     assert got == {"ca": "ca", "cb": "ca", "cc": "ca", "cx": "cx", "cy": "cx"}
+
+
+def test_no_convergence_releases_edge_checkpoint(spark, config):
+    """The round loop raising (no convergence) still leaves no checkpoint
+    of the edge set behind once the enclosing scope exits."""
+    cfg = config.with_(cc_driver_threshold=0, cc_max_iterations=1)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(400)], "id_a long, id_b long"
+    ).repartition(8)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="did not converge"):
+        with scope():
+            connected_components(edges, cfg)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before

@@ -15,7 +15,7 @@ def fixture(spark, config):
     truth = spark.createDataFrame(truth_pd)
     queries = spark.createDataFrame(queries_pd)
     out = match_titles(
-        queries.select("query_id", "title"), truth, config, top_n=20
+        queries.select("query_id", "title"), truth, config.with_(top_n_predict=20)
     ).cache()
     out.count()
     return truth_pd, queries_pd, out

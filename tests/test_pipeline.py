@@ -100,3 +100,20 @@ def test_pipeline_releases_all_cached_blocks(spark, config, corpus, tmp_path_fac
     run_pipeline(spark, spark.createDataFrame(corpus.transcripts), wh, config)
     retained = dict(spark.sparkContext._jsc.getPersistentRDDs())
     assert not retained, f"leaked persistent RDDs: {retained}"
+
+
+def test_failed_stage_releases_its_blocks(spark, config, tmp_path, monkeypatch):
+    """A stage that raises still releases what it persisted: here the
+    containment stage fails after its ledgers materialized the window
+    collision groups and the ranked partner caps."""
+    import dedup.operators.containment as containment
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("verify_containment failed")
+
+    monkeypatch.setattr(containment, "verify_containment", fail)
+    tdf = spark.createDataFrame(make_corpus(n_conversations=40, seed=5).transcripts)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="verify_containment failed"):
+        run_pipeline(spark, tdf, str(tmp_path / "wh"), config)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
