@@ -213,8 +213,3 @@ class CheckpointCatalog:
         res.seconds = time.time() - t0
         res.breakdown = {"build": round(t_build - t0, 3), **res.breakdown}
         return self.table(name), res
-
-    def drop(self, name: str) -> None:
-        for p in (self.path(name), self._staging(name)):
-            if os.path.exists(p):
-                shutil.rmtree(p)

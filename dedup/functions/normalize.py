@@ -38,8 +38,8 @@ _DROP = re.compile(r"[^a-zA-Z0-9\s]")
 
 
 def transform_title(title: str, max_chars: int = 255, k: int = 3) -> str:
-    """Plain-Python reimplementation (drives tests and the synthetic-data
-    generator; the Spark path is ``normalize_text_col``)."""
+    """Plain-Python reimplementation, the oracle that the tests check
+    ``normalize_text_col`` (the Spark path) against."""
     text = unicodedata.normalize("NFD", title)
     text = text.encode("ascii", "ignore").decode("utf-8").lower().replace("-", " ")
     text = _DROP.sub("", text)

@@ -36,6 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
 from dedup.config import DedupConfig, DEFAULT_CONFIG
+from dedup.functions.sketch import byte_kgram_codes
 
 
 # ---------------------------------------------------------------------------
@@ -216,11 +217,11 @@ _CCV_BINS = 64
 # bucket keeps the bound exact for BOTH ratio paths.
 
 
-def char_count_vector_udf(text: Column | str, bins: int = _CCV_BINS) -> Column:
-    """Per-DOC folded byte-count vector (array<int> of ``bins``): slot 0
-    counts whitespace bytes, non-whitespace byte values bucket into
-    1 + (byte % (bins-1)). Feeds the exact bag-distance lower bound below;
-    computed once per doc (never per pair)."""
+def char_count_vector_udf(text: Column | str) -> Column:
+    """Per-DOC folded byte-count vector (array<int> of ``_CCV_BINS``): slot
+    0 counts whitespace bytes, non-whitespace byte values bucket into
+    1 + (byte % (_CCV_BINS-1)). Feeds the exact bag-distance lower bound
+    below; computed once per doc (never per pair)."""
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _ccv(xs: pd.Series) -> pd.Series:
@@ -228,15 +229,15 @@ def char_count_vector_udf(text: Column | str, bins: int = _CCV_BINS) -> Column:
         for s in xs.fillna(""):
             b = np.frombuffer(s.encode("utf-8", "ignore"), dtype=np.uint8)
             ws = (b == 0x20) | (b == 0x09) | (b == 0x0A) | (b == 0x0D)
-            folded = np.where(ws, 0, 1 + (b % (bins - 1)))
-            out.append(np.bincount(folded, minlength=bins).astype(np.int32))
+            folded = np.where(ws, 0, 1 + (b % (_CCV_BINS - 1)))
+            out.append(np.bincount(folded, minlength=_CCV_BINS).astype(np.int32))
         return pd.Series(out)
 
     c = F.col(text) if isinstance(text, str) else text
     return _ccv(c)
 
 
-def bag_l1_col(ccv_a: Column | str, ccv_b: Column | str, bins: int = _CCV_BINS) -> Column:
+def bag_l1_col(ccv_a: Column | str, ccv_b: Column | str) -> Column:
     """L1 distance between the NON-WHITESPACE slots of two char-count
     vectors -- an EXACT lower bound on the byte-level indel distance for
     both staged-ratio paths: every unit insert/delete changes one folded
@@ -251,8 +252,8 @@ def bag_l1_col(ccv_a: Column | str, ccv_b: Column | str, bins: int = _CCV_BINS) 
     ca = F.col(ccv_a) if isinstance(ccv_a, str) else ccv_a
     cb = F.col(ccv_b) if isinstance(ccv_b, str) else ccv_b
     # drop slot 0 (whitespace) from both sides before the elementwise |a-b|
-    ca_nw = F.slice(ca, 2, bins)
-    cb_nw = F.slice(cb, 2, bins)
+    ca_nw = F.slice(ca, 2, _CCV_BINS)
+    cb_nw = F.slice(cb, 2, _CCV_BINS)
     return F.aggregate(
         F.zip_with(ca_nw, cb_nw, lambda x, y: F.abs(x - y)),
         F.lit(0),
@@ -260,20 +261,17 @@ def bag_l1_col(ccv_a: Column | str, ccv_b: Column | str, bins: int = _CCV_BINS) 
     )
 
 
-def indel_distance_pairs(
-    x: Column | str, y: Column | str, dmax: int | None = None
-) -> Column:
+def indel_distance_pairs(x: Column | str, y: Column | str) -> Column:
     """Arrow-batched pandas UDF returning the raw cost-2 (indel) edit
     distance per pair -- the quantity under levenshtein_ratio_py's hood,
     exposed so an oracle can check it exactly (a contiguous k-char deletion
     has distance exactly k: <=k by construction, >=k by the length bound)."""
-    thr = dmax
 
     @F.pandas_udf(IntegerType())
     def _dist(xs: pd.Series, ys: pd.Series) -> pd.Series:
         out = np.empty(len(xs), dtype=np.int32)
         for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
-            out[i] = indel_distance_str(a, b, thr)
+            out[i] = indel_distance_str(a, b)
         return pd.Series(out)
 
     cx = F.col(x) if isinstance(x, str) else x
@@ -282,21 +280,28 @@ def indel_distance_pairs(
     return _dist.asNondeterministic()(cx, cy)
 
 
-_BGV_BINS = 256
+def _trigram_l1(a: str, b: str) -> int:
+    """L1 distance between the exact byte 3-gram count vectors of ``a`` and
+    ``b``. One unit indel changes at most 2q - 1 = 5 q-gram counts: it
+    removes the <= 3 grams that cover the edited byte and adds the <= 2
+    that span the join (the q-gram lemma; Ukkonen, TCS 1992). So
+    L1 <= 5 * indel distance, an exact lower bound that, unlike a byte
+    histogram, sees order.
 
-
-def _bigram_counts_py(s: str, bins: int = _BGV_BINS) -> np.ndarray:
-    """Byte-bigram count vector of one string: adjacent byte pairs hashed
-    to ``bins`` buckets. One unit indel edit changes at most 3 bigram
-    counts (removes <= 2 at the edit site, adds <= 1 merged), so
-    L1(BG_a, BG_b) <= 3 * d -- an EXACT lower bound on the indel distance
-    that, unlike the unigram bag, SEES ORDER. Folding to ``bins`` buckets
-    only lowers the L1, so the bound survives hashing."""
-    b = np.frombuffer(s.encode("utf-8", "ignore"), dtype=np.uint8)
-    if len(b) < 2:
-        return np.zeros(bins, dtype=np.int32)
-    big = (b[:-1].astype(np.uint32) << 8) | b[1:]
-    return np.bincount(big % bins, minlength=bins).astype(np.int32)
+    The codes of both sides are tagged with a side bit and sorted as one
+    array, so each distinct gram is one run; the running count of ``b``
+    tags at each run end gives both counts of that gram."""
+    qa, qb = byte_kgram_codes(a, 3), byte_kgram_codes(b, 3)
+    k = np.concatenate((qa, qb)).astype(np.int32)  # codes < 2**24
+    if not len(k):
+        return 0
+    k <<= 1
+    k[len(qa) :] |= 1
+    k.sort()
+    ends = np.append(np.flatnonzero((k[1:] ^ k[:-1]) > 1), len(k) - 1)
+    nb = np.cumsum(k & 1, dtype=np.int32)[ends]
+    # a run of n codes, nb of them b's, differs by |n - 2 * nb|
+    return int(np.abs(np.diff(ends - 2 * nb, prepend=-1)).sum())
 
 
 def bigram_gated_staged_ratio_udf(
@@ -305,40 +310,25 @@ def bigram_gated_staged_ratio_udf(
     config: DedupConfig = DEFAULT_CONFIG,
 ) -> Column:
     """The staged D4->D2->D5 gate chain (staged_ratio_py) as one column,
-    with the exact byte-bigram DP-admission bound applied PAIR-SIDE inside
-    the UDF: one unit indel changes <= 3 bigram counts (see
-    _bigram_counts_py), so L1(BG_a, BG_b) > 3 * dmax proves the direct ratio
-    can never clear the threshold, and the same bound over token-sorted
-    text proves it for the token-sort fallback -- a pair is DP'd only if
-    either path remains arithmetically possible (zero recall loss; gated
-    pairs return 0, below any threshold filter).
+    with an exact DP-admission bound on each of its two paths. Each path
+    runs its DP only if the 3-gram count L1 of its two texts (see
+    _trigram_l1) is at most 5 * (1 - thr/100) * total: one unit indel
+    changes at most 5 counts, so a larger L1 proves the indel distance
+    exceeds the threshold-implied bound and the ratio stays <= thr. The
+    direct path is bounded on the texts, the token-sort fallback on the
+    token-sorted texts. VALUES above the threshold are bit-identical to
+    staged_ratio_py (no false skips); a skipped path returns a value at
+    or below the threshold, which the callers' ``> threshold`` filter drops
+    either way -- the documented contract of this UDF.
 
-    Pair-side, not doc-side: a doc-side variant (per-doc bigram vectors
-    joined onto both pair sides) shipped every doc's 256-int direct +
-    token-sorted vectors through two extra join exchanges to gate a pair
-    population that is already small after the narrow sketch gates --
-    two Python UDF passes over ALL docs plus two shuffles of ~2KB/doc to
-    save per-pair numpy work measured in microseconds. Counting bigrams
-    inside the DP UDF costs O(len) per pair (trivial next to one
-    DP row) and deletes both exchanges from the verify plan.
+    The bound is computed pair-side, inside the UDF, in O(len log len)
+    numpy work per text; per-doc count vectors joined onto both pair sides
+    would cost two extra exchanges for a pair population that is already
+    small after the sketch gates.
 
-    The deletion-ratio gate runs as native columns BEFORE the UDF is
-    reached only when the caller filters on it first (verify.py's
-    need_lev does): Spark evaluates a pandas UDF inside a when/otherwise
-    for every row, so the UDF re-checks the gate before any DP.
-
-    r6: each of the two DP paths is admission-gated INDEPENDENTLY, per
-    the staged chain's own structure -- the direct DP is skipped when the
-    direct bigram bound already proves ratio <= threshold (previously the
-    staged chain still ran it before falling back), and the token-sort DP
-    is skipped when the token-sorted bigram bound proves the fallback
-    <= threshold (previously every direct-DP miss paid a SECOND full DP
-    over the sorted text -- the dominant verify-stage compute: profiled
-    2.1ms/pair x 57.7k pairs at 101k turns, most failing both paths).
-    VALUES above the threshold are bit-identical to staged_ratio_py (the
-    bounds are exact, no false skips); a skipped path returns a value at
-    or below the threshold, which the callers' ``> threshold`` filter
-    drops either way -- the documented contract of this UDF."""
+    The deletion-ratio gate is re-checked here before any DP: Spark
+    evaluates a pandas UDF on every row it reaches, so only a filter
+    ahead of the UDF (verify.py's need_lev) keeps rows away from it."""
     thr = config.lev_threshold
     frac = 1.0 - thr / 100.0
 
@@ -355,10 +345,7 @@ def bigram_gated_staged_ratio_udf(
             if ((total - abs(la - lb)) / total) * 100 < thr:
                 continue
             r = 0
-            if (
-                int(np.abs(_bigram_counts_py(a) - _bigram_counts_py(b)).sum())
-                <= 3.0 * frac * total
-            ):
+            if _trigram_l1(a, b) <= 5.0 * frac * total:
                 r = levenshtein_ratio_py(a, b, dmax_for(total))
                 if r > thr:
                     out[i] = r
@@ -366,22 +353,17 @@ def bigram_gated_staged_ratio_udf(
             # direct path is <= thr (computed or proven by its bound);
             # token-sort fallback only if ITS exact bound admits it
             sa, sb = token_sort_py(a), token_sort_py(b)
-            if (
-                int(np.abs(_bigram_counts_py(sa) - _bigram_counts_py(sb)).sum())
-                <= 3.0 * frac * (len(sa) + len(sb))
-            ):
-                out[i] = levenshtein_ratio_py(sa, sb, dmax_for(len(sa) + len(sb)))
+            ts = len(sa) + len(sb)
+            if _trigram_l1(sa, sb) <= 5.0 * frac * ts:
+                out[i] = levenshtein_ratio_py(sa, sb, dmax_for(ts))
             else:
                 out[i] = r  # <= thr, as is the provably-gated true fallback
         return pd.Series(out)
 
     cx = F.col(x) if isinstance(x, str) else x
     cy = F.col(y) if isinstance(y, str) else y
-    # native deletion-ratio pre-gate + optimizer barrier (see
-    # levenshtein_ratio_pairs) -- the kernel is pure
-    return F.when(deletion_ratio_col(cx, cy) < F.lit(float(thr)), F.lit(0)).otherwise(
-        _gated.asNondeterministic()(cx, cy)
-    )
+    # optimizer barrier (see levenshtein_ratio_pairs) -- the kernel is pure
+    return _gated.asNondeterministic()(cx, cy)
 
 
 def exact_jaccard_col(grams_a: Column | str, grams_b: Column | str) -> Column:

@@ -1,17 +1,1 @@
-from dedup.operators.assemble import assemble_conversations
-from dedup.operators.exact import exact_duplicate_groups
-from dedup.operators.candidates import candidate_pairs, prepare_docs
-from dedup.operators.verify import verify_pairs
-from dedup.operators.cluster import connected_components
-from dedup.operators.grouping import group_argmax_unique, grouped_top_k
-
-__all__ = [
-    "assemble_conversations",
-    "exact_duplicate_groups",
-    "candidate_pairs",
-    "prepare_docs",
-    "verify_pairs",
-    "connected_components",
-    "group_argmax_unique",
-    "grouped_top_k",
-]
+"""DataFrame operators, one module per pipeline stage."""

@@ -41,19 +41,6 @@ def escape_turn_text(c: F.Column | str) -> F.Column:
     )
 
 
-def unescape_turn_text(c: F.Column | str) -> F.Column:
-    """Exact inverse of escape_turn_text: split on escaped backslashes
-    (so every remaining '\\n' pair is an escaped newline), decode inside
-    each piece, rejoin with single backslashes. Unambiguous left-to-right
-    decode without a UDF."""
-    col = F.col(c) if isinstance(c, str) else c
-    pieces = F.split(col, r"\\\\", -1)  # regex: two literal backslashes
-    return F.array_join(
-        F.transform(pieces, lambda p: F.replace(p, F.lit("\\n"), F.lit("\n"))),
-        "\\",
-    )
-
-
 def assemble_conversations(
     transcripts: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
@@ -82,13 +69,3 @@ def assemble_conversations(
         F.min("ts").alias("first_ts"),
     )
 
-
-def explode_conversations(assembled: DataFrame) -> DataFrame:
-    """Inverse of assembly (modulo ordering metadata): doc_text -> one row
-    per turn with its 0-based position. Drives the per-turn text-equality
-    invariant test."""
-    turns = F.split(F.col("doc_text"), TURN_SEP)
-    return assembled.select(
-        "conv_id",
-        F.posexplode(turns).alias("turn_pos", "text"),
-    ).withColumn("text", unescape_turn_text("text"))

@@ -58,30 +58,3 @@ def prediction_accuracy(
     )
     return agg.first()
 
-
-def dup_pair_metrics(
-    truth_clusters: DataFrame, got_clusters: DataFrame, id_col: str = "conv_id"
-) -> Row:
-    """Distributed dup-pair recall/precision: same-cluster unordered pairs
-    from each side via self-joins (never collected to the driver -- the
-    pytest-scale pandas version lives in tests)."""
-
-    def pairs(df: DataFrame, cl: str) -> DataFrame:
-        a = df.select(F.col(id_col).alias("id_a"), F.col(cl).alias("c"))
-        b = df.select(F.col(id_col).alias("id_b"), F.col(cl).alias("c"))
-        return (
-            a.join(b, "c").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-        )
-
-    tp = pairs(truth_clusters, "cluster_id")
-    gp = pairs(got_clusters, "cluster_id")
-    n_t = tp.count()
-    n_g = gp.count()
-    n_i = tp.join(gp, ["id_a", "id_b"], "left_semi").count()
-    return Row(
-        truth_pairs=n_t,
-        got_pairs=n_g,
-        matched_pairs=n_i,
-        recall=(n_i / n_t) if n_t else 1.0,
-        precision=(n_i / n_g) if n_g else 1.0,
-    )

@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.similarity import (
     bag_l1_col,
+    bigram_gated_staged_ratio_udf,
     char_count_vector_udf,
     exact_jaccard_col,
     minhash_estimate_col,
@@ -181,22 +182,15 @@ def verify_pairs(
     jac_ok = F.col("jaccard") >= F.lit(config.jaccard_threshold)
 
     # ---- phase 2b: Levenshtein for pairs both sketches rejected -------
-    # DP admission is gated by EXACT byte-bigram lower bounds computed
+    # DP admission is gated by an EXACT 3-gram count bound computed
     # PAIR-SIDE inside the staged UDF (bigram_gated_staged_ratio_udf): one
-    # unit indel changes <= 3 bigram counts, so L1 > 3 * dmax proves the
+    # unit indel changes <= 5 3-gram counts, so L1 > 5 * dmax proves the
     # direct ratio can never clear the threshold, and the same bound over
     # TOKEN-SORTED text proves it for the token-sort fallback -- a pair is
     # DP'd only if EITHER path remains arithmetically possible (zero
-    # recall loss). Unlike the unigram bag bound (which boilerplate-
-    # similar byte histograms pass wholesale -- measured 427k DP
-    # admissions with 0 acceptances), bigrams see ORDER, so reworded
-    # boilerplate dies here. The earlier doc-side variant joined 256-int
-    # vectors onto both pair sides -- two UDF passes over ALL docs plus
-    # two join exchanges to pre-gate a post-sketch pair population that is
-    # already small; pair-side counting costs O(len) per pair and deletes
-    # both exchanges from the plan.
-    from dedup.functions.similarity import bigram_gated_staged_ratio_udf
-
+    # recall loss). The bag bound above passes boilerplate-similar pairs
+    # wholesale (their byte histograms match); their 3-gram counts do not,
+    # so reworded boilerplate dies here without a DP.
     need_lev = scored.filter(
         ~jac_ok
         & ~sim_ok

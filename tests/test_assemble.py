@@ -1,13 +1,36 @@
 """Conversation assembly: stable turn ordering + the per-turn text
 equality invariant (input_hint): re-exploding assembled docs reproduces the
-source rows exactly under (conv_id, turn_idx)."""
+source rows exactly under (conv_id, turn_idx). The inverse of assembly
+(``explode_conversations``) lives here, as the round-trip oracle."""
 
 from datetime import datetime
 
 import pyspark.sql.functions as F
 
 from dedup.generate import make_corpus
-from dedup.operators.assemble import assemble_conversations, explode_conversations
+from dedup.operators.assemble import TURN_SEP, assemble_conversations
+
+
+def unescape_turn_text(c: F.Column | str) -> F.Column:
+    """Exact inverse of escape_turn_text: split on escaped backslashes
+    (so every remaining '\\n' pair is an escaped newline), decode inside
+    each piece, rejoin with single backslashes."""
+    col = F.col(c) if isinstance(c, str) else c
+    pieces = F.split(col, r"\\\\", -1)  # regex: two literal backslashes
+    return F.array_join(
+        F.transform(pieces, lambda p: F.replace(p, F.lit("\\n"), F.lit("\n"))),
+        "\\",
+    )
+
+
+def explode_conversations(assembled):
+    """Inverse of assembly (modulo ordering metadata): doc_text -> one row
+    per turn with its 0-based position."""
+    turns = F.split(F.col("doc_text"), TURN_SEP)
+    return assembled.select(
+        "conv_id",
+        F.posexplode(turns).alias("turn_pos", "text"),
+    ).withColumn("text", unescape_turn_text("text"))
 
 
 def test_assembly_orders_by_turn_idx(spark, config):

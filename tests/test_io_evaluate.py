@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from dedup.io import TRUTH_MAPPING, read_titles_csv, write_predictions_csv
-from dedup.operators.evaluate import dup_pair_metrics, prediction_accuracy
+from dedup.operators.evaluate import prediction_accuracy
 
 
 def test_read_titles_csv_mapping_and_cast(spark, tmp_path):
@@ -71,17 +71,3 @@ def test_prediction_accuracy_buckets_and_custom_error(spark):
     assert r["incorrectly_not_found"] == 1   # q3
     assert r["custom_error"] == 1 + 5 * 1    # reference cli.py:128-129
 
-
-def test_dup_pair_metrics(spark):
-    truth = spark.createDataFrame(
-        [("a", 1), ("b", 1), ("c", 2), ("d", 2), ("e", 3)],
-        "conv_id string, cluster_id long",
-    )
-    got = spark.createDataFrame(
-        [("a", 1), ("b", 1), ("c", 9), ("d", 8), ("e", 8)],
-        "conv_id string, cluster_id long",
-    )
-    m = dup_pair_metrics(truth, got)
-    assert m["truth_pairs"] == 2 and m["got_pairs"] == 2
-    assert m["matched_pairs"] == 1
-    assert m["recall"] == 0.5 and m["precision"] == 0.5

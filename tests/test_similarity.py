@@ -2,6 +2,7 @@
 staged D4->D2->D5 gate chain (/root/reference/doppelspeller/predict.py:140-156).
 """
 
+import collections
 import random
 
 import numpy as np
@@ -247,32 +248,63 @@ def test_bag_gate_keeps_turn_segmentation_duplicates(spark):
     assert row["l1"] <= row["total"] * (1 - 94 / 100.0)  # bag_ok: kept
 
 
+def _trigram_counts(s: str) -> collections.Counter:
+    b = s.encode()
+    return collections.Counter(b[i : i + 3] for i in range(len(b) - 2))
+
+
 def test_bigram_l1_lower_bounds_indel_distance():
-    """The byte-bigram L1 must lower-bound 3x the indel distance for both
-    ratio paths (direct on raw text; token-sorted text for the fallback) --
-    the DP admission gate in verify.py is only sound if this holds."""
-    import random
-
-    import numpy as np
-
-    from dedup.functions.similarity import indel_distance_str, token_sort_py
-
-    def bgv(s, bins=256):
-        b = np.frombuffer(s.encode(), dtype=np.uint8)
-        if len(b) < 2:
-            return np.zeros(bins, dtype=np.int64)
-        big = (b[:-1].astype(np.uint32) << 8) | b[1:]
-        return np.bincount(big % bins, minlength=bins)
+    """The DP admission bound of bigram_gated_staged_ratio_udf: the L1
+    between exact byte 3-gram counts (_trigram_l1) equals a Counter
+    oracle and is at most 5x the indel distance, on both ratio paths
+    (direct texts; token-sorted texts for the fallback). Covers empty,
+    1-2 char and non-ASCII strings -- the gate is only sound if this
+    holds."""
+    from dedup.functions.similarity import _trigram_l1
 
     rng = random.Random(31)
-    for _ in range(400):
-        x = "".join(rng.choice("abcd \n") for _ in range(rng.randint(0, 50)))
-        y = "".join(rng.choice("abcd \n") for _ in range(rng.randint(0, 50)))
-        l1 = int(np.abs(bgv(x) - bgv(y)).sum())
-        assert l1 <= 3 * indel_distance_str(x, y), (x, y)
-        xs, ys = token_sort_py(x), token_sort_py(y)
-        l1s = int(np.abs(bgv(xs) - bgv(ys)).sum())
-        assert l1s <= 3 * indel_distance_str(xs, ys), (xs, ys)
+    alphabets = ["abcd \n", "ab c\u00e9\u6771\U0001f642 "]
+    for i in range(600):
+        alphabet = alphabets[i % 2]
+        x = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 50)))
+        if i % 3:
+            y = _mutate(rng, x, alphabet, rng.randint(0, 6))
+        else:
+            y = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 3)))
+        for a, b in ((x, y), (token_sort_py(x), token_sort_py(y))):
+            ca, cb = _trigram_counts(a), _trigram_counts(b)
+            l1 = _trigram_l1(a, b)
+            assert l1 == sum(((ca - cb) + (cb - ca)).values()), (a, b)
+            assert l1 <= 5 * indel_distance_str(a, b), (a, b)
+
+
+def test_trigram_bound_rejects_anagrammed_words(spark):
+    """A pair whose byte histograms are identical -- every word of one text
+    is an anagram of the other's -- passes a byte-count bound on both
+    paths, so such a bound runs both capped DPs and returns their capped
+    ratio (94 here). Its 3-gram counts differ on both paths (L1 ~1.4k
+    against a limit of ~480), so the exact bound skips both DPs and the
+    UDF returns 0."""
+    from dedup.functions.similarity import bigram_gated_staged_ratio_udf
+
+    rng = random.Random(5)
+    words = []
+    while sum(len(w) + 1 for w in words) < 800:
+        words.append("".join(rng.sample("abcdefghijklmnoprstuvwy", rng.randint(4, 8))))
+
+    def anagram(w):
+        while True:
+            v = "".join(rng.sample(w, len(w)))
+            if v != w:
+                return v
+
+    a = " ".join(words)
+    b = " ".join(anagram(w) for w in words)
+    assert len(a) >= 500 and sorted(a) == sorted(b)
+    assert staged_ratio_py(a, b, 94) <= 94
+    df = spark.createDataFrame([(a, b)], "ta string, tb string")
+    got = df.select(bigram_gated_staged_ratio_udf("ta", "tb", DedupConfig()).alias("r"))
+    assert got.first()["r"] == 0
 
 
 def test_bitparallel_early_exit_parity():
@@ -301,10 +333,12 @@ def test_bitparallel_early_exit_parity():
 
 
 def test_bigram_gated_udf_above_threshold_parity(spark):
-    """r6 per-path DP admission: for every pair, the gated UDF's value
-    must equal staged_ratio_py whenever EITHER is above the threshold
-    (exact bounds, no false skips); below the threshold both must stay
-    below it (the only contract verify.py's filter relies on)."""
+    """Per-path DP admission: for every pair, the gated UDF's value must
+    equal staged_ratio_py whenever EITHER is above the threshold (exact
+    bounds, no false skips); below the threshold both must stay below it
+    (the only contract verify.py's filter relies on). 160 of the 400 pairs
+    are near the threshold (staged ratio 90-98) on either path: direct
+    edits, or shuffled word order plus edits for the token-sort fallback."""
     import random
 
     import pyspark.sql.functions as F
@@ -334,13 +368,27 @@ def test_bigram_gated_udf_above_threshold_parity(spark):
         toks = base.split()
         rng.shuffle(toks)
         rows.append((base, " ".join(toks)))
+    near = 0
+    while near < 160:
+        base = " ".join(rng.choice(words) for _ in range(rng.randint(20, 80)))
+        toks = base.split()
+        if near % 2:
+            rng.shuffle(toks)
+        edits = max(1, int(len(base) * rng.uniform(0.005, 0.05)))
+        mutated = _mutate(rng, " ".join(toks), "abcdez ", edits)
+        if 90 <= staged_ratio_py(base, mutated, thr) <= 98:
+            rows.append((base, mutated))
+            near += 1
     df = spark.createDataFrame(rows, "ta string, tb string")
     got = df.select(
         "ta", "tb", bigram_gated_staged_ratio_udf("ta", "tb", cfg).alias("r")
     ).collect()
+    above = 0
     for row in got:
         want = staged_ratio_py(row["ta"], row["tb"], thr)
         if want > thr or row["r"] > thr:
             assert row["r"] == want, (row["ta"], row["tb"], row["r"], want)
+            above += 1
         else:
             assert row["r"] <= thr and want <= thr
+    assert above >= 100
