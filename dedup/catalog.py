@@ -9,8 +9,10 @@ pyspark, so the same call-site API is backed by a parquet shim:
   * a ``_MANIFEST.json`` inside the committed directory records run_id,
     stage name, config fingerprint, schema, total rows, and per-partition
     row counts (the lineage the north_rule asks for).
-  * ``exists()`` only trusts a directory containing a valid manifest with a
-    matching config fingerprint -- a torn write is invisible to resume.
+  * ``manifest()`` only trusts a directory containing a valid manifest with
+    a matching config fingerprint -- a torn write is invisible to resume.
+  * ``table()`` reads with the schema the manifest records, so re-reading a
+    committed table runs no Spark job.
 
 The reference has no persistence between stages at all (everything lives in
 one process, /root/reference/doppelspeller/predict.py:274-321); checkpointed
@@ -27,6 +29,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_MANIFEST.json"
 
@@ -52,7 +55,7 @@ class CheckpointCatalog:
     """Stage-table catalog rooted at a warehouse directory.
 
     API intentionally mirrors Iceberg call sites: ``write(name, df)`` /
-    ``table(name)`` / ``exists(name)``; swapping in a real Iceberg catalog
+    ``table(name)`` / ``manifest(name)``; swapping in a real Iceberg catalog
     changes only this class.
     """
 
@@ -77,54 +80,41 @@ class CheckpointCatalog:
         return os.path.join(self.warehouse, name + ".__staging__")
 
     # -- reads ---------------------------------------------------------
-    def exists(self, name: str) -> bool:
-        mf = self._read_manifest(name)
-        if mf is None:
-            return False
-        if self.config_fingerprint and mf.get("config_fingerprint") != self.config_fingerprint:
-            return False
-        return True
-
-    def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
-
-    def manifest(self, name: str) -> dict:
-        mf = self._read_manifest(name)
-        if mf is None:
-            raise FileNotFoundError(f"no committed manifest for stage table {name!r}")
-        return mf
-
-    def _read_manifest(self, name: str) -> dict | None:
-        p = os.path.join(self.path(name), MANIFEST_NAME)
+    def manifest(self, name: str) -> dict | None:
+        """The manifest of committed table ``name``, or None when it has no
+        valid manifest or one written under another config fingerprint: a
+        torn or stale table is invisible to resume."""
         try:
-            with open(p) as fh:
-                return json.load(fh)
+            with open(os.path.join(self.path(name), MANIFEST_NAME)) as fh:
+                mf = json.load(fh)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
+        if self.config_fingerprint and mf.get("config_fingerprint") != self.config_fingerprint:
+            return None
+        return mf
+
+    def table(self, name: str) -> DataFrame:
+        mf = self.manifest(name)
+        if mf is None:
+            raise FileNotFoundError(f"no committed manifest for stage table {name!r}")
+        return self._read(mf)
+
+    def _read(self, mf: dict) -> DataFrame:
+        # read with the schema the manifest records: parquet schema
+        # inference is one Spark job per read. File reads make every field
+        # nullable either way, so the frame's schema equals the inferred one.
+        schema = StructType.fromJson(mf["schema"])
+        return self.spark.read.schema(schema).parquet(self.path(mf["table"]))
 
     # -- writes --------------------------------------------------------
-    def write(
-        self,
-        name: str,
-        df: DataFrame,
-        stage: str | None = None,
-        num_files: int | None = None,
-    ) -> StageResult:
+    def write(self, name: str, df: DataFrame, stage: str | None = None) -> StageResult:
         """Materialize ``df`` as a committed stage table (idempotent commit:
-        staging dir + rename). Returns lineage stats."""
+        staging dir + rename), in the partitioning ``df`` already has: one
+        parquet file per non-empty partition. Returns lineage stats."""
         t0 = time.time()
         staging, final = self._staging(name), self.path(name)
         if os.path.exists(staging):
             shutil.rmtree(staging)
-        if num_files:
-            # repartition, NOT coalesce: coalesce propagates upstream
-            # through narrow deps to the previous shuffle/cache boundary,
-            # collapsing the whole producing job to num_files tasks
-            # (measured: the containment band groupBy serialized onto 4
-            # tasks when the skew-ledger write was coalesce(4)). The
-            # repartition exchange isolates upstream parallelism; for the
-            # small tables this knob is meant for, its shuffle is trivial.
-            df = df.repartition(num_files)
         df.write.mode("overwrite").parquet(staging)
         t_job = time.time()
 
@@ -185,16 +175,12 @@ class CheckpointCatalog:
         )
 
     def write_or_resume(
-        self,
-        name: str,
-        df_fn,
-        stage: str | None = None,
-        **kw,
+        self, name: str, df_fn, stage: str | None = None
     ) -> tuple[DataFrame, StageResult]:
         """Resume point: if a committed, config-matching table exists, skip
         recomputation entirely (``df_fn`` is never invoked)."""
-        if self.exists(name):
-            mf = self.manifest(name)
+        mf = self.manifest(name)
+        if mf is not None:
             res = StageResult(
                 table=name,
                 path=self.path(name),
@@ -203,13 +189,13 @@ class CheckpointCatalog:
                 seconds=0.0,
                 resumed=True,
             )
-            return self.table(name), res
+            return self._read(mf), res
         # time df_fn() too: operators may run eager work (localCheckpoint
         # phase boundaries) while BUILDING the frame, not just writing it
         t0 = time.time()
         df = df_fn()
         t_build = time.time()
-        res = self.write(name, df, stage=stage, **kw)
+        res = self.write(name, df, stage=stage)
         res.seconds = time.time() - t0
         res.breakdown = {"build": round(t_build - t0, 3), **res.breakdown}
         return self.table(name), res

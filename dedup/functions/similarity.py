@@ -116,21 +116,32 @@ def _indel_distance(a: np.ndarray, b: np.ndarray, dmax: int | None = None) -> in
     return _indel_bitparallel(a, b, dmax)
 
 
+def _utf8(s: str) -> np.ndarray:
+    return np.frombuffer(s.encode("utf-8", "ignore"), dtype=np.uint8)
+
+
+def _nbytes(s: str) -> int:
+    """Length in UTF-8 bytes: the unit of the DP and of every length the
+    ratios below divide by (equal to len(s) on ASCII text)."""
+    return len(s.encode("utf-8", "ignore"))
+
+
 def indel_distance_str(x: str, y: str, dmax: int | None = None) -> int:
-    a = np.frombuffer(x.encode("utf-8", "ignore"), dtype=np.uint8)
-    b = np.frombuffer(y.encode("utf-8", "ignore"), dtype=np.uint8)
-    return _indel_distance(a, b, dmax)
+    return _indel_distance(_utf8(x), _utf8(y), dmax)
 
 
 def levenshtein_ratio_py(x: str, y: str, dmax: int | None = None) -> int:
     """int(round(100 * (lx+ly-dist2)/(lx+ly))) -- python-Levenshtein parity
-    (/root/reference/doppelspeller/common.py:161-163). If dist > dmax the
-    kernel returns dmax + 1, so the ratio is an upper bound that stays
-    below any threshold that implied dmax."""
-    total = len(x) + len(y)
+    (/root/reference/doppelspeller/common.py:161-163) on ASCII text; the
+    lengths count UTF-8 bytes, the unit of the DP, so a non-ASCII pair gets
+    its byte-level ratio, always in [0, 100]. If dist > dmax the kernel
+    returns dmax + 1, so the ratio is an upper bound that stays below any
+    threshold that implied dmax."""
+    a, b = _utf8(x), _utf8(y)
+    total = len(a) + len(b)
     if total == 0:
         return 100
-    d = indel_distance_str(x, y, dmax)
+    d = _indel_distance(a, b, dmax)
     return int(np.rint(100.0 * (total - d) / total))
 
 
@@ -140,8 +151,9 @@ def token_sort_py(x: str) -> str:
 
 def staged_ratio_py(x: str, y: str, threshold: int = 94) -> int:
     """Full D4->D2->D5 chain (/root/reference/doppelspeller/predict.py:147-156):
-    deletion-ratio gate, then ratio, token-sort fallback when ratio <= T."""
-    lx, ly = len(x), len(y)
+    deletion-ratio gate, then ratio, token-sort fallback when ratio <= T.
+    Lengths count UTF-8 bytes, as in levenshtein_ratio_py."""
+    lx, ly = _nbytes(x), _nbytes(y)
     total = lx + ly
     if total == 0:
         return 100
@@ -151,7 +163,7 @@ def staged_ratio_py(x: str, y: str, threshold: int = 94) -> int:
     r = levenshtein_ratio_py(x, y, dmax_for(total))
     if r <= threshold:
         xs, ys = token_sort_py(x), token_sort_py(y)
-        return levenshtein_ratio_py(xs, ys, dmax_for(len(xs) + len(ys)))
+        return levenshtein_ratio_py(xs, ys, dmax_for(_nbytes(xs) + _nbytes(ys)))
     return r
 
 
@@ -192,7 +204,7 @@ def levenshtein_ratio_pairs(
         for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
             dmax = None
             if thr is not None:
-                dmax = int(np.floor((len(a) + len(b)) * (1 - thr / 100.0))) + 1
+                dmax = int(np.floor((_nbytes(a) + _nbytes(b)) * (1 - thr / 100.0))) + 1
             out[i] = levenshtein_ratio_py(a, b, dmax)
         return pd.Series(out)
 
@@ -209,29 +221,32 @@ def levenshtein_ratio_pairs(
 
 
 _CCV_BINS = 64
-# bucket 0 is reserved for ALL whitespace bytes (space/tab/LF/CR) and is
-# EXCLUDED from the bag bound: token_sort_py rewrites every whitespace run
-# to a single space, so whitespace counts are NOT invariant under the
-# token-sort fallback (conversation norm_text keeps '\n' turn separators),
-# but non-whitespace byte counts are. Folding whitespace into a skippable
-# bucket keeps the bound exact for BOTH ratio paths.
+# byte -> slot of the folded count vector. Slot 0 holds every ASCII byte
+# str.split() splits on (0x09-0x0D, 0x1C-0x1F, space) and is EXCLUDED from
+# the bag bound: token_sort_py rewrites every whitespace run to a single
+# space, so whitespace counts are NOT invariant under the token-sort
+# fallback (conversation norm_text keeps '\n' turn separators), but
+# non-whitespace byte counts are. Any other byte value goes to
+# 1 + (byte % (_CCV_BINS - 1)). Non-ASCII whitespace is multi-byte and not
+# folded; norm_text is ASCII.
+_CCV_SLOT = 1 + np.arange(256) % (_CCV_BINS - 1)
+_CCV_SLOT[[*range(0x09, 0x0E), *range(0x1C, 0x20), 0x20]] = 0
+
+
+def char_count_vector_py(s: str) -> np.ndarray:
+    """The folded byte-count vector of one text (int32, ``_CCV_BINS``
+    slots; see _CCV_SLOT)."""
+    return np.bincount(_CCV_SLOT[_utf8(s)], minlength=_CCV_BINS).astype(np.int32)
 
 
 def char_count_vector_udf(text: Column | str) -> Column:
-    """Per-DOC folded byte-count vector (array<int> of ``_CCV_BINS``): slot
-    0 counts whitespace bytes, non-whitespace byte values bucket into
-    1 + (byte % (_CCV_BINS-1)). Feeds the exact bag-distance lower bound
-    below; computed once per doc (never per pair)."""
+    """Per-DOC char_count_vector_py as array<int>. Feeds the exact
+    bag-distance lower bound below; computed once per doc (never per
+    pair)."""
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _ccv(xs: pd.Series) -> pd.Series:
-        out = []
-        for s in xs.fillna(""):
-            b = np.frombuffer(s.encode("utf-8", "ignore"), dtype=np.uint8)
-            ws = (b == 0x20) | (b == 0x09) | (b == 0x0A) | (b == 0x0D)
-            folded = np.where(ws, 0, 1 + (b % (_CCV_BINS - 1)))
-            out.append(np.bincount(folded, minlength=_CCV_BINS).astype(np.int32))
-        return pd.Series(out)
+        return pd.Series([char_count_vector_py(s) for s in xs.fillna("")])
 
     c = F.col(text) if isinstance(text, str) else text
     return _ccv(c)
@@ -337,7 +352,7 @@ def bigram_gated_staged_ratio_udf(
         out = np.zeros(len(xs), dtype=np.int32)
         dmax_for = lambda n: int(np.floor(n * frac)) + 1  # noqa: E731
         for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
-            la, lb = len(a), len(b)
+            la, lb = _nbytes(a), _nbytes(b)
             total = la + lb
             if total == 0:
                 out[i] = 100
@@ -353,7 +368,7 @@ def bigram_gated_staged_ratio_udf(
             # direct path is <= thr (computed or proven by its bound);
             # token-sort fallback only if ITS exact bound admits it
             sa, sb = token_sort_py(a), token_sort_py(b)
-            ts = len(sa) + len(sb)
+            ts = _nbytes(sa) + _nbytes(sb)
             if _trigram_l1(sa, sb) <= 5.0 * frac * ts:
                 out[i] = levenshtein_ratio_py(sa, sb, dmax_for(ts))
             else:

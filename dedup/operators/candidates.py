@@ -54,7 +54,7 @@ def prepare_docs(
         else normalize_text_col(text_col, config)
     )
     # CPU-heavy (3 UDF/sketch passes per row) but often byte-small input
-    # (a checkpointed assembled table is a handful of parquet files):
+    # (a transcript scan of a handful of parquet files, or one micro-batch):
     # repartition explicitly or the whole stage runs in 1-2 tasks.
     docs = docs.repartition(config.conv_partitions, id_col)
     # Shingle + distinct + gram-hash + MinHash + SimHash run FUSED inside

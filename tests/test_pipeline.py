@@ -10,6 +10,9 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql.types import StructType
+
+from dedup.catalog import CheckpointCatalog
 from dedup.generate import make_corpus
 from dedup.pipeline import run_pipeline
 
@@ -38,7 +41,7 @@ def test_recall_and_precision(spark, config, corpus, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh"))
     report = run_pipeline(spark, spark.createDataFrame(corpus.transcripts), wh, config)
     assert [s.table for s in report.stages] == [
-        "assembled", "prepared", "exact_groups", "candidate_pairs",
+        "prepared", "exact_groups", "candidate_pairs",
         "verified_pairs", "containment_pairs", "clusters",
     ]
     clusters = spark.read.parquet(f"{wh}/clusters").toPandas()
@@ -63,13 +66,38 @@ def test_resume_mid_stage(spark, config, corpus, tmp_path_factory):
     shutil.rmtree(f"{wh}/clusters")
     report = run_pipeline(spark, tdf, wh, config)
     resumed = {s.table: s.resumed for s in report.stages}
-    assert resumed["assembled"] and resumed["prepared"] and resumed["candidate_pairs"]
+    assert resumed["prepared"] and resumed["candidate_pairs"]
     assert not resumed["verified_pairs"] and not resumed["clusters"]
     assert _content_hashes(f"{wh}/clusters") == before
 
     # full second resume: everything skips
     report2 = run_pipeline(spark, tdf, wh, config)
     assert all(s.resumed for s in report2.stages)
+
+
+def test_committed_table_read_submits_no_job(spark, tmp_path):
+    """Re-reading a committed table takes its schema from the manifest:
+    no parquet schema inference, so no Spark job. The read schema is the
+    inferred one, with every field nullable: a file read relaxes the
+    non-null literal and the non-null array elements of ``t2``."""
+    import pyspark.sql.functions as F
+
+    cat = CheckpointCatalog(spark, str(tmp_path / "wh"), config_fingerprint="f")
+    t1 = spark.createDataFrame([(1, [2, None], "a")], "id long, xs array<int>, s string")
+    cat.write("t1", t1)
+    cat.write("t2", t1.select("id", F.lit(7).alias("k"), F.array(F.lit(1)).alias("ys")))
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-table-read", "read committed tables")
+    try:
+        read = {name: cat.table(name) for name in ("t1", "t2")}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("catalog-table-read")) == []
+    assert read["t1"].schema == StructType.fromJson(cat.manifest("t1")["schema"])
+    for name, df in read.items():
+        assert df.schema == spark.read.parquet(cat.path(name)).schema
+    assert read["t2"].collect() == [(1, 7, [1])]
 
 
 def test_config_change_invalidates_checkpoints(spark, config, corpus, tmp_path_factory):

@@ -133,6 +133,60 @@ def test_staged_matches_reference_composition():
             assert got <= t  # same non-match decision
 
 
+def test_non_ascii_ratios_count_bytes(spark):
+    """Each ratio divides a UTF-8 byte distance by a UTF-8 byte length, so
+    a non-ASCII pair gets its byte-level ratio, in [0, 100]. Counting the
+    length in characters gave levenshtein_ratio_py('\u00e9', 'e') = -50.
+    The staged chain and the gated UDF agree with the byte-level chain
+    above the threshold, on both paths."""
+    from dedup.config import DedupConfig
+    from dedup.functions.similarity import bigram_gated_staged_ratio_udf
+
+    def byte_staged(x, y, t):
+        bx, by = x.encode(), y.encode()
+        total = len(bx) + len(by)
+        if total == 0:
+            return 100
+        if ((total - abs(len(bx) - len(by))) / total) * 100 < t:
+            return 0
+        r = ref_ratio(bx, by)
+        if r <= t:
+            return ref_ratio(token_sort_py(x).encode(), token_sort_py(y).encode())
+        return r
+
+    t = DedupConfig().lev_threshold
+    rng = random.Random(23)
+    alphabet = "ab \u00e9\u00fc\u4e2d\U0001f600"
+    words = ["caf\u00e9", "na\u00efve", "\u4e2d\u6587", "\U0001f600", "ok", "spark"]
+    pairs = [("\u00e9", "e"), ("na\u00efve caf\u00e9", "naive cafe"), ("", "\u00e9")]
+    for _ in range(60):
+        x = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 30)))
+        pairs.append((x, _mutate(rng, x, alphabet, rng.randint(0, 6))))
+    for _ in range(60):
+        toks = [rng.choice(words) for _ in range(rng.randint(5, 12))]
+        x = " ".join(toks)
+        rng.shuffle(toks)
+        pairs.append((x, _mutate(rng, " ".join(toks), "\u00e9a", rng.randint(0, 1))))
+    above = 0
+    for x, y in pairs:
+        r = levenshtein_ratio_py(x, y)
+        assert 0 <= r <= 100 and r == ref_ratio(x.encode(), y.encode()), (x, y, r)
+        want, got = byte_staged(x, y, t), staged_ratio_py(x, y, t)
+        assert 0 <= got <= 100
+        if want > t or got > t:
+            assert got == want, (x, y, got, want)
+            above += 1
+    assert above >= 20
+    rows = spark.createDataFrame(pairs, "ta string, tb string").select(
+        "ta", "tb", bigram_gated_staged_ratio_udf("ta", "tb").alias("r")
+    ).collect()
+    for row in rows:
+        want = staged_ratio_py(row["ta"], row["tb"], t)
+        assert 0 <= row["r"] <= 100
+        if want > t or row["r"] > t:
+            assert row["r"] == want, (row["ta"], row["tb"], row["r"], want)
+
+
 def test_spark_columns_match_python(spark):
     rng = random.Random(5)
     pairs = []
@@ -187,32 +241,29 @@ def test_bag_l1_lower_bounds_indel_distance():
         assert sorted(sb) == sorted(" ".join(b.split()))
 
 
-def _fold_ws(s: str, bins: int = 64):
-    """Mirror of char_count_vector_udf's folding: slot 0 = whitespace,
-    non-ws bytes -> 1 + (byte % (bins-1))."""
-    import numpy as np
-
-    b = np.frombuffer(s.encode(), dtype=np.uint8)
-    ws = (b == 0x20) | (b == 0x09) | (b == 0x0A) | (b == 0x0D)
-    return np.bincount(np.where(ws, 0, 1 + (b % (bins - 1))), minlength=bins)
-
-
 def test_bag_bound_whitespace_agnostic_soundness():
     """The REDUCED bag L1 (whitespace slot excluded) must lower-bound the
     indel distance of BOTH staged-ratio paths -- including the token-sort
-    path on multi-whitespace text, where token_sort_py rewrites '\\n'/'\\t'
-    runs to single spaces and the unreduced bound was unsound (r2 advice)."""
+    path on multi-whitespace text, where token_sort_py rewrites runs of any
+    whitespace str.split() splits on ('\\n', '\\t', vertical tab, form
+    feed, file separator, ...) to single spaces and the unreduced bound was
+    unsound (r2 advice)."""
     import random
 
     import numpy as np
 
-    from dedup.functions.similarity import indel_distance_str, token_sort_py
+    from dedup.functions.similarity import (
+        char_count_vector_py,
+        indel_distance_str,
+        token_sort_py,
+    )
 
     rng = random.Random(7)
+    alphabet = "abc \n\t\x0b\x0c\x1c"
     for _ in range(400):
-        x = "".join(rng.choice("abc \n\t") for _ in range(rng.randint(0, 40)))
-        y = "".join(rng.choice("abc \n\t") for _ in range(rng.randint(0, 40)))
-        l1 = int(np.abs(_fold_ws(x)[1:] - _fold_ws(y)[1:]).sum())
+        x = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40)))
+        y = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40)))
+        l1 = int(np.abs(char_count_vector_py(x)[1:] - char_count_vector_py(y)[1:]).sum())
         assert l1 <= indel_distance_str(x, y)
         assert l1 <= indel_distance_str(token_sort_py(x), token_sort_py(y))
 
@@ -224,7 +275,9 @@ def test_bag_gate_keeps_turn_segmentation_duplicates(spark):
     true duplicate via the token-sort path (ratio 100), and the
     whitespace-agnostic bag bound must keep it. The unreduced bound counted
     the separator-kind mismatch (L1 8 > 0.06 * total 4.2 here) and dropped
-    the edge before the DP."""
+    the edge before the DP. The second pair joins ten words with form feeds,
+    which normalize_text_col keeps and str.split() splits on: a fold that
+    counted only space/tab/LF/CR as whitespace put L1 9 > 0.06 * 112."""
     import pyspark.sql.functions as F
 
     from dedup.functions.similarity import (
@@ -233,19 +286,23 @@ def test_bag_gate_keeps_turn_segmentation_duplicates(spark):
         staged_ratio_py,
     )
 
-    a = "alpha beta\ngamma\ndelta\nepsilon\nzeta"
-    b = "delta epsilon zeta alpha beta gamma"
-    assert staged_ratio_py(a, b, 94) == 100  # true duplicate (token-sort)
-    df = spark.createDataFrame([(a, b)], "ta string, tb string").select(
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    pairs = [
+        ("alpha beta\ngamma\ndelta\nepsilon\nzeta", "delta epsilon zeta alpha beta gamma"),
+        ("\x0c".join(words), " ".join(reversed(words))),
+    ]
+    for a, b in pairs:
+        assert staged_ratio_py(a, b, 94) == 100  # true duplicate (token-sort)
+    df = spark.createDataFrame(pairs, "ta string, tb string").select(
         char_count_vector_udf("ta").alias("ca"),
         char_count_vector_udf("tb").alias("cb"),
         (F.length("ta") + F.length("tb")).alias("total"),
     )
-    row = df.select(
-        bag_l1_col("ca", "cb").alias("l1"), F.col("total")
-    ).first()
-    assert row["l1"] == 0  # non-ws content identical
-    assert row["l1"] <= row["total"] * (1 - 94 / 100.0)  # bag_ok: kept
+    rows = df.select(bag_l1_col("ca", "cb").alias("l1"), F.col("total")).collect()
+    assert [r["total"] for r in rows] == [70, 112]
+    for row in rows:
+        assert row["l1"] == 0  # non-ws content identical
+        assert row["l1"] <= row["total"] * (1 - 94 / 100.0)  # bag_ok: kept
 
 
 def _trigram_counts(s: str) -> collections.Counter:
