@@ -388,7 +388,7 @@ def q_lev_verify(spark, sf_dir):
 
 # containment entry runs at a smaller window so the planted 258-char
 # prefixes carry a full window; semantic thresholds stay at defaults.
-CONT_CFG = CFG.with_(containment_window=64, containment_stride=32)
+CONT_CFG = CFG.with_(containment_stride=32)
 _PFX_CHARS = 258
 
 

@@ -41,9 +41,8 @@ class DedupConfig:
     max_chars: int = 32768
 
     # --- MinHash / LSH ---
-    num_perm: int = 128          # signature length
     lsh_bands: int = 32          # b bands ...
-    lsh_rows: int = 4            # ... of r rows each; b*r == num_perm
+    lsh_rows: int = 4            # ... of r rows each: num_perm = b*r
     minhash_seed: int = 709     # deterministic permutation table seed
 
     # --- verification thresholds ---
@@ -94,8 +93,7 @@ class DedupConfig:
     lsh_noise_group_size: int = 16
 
     # --- long-span containment (windowed sketches + substring verify) ---
-    containment_window: int = 256      # grams per window sketch
-    containment_stride: int = 128
+    containment_stride: int = 128      # window = 2 * stride grams
     containment_min_grams: int = 64    # shorter docs are noise, skip
     containment_threshold: float = 0.9  # |short ∩ long| / |short|
     containment_lcs_ratio: float = 0.8  # LCS-substring / len(short) fallback
@@ -124,7 +122,6 @@ class DedupConfig:
     #              pairs got outranked by background at the partner caps)
     # 48/24x2 is the knee: every planted pair kept, least background
     # among the zero-miss geometries, ~2.7x less sketch compute.
-    containment_num_perm: int = 48
     containment_lsh_bands: int = 24
     containment_lsh_rows: int = 2
     # minimum distinct window-band collisions for a pair to become a
@@ -214,17 +211,6 @@ class DedupConfig:
                 f"k_shingle ({self.k_shingle}) must be in [1, 8]: the gram "
                 "byte-code encoding is only injective up to 8 bytes"
             )
-        if self.lsh_bands * self.lsh_rows != self.num_perm:
-            raise ValueError(
-                f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
-                f"must equal num_perm ({self.num_perm})"
-            )
-        if self.containment_lsh_bands * self.containment_lsh_rows != self.containment_num_perm:
-            raise ValueError(
-                f"containment_lsh_bands*containment_lsh_rows "
-                f"({self.containment_lsh_bands}*{self.containment_lsh_rows}) "
-                f"must equal containment_num_perm ({self.containment_num_perm})"
-            )
         if self.containment_num_perm > self.num_perm:
             # the window sketch reuses the PREFIX of the whole-doc
             # permutation table (one deterministic family, one seed)
@@ -232,14 +218,23 @@ class DedupConfig:
                 f"containment_num_perm ({self.containment_num_perm}) must "
                 f"not exceed num_perm ({self.num_perm})"
             )
-        if self.containment_window != 2 * self.containment_stride:
-            # the containment windower composes each window's MinHash from
-            # two adjacent non-overlapping stride blocks (min of MinHashes
-            # == MinHash of the union), which is exact iff w == 2*s
-            raise ValueError(
-                f"containment_window ({self.containment_window}) must be "
-                f"2 * containment_stride ({self.containment_stride})"
-            )
+
+    @property
+    def num_perm(self) -> int:
+        """MinHash signature length: one slice of lsh_rows per band."""
+        return self.lsh_bands * self.lsh_rows
+
+    @property
+    def containment_num_perm(self) -> int:
+        """Window-sketch signature length, a prefix of the whole-doc table."""
+        return self.containment_lsh_bands * self.containment_lsh_rows
+
+    @property
+    def containment_window(self) -> int:
+        """Grams per window sketch. The windower composes each window's
+        MinHash from two adjacent stride blocks (min of MinHashes == MinHash
+        of the union), which is exact only at twice the stride."""
+        return 2 * self.containment_stride
 
     # Deterministic (a, b) permutation parameters for MinHash:
     # h_i(x) = ((a_i * x + b_i) mod p) with p = 2^61-1, a_i in [1, p),

@@ -149,6 +149,13 @@ def token_sort_py(x: str) -> str:
     return " ".join(sorted(x.split()))
 
 
+def _dmax(total: int, threshold: float) -> int:
+    """DP cap for a pair of ``total`` bytes: a ratio above ``threshold``
+    needs an indel distance below (1 - threshold/100) * total, so any
+    distance past this cap proves the ratio does not clear it."""
+    return int(np.floor(total * (1 - threshold / 100.0))) + 1
+
+
 def staged_ratio_py(x: str, y: str, threshold: int = 94) -> int:
     """Full D4->D2->D5 chain (/root/reference/doppelspeller/predict.py:147-156):
     deletion-ratio gate, then ratio, token-sort fallback when ratio <= T.
@@ -159,11 +166,10 @@ def staged_ratio_py(x: str, y: str, threshold: int = 94) -> int:
         return 100
     if ((total - abs(lx - ly)) / total) * 100 < threshold:
         return 0
-    dmax_for = lambda n: int(np.floor(n * (1 - threshold / 100.0))) + 1
-    r = levenshtein_ratio_py(x, y, dmax_for(total))
+    r = levenshtein_ratio_py(x, y, _dmax(total, threshold))
     if r <= threshold:
         xs, ys = token_sort_py(x), token_sort_py(y)
-        return levenshtein_ratio_py(xs, ys, dmax_for(_nbytes(xs) + _nbytes(ys)))
+        return levenshtein_ratio_py(xs, ys, _dmax(_nbytes(xs) + _nbytes(ys), threshold))
     return r
 
 
@@ -202,9 +208,7 @@ def levenshtein_ratio_pairs(
     def _ratio(xs: pd.Series, ys: pd.Series) -> pd.Series:
         out = np.empty(len(xs), dtype=np.int32)
         for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
-            dmax = None
-            if thr is not None:
-                dmax = int(np.floor((_nbytes(a) + _nbytes(b)) * (1 - thr / 100.0))) + 1
+            dmax = None if thr is None else _dmax(_nbytes(a) + _nbytes(b), thr)
             out[i] = levenshtein_ratio_py(a, b, dmax)
         return pd.Series(out)
 
@@ -350,7 +354,6 @@ def bigram_gated_staged_ratio_udf(
     @F.pandas_udf(IntegerType())
     def _gated(xs: pd.Series, ys: pd.Series) -> pd.Series:
         out = np.zeros(len(xs), dtype=np.int32)
-        dmax_for = lambda n: int(np.floor(n * frac)) + 1  # noqa: E731
         for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
             la, lb = _nbytes(a), _nbytes(b)
             total = la + lb
@@ -361,7 +364,7 @@ def bigram_gated_staged_ratio_udf(
                 continue
             r = 0
             if _trigram_l1(a, b) <= 5.0 * frac * total:
-                r = levenshtein_ratio_py(a, b, dmax_for(total))
+                r = levenshtein_ratio_py(a, b, _dmax(total, thr))
                 if r > thr:
                     out[i] = r
                     continue
@@ -370,7 +373,7 @@ def bigram_gated_staged_ratio_udf(
             sa, sb = token_sort_py(a), token_sort_py(b)
             ts = _nbytes(sa) + _nbytes(sb)
             if _trigram_l1(sa, sb) <= 5.0 * frac * ts:
-                out[i] = levenshtein_ratio_py(sa, sb, dmax_for(ts))
+                out[i] = levenshtein_ratio_py(sa, sb, _dmax(ts, thr))
             else:
                 out[i] = r  # <= thr, as is the provably-gated true fallback
         return pd.Series(out)

@@ -24,7 +24,8 @@ Per-batch cost contract (the scale property this module exists for):
     cannot make a micro-batch quadratic.
   * Verification fetches heavy columns (gram hashes, text) only for docs
     that actually appear in a candidate pair (broadcast semi-join on pair
-    ids), so the corpus' fat columns never shuffle per batch.
+    ids), so the corpus' fat columns never shuffle per batch. The fetch
+    runs once, into the checkpoint verify reads.
 
 On Iceberg this consumes incremental snapshots; here the "append" is any
 DataFrame of new transcripts. The same shape drives the Structured
@@ -45,6 +46,18 @@ from dedup.operators.verify import verify_pairs
 from dedup.tracking import register
 
 
+def latest_rows(df: DataFrame) -> DataFrame:
+    """One row per ``doc_id``: the row of its highest ``batch``, which is
+    dropped. A conversation re-prepared in a later batch supersedes its
+    older partial rows."""
+    w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "batch")
+    )
+
+
 @dataclass
 class IncrementalResult:
     new_prepared: DataFrame       # sketches of the appended conversations
@@ -55,42 +68,39 @@ class IncrementalResult:
 
 def incremental_dedup(
     new_transcripts: DataFrame,
-    existing_prepared: DataFrame | None,
-    existing_bands: DataFrame | None,
+    existing_prepared: DataFrame,
+    existing_bands: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
 ) -> IncrementalResult:
     """Dedup appended conversations against an existing prepared corpus.
 
-    ``existing_bands``: the corpus band-postings table (doc_id,
-    band_hash), the only way the corpus is searched. ``existing_prepared``
-    and ``existing_bands`` are both None for an empty corpus (the first
-    batch of a stream).
+    ``existing_prepared``: the corpus sketches, ``prepare_docs`` columns
+    plus a ``batch`` version; per doc_id the highest batch wins
+    (``latest_rows``). ``existing_bands``: the corpus band postings
+    (doc_id, band_hash), the only way the corpus is searched. For an empty
+    corpus both are empty frames; there is no separate first-batch path.
 
     Returns the new side's sketches + band postings (callers append both
     to their corpus tables) and verified duplicate edges touching the new
     docs, plus the skew-cap ledger. Its checkpoints are registered
     (dedup/tracking.py): run it and the writes of its results inside one
     scope."""
-    if (existing_prepared is None) != (existing_bands is None):
-        raise ValueError("pass both existing_prepared and existing_bands, or neither")
     assembled = assemble_conversations(new_transcripts, config)
     new_prepared = prepare_docs(assembled, "conv_id", "doc_text", config)
-    # consumed by: band postings, the new-doc filter, verify join, and the
-    # caller's corpus append -- localCheckpoint so the sketch UDFs run once.
+    # consumed by: band postings, the new-doc filter, verify's input, and
+    # the caller's corpus append -- localCheckpoint so the sketch UDFs run
+    # once. The postings are a narrow native explode over it, cheaper to
+    # re-run per consumer than to checkpoint.
     new_prepared = register(new_prepared.localCheckpoint())
-    new_bands = register(band_postings(new_prepared, config).localCheckpoint())
+    new_bands = band_postings(new_prepared, config)
     new_ids = F.broadcast(new_prepared.select("doc_id"))
 
-    postings = new_bands
-    if existing_bands is not None:
-        # corpus postings on the batch's band keys; a doc this batch
-        # re-prepares drops its superseded postings (anti-join)
-        new_keys = F.broadcast(new_bands.select("band_hash").dropDuplicates())
-        touched = existing_bands.join(new_keys, ["band_hash"], "left_semi").join(
-            new_ids, "doc_id", "left_anti"
-        )
-        postings = new_bands.unionByName(touched)
-    res = candidate_pairs(postings, config)
+    # corpus postings on the batch's band keys; a doc this batch
+    # re-prepares drops its superseded postings (anti-join)
+    touched = existing_bands.join(
+        F.broadcast(new_bands.select("band_hash")), "band_hash", "left_semi"
+    ).join(new_ids, "doc_id", "left_anti")
+    res = candidate_pairs(new_bands.unionByName(touched), config)
 
     # touched groups also fan out old x old pairs: keep those touching a new doc
     is_new = new_prepared.select("doc_id", F.lit(True).alias("new"))
@@ -102,41 +112,23 @@ def incremental_dedup(
         .localCheckpoint()
     )
 
-    both = new_prepared
-    if existing_prepared is not None:
-        # heavy columns only for docs that appear in a pair: the corpus'
-        # gram arrays / text never shuffle per batch.
-        pair_ids = (
-            pairs.select(F.col("id_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-            .dropDuplicates()
-        )
-        existing_needed = existing_prepared.join(
-            F.broadcast(pair_ids), "doc_id", "left_semi"
-        )
-        # SUPERSEDE semantics (cross-batch conversation assembly): when the
-        # caller's corpus carries a ``batch`` version column, a doc
-        # re-prepared in a later batch supersedes its older partial rows --
-        # latest wins. The window runs AFTER the semi-join prune, so it only
-        # ever sorts the handful of fetched rows, preserving the O(batch)
-        # contract.
-        if "batch" in existing_needed.columns:
-            w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
-            existing_needed = (
-                existing_needed.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "batch")
-            )
-        # deterministic new-wins union: a re-seen doc exists on BOTH sides
-        # (its re-prepared full version in new_prepared, its superseded
-        # partial in the corpus); verification must see the new version,
-        # never an arbitrary dropDuplicates winner.
-        existing_only = existing_needed.join(new_ids, "doc_id", "left_anti")
-        both = new_prepared.unionByName(existing_only).dropDuplicates(["doc_id"])
-    verified = verify_pairs(pairs, both, config)
+    # verify's input, fetched once: the new docs plus the latest version of
+    # each corpus doc that appears in a pair. Heavy columns come only for
+    # those docs, so the corpus' gram arrays / text never shuffle per
+    # batch, and the latest-wins window sorts only the fetched rows. A
+    # re-seen doc exists on both sides; its re-prepared version in
+    # new_prepared wins (anti-join). verify_pairs reads its input three
+    # times (sketch, gram and text sides): the checkpoint runs the fetch once.
+    pair_ids = pairs.select(F.col("id_a").alias("doc_id")).unionByName(
+        pairs.select(F.col("id_b").alias("doc_id"))
+    )
+    fetched = latest_rows(
+        existing_prepared.join(F.broadcast(pair_ids), "doc_id", "left_semi")
+    ).join(new_ids, "doc_id", "left_anti")
+    docs = register(new_prepared.unionByName(fetched).localCheckpoint())
     return IncrementalResult(
         new_prepared=new_prepared,
         new_bands=new_bands,
-        verified_pairs=verified,
+        verified_pairs=verify_pairs(pairs, docs, config),
         band_skew=res.band_skew,
     )

@@ -4,9 +4,11 @@ each stage checkpointed to a catalog table (resume = skip committed stages)
 and a metrics table of per-stage lineage.
 
 The stage order is the reference's cheapest-first cascade philosophy
-(/root/reference/doppelspeller/predict.py:274-321) at corpus scale:
-identical docs never reach MinHash; non-candidates never reach
-verification; verification never reaches clustering.
+(/root/reference/doppelspeller/predict.py:274-321) at corpus scale.
+``prepare_docs`` sketches every doc; the exact tier then keeps all but one
+representative of each identical group out of LSH banding and
+verification; non-candidates never reach verification; verification never
+reaches clustering.
 """
 
 from __future__ import annotations

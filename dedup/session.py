@@ -1,5 +1,5 @@
-"""SparkSession factory: Arrow on, AQE on, Iceberg catalog when the runtime
-jar is present, parquet-shim catalog otherwise (dedup.catalog).
+"""SparkSession factory: Arrow on, AQE on. Stage tables go through the
+parquet shim in dedup/catalog.py; the session itself configures no catalog.
 
 Design notes (scale): AQE handles runtime partition coalescing and skew-join
 splitting; ``spark.sql.shuffle.partitions`` is a starting point that AQE
@@ -8,7 +8,6 @@ re-plans. Arrow batch size bounds Python-UDF memory per batch.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import SparkSession
@@ -16,19 +15,10 @@ from pyspark.sql import SparkSession
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 
 
-def iceberg_jar_available() -> bool:
-    import pyspark
-
-    return bool(
-        glob.glob(os.path.join(os.path.dirname(pyspark.__file__), "jars", "*iceberg*"))
-    )
-
-
 def get_spark(
     app_name: str = "transcript-dedup",
     master: str | None = None,
     config: DedupConfig = DEFAULT_CONFIG,
-    warehouse: str | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
@@ -90,14 +80,5 @@ def get_spark(
             .config(
                 "spark.executorEnv.PYTHONPATH", os.environ.get("PYTHONPATH", "")
             )
-        )
-    if iceberg_jar_available() and warehouse:
-        # Primary path on a real cluster: a named Iceberg catalog.
-        builder = (
-            builder.config(
-                "spark.sql.catalog.dedup", "org.apache.iceberg.spark.SparkCatalog"
-            )
-            .config("spark.sql.catalog.dedup.type", "hadoop")
-            .config("spark.sql.catalog.dedup.warehouse", warehouse)
         )
     return builder.getOrCreate()

@@ -17,6 +17,18 @@ re-joined -- the checkpointed corpus table IS the right state store, and
 foreachBatch gives exactly-once appends against it (sink-side idempotence
 via batch-id subdirectories).
 
+STATE READ RULE (``_read_state``, the one reader for the micro-batch and
+the consumer views): a state table is read with its declared schema
+(``STATE_DDL``), so no read runs a schema-inference job. Inside micro-batch
+N it returns only the rows of other batches (``batch != N``); a table with
+no such batch yet -- the first batch, or a table a crash left unwritten --
+is an empty frame of the same schema. Every batch, the first included,
+therefore runs the same plan. A replayed batch N (a restart after a crash
+before its commit) sees exactly the state the original attempt saw: its own
+half-written directories are invisible to its reads and overwritten by its
+writes, and the first batch's fingerprint stamp is decided by the same
+listing (does ``corpus_prepared`` hold another batch?), not by a Spark job.
+
 CROSS-BATCH CONVERSATION ASSEMBLY (turn-level arrival): a conversation's
 turns may arrive in different micro-batches. Every batch's raw turns are
 persisted to an append-only ``turns`` state table; when a conv_id is
@@ -48,11 +60,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from dedup.config import DedupConfig, DEFAULT_CONFIG
-from dedup.incremental import incremental_dedup
+from dedup.incremental import incremental_dedup, latest_rows
 from dedup.tracking import register, scope
 
 TRANSCRIPT_DDL = (
@@ -61,10 +73,23 @@ TRANSCRIPT_DDL = (
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 FINGERPRINT_FILE = "config_fingerprint"
-PREPARED_COLS = ["doc_id", "norm_text", "gram_hashes", "minhash", "simhash"]
-# (doc_id, band_hash): band_idx is folded into the hash -- see
-# dedup/operators/candidates.py::band_postings and config.SKETCH_FORMAT_VERSION
-BAND_COLS = ["doc_id", "band_hash"]
+# Declared schema of every state table that is read back: its producer's
+# output (TRANSCRIPT_DDL, prepare_docs, band_postings, verify_pairs). The
+# batch=<id> directory level reads as the ``batch`` column.
+STATE_DDL = {
+    "turns": TRANSCRIPT_DDL,
+    "corpus_prepared": (
+        "doc_id string, norm_text string, gram_hashes array<bigint>, "
+        "minhash array<bigint>, simhash bigint"
+    ),
+    # (doc_id, band_hash): band_idx is folded into the hash -- see
+    # dedup/operators/candidates.py::band_postings and config.SKETCH_FORMAT_VERSION
+    "corpus_bands": "doc_id string, band_hash bigint",
+    "stream_edges": (
+        "id_a string, id_b string, jaccard double, hamming int, "
+        "lev_ratio int, tier string"
+    ),
+}
 
 
 def read_transcript_stream(
@@ -77,47 +102,40 @@ def read_transcript_stream(
     )
 
 
-def _read_state(
-    spark: SparkSession, path: str, cols: list[str], with_batch: bool = False
-) -> DataFrame | None:
-    """Read an append-only batch-directory state table; None only when the
-    table genuinely does not exist yet (first batch). Emptiness is decided
-    STRUCTURALLY (does any batch=* subdirectory hold a parquet file?), not
-    by parsing AnalysisException message text -- error-class strings vary
-    across Spark versions and a mismatch would break first-batch bootstrap.
-    Any read failure on a non-empty table (corrupt file from a crashed
-    write, permission error) propagates so the stream fails loudly instead
-    of silently deduping against nothing."""
-    if not os.path.isdir(path):
-        return None
-    has_data = any(
-        f.endswith(".parquet")
-        for _root, _dirs, files in os.walk(path)
-        for f in files
+def _has_batches(path: str, batch_id: int | None) -> bool:
+    """Does a batch=<id> directory other than ``batch_id``'s hold a parquet
+    file? A directory listing: a torn write's ``_temporary`` files sit one
+    level deeper and do not count."""
+    own = f"batch={batch_id}"
+    return os.path.isdir(path) and any(
+        d.startswith("batch=")
+        and d != own
+        and any(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
     )
-    if not has_data:
-        return None  # directory exists but holds no committed batch yet
-    # select the canonical columns: the batch=<id> directory level is
-    # inferred as a partition column on read; keep it only when the caller
-    # needs version ordering (latest-wins supersede semantics)
-    extra = ["batch"] if with_batch else []
-    return spark.read.parquet(path).select(*cols, *extra)
+
+
+def _read_state(
+    spark: SparkSession, warehouse: str, table: str, batch_id: int | None = None
+) -> DataFrame:
+    """The rows of one state table and their ``batch``, read with the
+    table's declared schema (STATE_DDL), so no schema-inference job runs.
+    Given a ``batch_id``, only the rows of other (earlier) batches. A table
+    with no such batch yet is an empty frame of the same schema; limit(0)
+    makes it an empty relation to the optimizer, so the joins against it
+    fold away and submit no job."""
+    schema = f"{STATE_DDL[table]}, batch bigint"
+    path = os.path.join(warehouse, table)
+    if not _has_batches(path, batch_id):
+        return spark.createDataFrame([], schema).limit(0)
+    df = spark.read.schema(schema).parquet(path)
+    return df if batch_id is None else df.filter(F.col("batch") != batch_id)
 
 
 def corpus_prepared_view(spark: SparkSession, warehouse: str) -> DataFrame:
     """Consumer view of the corpus: one row per doc_id, LATEST batch wins
     (a re-seen conversation's re-preparation supersedes its partial doc)."""
-    df = _read_state(
-        spark, os.path.join(warehouse, "corpus_prepared"), PREPARED_COLS, with_batch=True
-    )
-    if df is None:
-        raise FileNotFoundError(f"no corpus_prepared under {warehouse}")
-    w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*PREPARED_COLS)
-    )
+    return latest_rows(_read_state(spark, warehouse, "corpus_prepared"))
 
 
 def stream_edges_view(spark: SparkSession, warehouse: str) -> DataFrame:
@@ -126,9 +144,9 @@ def stream_edges_view(spark: SparkSession, warehouse: str) -> DataFrame:
     Edges older than an endpoint's re-preparation were verified against a
     partial document; the re-seen batch re-paired and re-verified that doc
     against the corpus, so the newer batches carry the authoritative set."""
-    edges = spark.read.parquet(os.path.join(warehouse, "stream_edges"))
+    edges = _read_state(spark, warehouse, "stream_edges")
     latest = (
-        spark.read.parquet(os.path.join(warehouse, "corpus_prepared"))
+        _read_state(spark, warehouse, "corpus_prepared")
         .groupBy("doc_id")
         .agg(F.max("batch").alias("last_b"))
     )
@@ -188,57 +206,46 @@ def start_streaming_dedup(
       <warehouse>/config_fingerprint            (config the state was built under)
     Batch-id directories make retried micro-batches idempotent (a retry
     overwrites its own directory, never duplicates)."""
-    turns_dir = os.path.join(warehouse, "turns")
-    corpus_dir = os.path.join(warehouse, "corpus_prepared")
-    bands_dir = os.path.join(warehouse, "corpus_bands")
-    edges_dir = os.path.join(warehouse, "stream_edges")
-    skew_dir = os.path.join(warehouse, "stream_skew")
+
+    def write(df: DataFrame, table: str, batch_id: int) -> None:
+        df.write.mode("overwrite").parquet(
+            os.path.join(warehouse, table, f"batch={batch_id}")
+        )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        existing = _read_state(spark, corpus_dir, PREPARED_COLS, with_batch=True)
-        _check_fingerprint(warehouse, config, first_batch=existing is None)
+        first = not _has_batches(os.path.join(warehouse, "corpus_prepared"), batch_id)
+        _check_fingerprint(warehouse, config, first_batch=first)
         # one scope per micro-batch: its checkpoints are released once the
         # batch's state tables are written (or the batch raised) -- a
         # long-lived stream must not accumulate pinned blocks across batches
         with scope():
             # batch turns feed three consumers (turns append, re-seen probe,
             # dedup input); checkpoint so the source is read once
-            batch = register(batch_df.localCheckpoint())
+            batch = register(batch_df.localCheckpoint()).select(*TRANSCRIPT_COLS)
             # 1. persist this batch's raw turns FIRST (idempotent: a retry
-            #    overwrites its own dir); prior turns are read with an explicit
-            #    batch != batch_id filter so a retry never sees its own rows.
-            batch.select(*TRANSCRIPT_COLS).write.mode("overwrite").parquet(
-                os.path.join(turns_dir, f"batch={batch_id}")
-            )
+            #    overwrites its own dir; the reads below skip its rows)
+            write(batch, "turns", batch_id)
 
             # 2. cross-batch assembly: conv_ids seen in EARLIER batches get
             #    their full turn set re-assembled (supersede-on-reseen).
-            prior_turns = _read_state(
-                spark, turns_dir, TRANSCRIPT_COLS, with_batch=True
-            ).filter(F.col("batch") != batch_id)
             batch_convs = batch.select("conv_id").dropDuplicates()
-            reseen_turns = prior_turns.join(
-                F.broadcast(batch_convs), "conv_id", "left_semi"
-            ).select(*TRANSCRIPT_COLS)
-            effective = batch.select(*TRANSCRIPT_COLS).unionByName(reseen_turns)
-
+            reseen_turns = (
+                _read_state(spark, warehouse, "turns", batch_id)
+                .join(F.broadcast(batch_convs), "conv_id", "left_semi")
+                .select(*TRANSCRIPT_COLS)
+            )
             res = incremental_dedup(
-                effective, existing, _read_state(spark, bands_dir, BAND_COLS), config
+                batch.unionByName(reseen_turns),
+                _read_state(spark, warehouse, "corpus_prepared", batch_id),
+                _read_state(spark, warehouse, "corpus_bands", batch_id).drop("batch"),
+                config,
             )
-            res.new_prepared.select(*PREPARED_COLS).write.mode("overwrite").parquet(
-                os.path.join(corpus_dir, f"batch={batch_id}")
-            )
-            res.new_bands.select(*BAND_COLS).write.mode("overwrite").parquet(
-                os.path.join(bands_dir, f"batch={batch_id}")
-            )
-            res.verified_pairs.write.mode("overwrite").parquet(
-                os.path.join(edges_dir, f"batch={batch_id}")
-            )
-            res.band_skew.write.mode("overwrite").parquet(
-                os.path.join(skew_dir, f"batch={batch_id}")
-            )
+            write(res.new_prepared, "corpus_prepared", batch_id)
+            write(res.new_bands, "corpus_bands", batch_id)
+            write(res.verified_pairs, "stream_edges", batch_id)
+            write(res.band_skew, "stream_skew", batch_id)
 
     writer = stream.writeStream.foreachBatch(process_batch).trigger(
         availableNow=True

@@ -47,7 +47,7 @@ def contain_corpus(spark, config):
     df = spark.createDataFrame(rows, "conv_id string, doc_text string")
     # containment needs window-scale docs: small window config for the test
     cfg = config.with_(
-        containment_window=64, containment_stride=32, containment_min_grams=32
+        containment_stride=32, containment_min_grams=32
     )
     prep = prepare_docs(df, "conv_id", "doc_text", cfg).cache()
     prep.count()
@@ -112,7 +112,7 @@ def test_block_composed_window_sigs_match_direct_slicing(spark, config):
     from dedup.functions.sketch import _mix64
 
     rng = random.Random(11)
-    cfg = config.with_(containment_window=64, containment_stride=32)
+    cfg = config.with_(containment_stride=32)
     nb, nr = cfg.containment_lsh_bands, cfg.containment_lsh_rows
     # lengths straddle every boundary case: < stride, == stride, < window,
     # == window, just past, mid-block tail, many blocks
@@ -137,7 +137,7 @@ def test_fused_window_band_hashes_collision_structure(spark, config):
     band) keys share a fused hash exactly when their band rows are equal.
     LSH candidates depend only on this collision structure."""
     rng = random.Random(23)
-    cfg = config.with_(containment_window=64, containment_stride=32)
+    cfg = config.with_(containment_stride=32)
     nb, nr = cfg.containment_lsh_bands, cfg.containment_lsh_rows
     base = _random_text(rng, 200)
     texts = [
@@ -195,7 +195,7 @@ def test_containment_mid_document_recall(spark, config):
     pair deterministic."""
     rng = random.Random(99)
     cfg = config.with_(
-        containment_window=64, containment_stride=32, containment_min_grams=32
+        containment_stride=32, containment_min_grams=32
     )
     rows = []
     planted = []
@@ -228,7 +228,6 @@ def test_containment_capped_pairs_ledger(spark, config):
     containment lands either in pairs or in the capped_pairs ledger."""
     rng = random.Random(7)
     cfg = config.with_(
-        containment_window=64,
         containment_stride=32,
         containment_min_grams=32,
         containment_max_partners=3,
@@ -315,7 +314,7 @@ def test_pipeline_links_containment_cluster(spark, config, tmp_path):
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     )
     cfg = config.with_(
-        containment_window=64, containment_stride=32, containment_min_grams=32
+        containment_stride=32, containment_min_grams=32
     )
     wh = str(tmp_path / "wh")
     run_pipeline(spark, tdf, wh, cfg)

@@ -35,7 +35,9 @@ def test_incremental_links_new_to_existing(spark, config):
         __import__("pandas").concat([newbie, novel], ignore_index=True)
     )
 
-    res = incremental_dedup(batch, existing, band_postings(existing, config), config)
+    res = incremental_dedup(
+        batch, existing.withColumn("batch", F.lit(0)), band_postings(existing, config), config
+    )
     edges = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
     flat = {x for e in edges for x in e}
     assert {"xc0000003", "c0000003"} <= flat
@@ -94,7 +96,9 @@ def test_incremental_reuses_postings_no_corpus_resketch(spark, config, monkeypat
         return orig(prepared, cfg)
 
     monkeypatch.setattr(inc, "band_postings", spy)
-    res = inc.incremental_dedup(batch, existing, bands, config)
+    res = inc.incremental_dedup(
+        batch, existing.withColumn("batch", F.lit(0)), bands, config
+    )
     edges = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
     assert len(calls) == 1, "historical corpus must not be re-banded"
     assert ("c0000005", "xc0000005") in edges
@@ -133,7 +137,10 @@ def test_incremental_equals_batch_path_on_touched_pairs(spark, config):
 
     existing = prep(old_pd)
     res = incremental_dedup(
-        spark.createDataFrame(new_pd), existing, band_postings(existing, cfg), cfg
+        spark.createDataFrame(new_pd),
+        existing.withColumn("batch", F.lit(0)),
+        band_postings(existing, cfg),
+        cfg,
     )
     got = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
 
@@ -292,3 +299,149 @@ def test_streaming_rejects_config_change(spark, config, tmp_path):
     msg = str(q.exception())
     assert config.config_fingerprint() in msg
     assert other.config_fingerprint() in msg
+
+
+def _state_producers(spark, config):
+    """Each read-back state table's producer output, on a tiny corpus."""
+    from dedup.streaming import TRANSCRIPT_DDL
+
+    corpus = make_corpus(n_conversations=6, dup_fraction=0.5, seed=3)
+    turns = spark.createDataFrame(
+        corpus.transcripts.assign(turn_idx=corpus.transcripts["turn_idx"].astype("int32")),
+        TRANSCRIPT_DDL,
+    )
+    prepared = prepare_docs(
+        assemble_conversations(turns, config), "conv_id", "doc_text", config
+    )
+    bands = band_postings(prepared, config)
+    edges = verify_pairs(candidate_pairs(bands, config).pairs, prepared, config)
+    return {
+        "turns": turns,
+        "corpus_prepared": prepared,
+        "corpus_bands": bands,
+        "stream_edges": edges,
+    }
+
+
+def _names_and_types(schema):
+    # simpleString() ignores nullability, array containsNull included
+    return [(f.name, f.dataType.simpleString()) for f in schema]
+
+
+def test_state_schemas_match_producers(spark, config, tmp_path):
+    """Each declared state schema (read here from a missing table, i.e. the
+    empty frame) equals its producer's output schema, ignoring nullability;
+    the batch=<id> level reads as a trailing ``batch`` column."""
+    from dedup.streaming import _read_state
+
+    for table, df in _state_producers(spark, config).items():
+        declared = _read_state(spark, str(tmp_path), table).schema
+        assert _names_and_types(declared) == _names_and_types(df.schema) + [
+            ("batch", "bigint")
+        ], table
+
+
+def test_state_reads_submit_no_job(spark, config, tmp_path):
+    """Reading the state tables -- inside a micro-batch and through both
+    consumer views -- submits no Spark job: the schemas are declared, not
+    inferred from the parquet footers."""
+    from dedup.streaming import _read_state, corpus_prepared_view, stream_edges_view
+    from dedup.tracking import scope
+
+    wh = str(tmp_path / "wh")
+    with scope():
+        for table, df in _state_producers(spark, config).items():
+            df.write.parquet(f"{wh}/{table}/batch=0")
+
+    sc = spark.sparkContext
+
+    def jobs_of(read):
+        sc.setJobGroup("state-reads", "state reads")
+        try:
+            return read(), sc.statusTracker().getJobIdsForGroup("state-reads")
+        finally:
+            sc.setJobGroup("after-state-reads", "")
+
+    views, jobs = jobs_of(
+        lambda: [corpus_prepared_view(spark, wh), stream_edges_view(spark, wh)]
+    )
+    assert jobs == []
+    reads, jobs = jobs_of(
+        lambda: [_read_state(spark, wh, t, 1) for t in ("turns", "corpus_prepared", "corpus_bands")]
+    )
+    assert jobs == []
+    # the frames read what was written (these counts do run jobs)
+    assert reads[1].count() == views[0].count() > 0
+    assert reads[2].count() == config.lsh_bands * reads[1].count()
+
+
+def _single_file(df, tmp_path, dst, mtime):
+    """Write ``df`` as the one parquet file ``dst``, modified at ``mtime``:
+    the file source orders new files by modification time."""
+    import os
+    import shutil
+
+    staging = str(tmp_path / f"stage_{os.path.basename(dst)}")
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
+    shutil.move(os.path.join(staging, part), dst)
+    os.utime(dst, (mtime, mtime))
+
+
+def test_streaming_replays_first_batch_after_crash(spark, config, tmp_path):
+    """A first micro-batch that crashed between its corpus_prepared and
+    corpus_bands writes is replayed on restart (its commit is missing) and
+    must end up where an uncrashed stream does: the replay reads only prior
+    batches, so its own half-written state neither changes its plan nor
+    makes it fail."""
+    import os
+    import shutil
+    import time
+
+    from dedup.streaming import read_transcript_stream, start_streaming_dedup, stream_edges_view
+
+    corpus = make_corpus(n_conversations=12, dup_fraction=0.4, seed=101)
+    src = spark.createDataFrame(corpus.transcripts).withColumn(
+        "turn_idx", F.col("turn_idx").cast("int")
+    )
+    # alternate conversations between the two batches, so bases and their
+    # variants land on both sides and edges cross batches
+    ids = sorted(corpus.transcripts.conv_id.unique())
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    now = time.time()
+    _single_file(
+        src.filter(F.col("conv_id").isin(ids[0::2])), tmp_path, str(in_dir / "a.parquet"), now - 120
+    )
+
+    def run(wh, ckpt):
+        q = start_streaming_dedup(
+            spark,
+            read_transcript_stream(spark, str(in_dir), max_files_per_trigger=1),
+            wh,
+            config,
+            checkpoint_dir=ckpt,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+
+    wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+    run(wh, ckpt)
+    # crash after corpus_prepared/batch=0: the bands write and the commit are lost
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    shutil.rmtree(os.path.join(wh, "corpus_bands"))
+    _single_file(
+        src.filter(F.col("conv_id").isin(ids[1::2])), tmp_path, str(in_dir / "b.parquet"), now
+    )
+    run(wh, ckpt)  # replays batch 0, then runs batch 1
+
+    wh_ref = str(tmp_path / "wh_ref")
+    run(wh_ref, str(tmp_path / "ckpt_ref"))  # batch 0 = a, batch 1 = b
+
+    def edges(w):
+        return {(r["id_a"], r["id_b"]) for r in stream_edges_view(spark, w).collect()}
+
+    assert sorted(os.listdir(os.path.join(wh, "corpus_bands"))) == ["batch=0", "batch=1"]
+    got, want = edges(wh), edges(wh_ref)
+    assert want and got == want
