@@ -63,8 +63,8 @@ class CheckpointCatalog:
         self,
         spark: SparkSession,
         warehouse: str,
+        config_fingerprint: str,
         run_id: str | None = None,
-        config_fingerprint: str = "",
     ):
         self.spark = spark
         self.warehouse = warehouse
@@ -89,7 +89,7 @@ class CheckpointCatalog:
                 mf = json.load(fh)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
-        if self.config_fingerprint and mf.get("config_fingerprint") != self.config_fingerprint:
+        if mf.get("config_fingerprint") != self.config_fingerprint:
             return None
         return mf
 

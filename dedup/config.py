@@ -10,7 +10,8 @@ caps) sit next to them.
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
+from typing import ClassVar
 
 import numpy as np
 
@@ -32,8 +33,11 @@ SKETCH_FORMAT_VERSION = 3
 
 @dataclass(frozen=True)
 class DedupConfig:
+    """Fields are the settings a caller sets; ``ClassVar`` entries are
+    constants that nothing overrides (passing one raises TypeError)."""
+
     # --- shingling (reference: N_GRAMS=3, settings.py:15) ---
-    k_shingle: int = 3
+    k_shingle: ClassVar[int] = 3
     # normalized text truncation. The reference caps TITLES at 255 chars
     # (MAX_CHARACTERS_ALLOWED_IN_THE_TITLE, settings.py:67-68 -- a uint8
     # encoding artifact); title-parity mode (operators/match.py) pins 255
@@ -41,8 +45,8 @@ class DedupConfig:
     max_chars: int = 32768
 
     # --- MinHash / LSH ---
-    lsh_bands: int = 32          # b bands ...
-    lsh_rows: int = 4            # ... of r rows each: num_perm = b*r
+    lsh_bands: ClassVar[int] = 32          # b bands ...
+    lsh_rows: ClassVar[int] = 4            # ... of r rows each: num_perm = b*r
     minhash_seed: int = 709     # deterministic permutation table seed
 
     # --- verification thresholds ---
@@ -51,14 +55,14 @@ class DedupConfig:
     jaccard_threshold: float = 0.8
     # Levenshtein-ratio threshold (reference: LEVENSHTEIN_RATIO_THRESHOLD=94,
     # settings.py:75; gate semantics predict.py:147-156).
-    lev_threshold: int = 94
+    lev_threshold: ClassVar[int] = 94
     # SimHash hamming distance at or under which verify's phase 1 keeps a
     # pair for exact scoring even when its MinHash estimate is low.
-    simhash_hamming_threshold: int = 3
+    simhash_hamming_threshold: ClassVar[int] = 3
     # MinHash-estimate pre-gate: skip exact set intersection when the
     # signature agreement sits more than this many binomial sigmas below
     # jaccard_threshold (4.5 sigma ~= 3e-6 false-skip per true pair).
-    minhash_gate_sigmas: float = 4.5
+    minhash_gate_sigmas: ClassVar[float] = 4.5
     # Levenshtein-path estimate gate: a pair with ratio > T has indel
     # distance d < (1-T/100)(la+lb); each edit disturbs <= k_shingle grams,
     # so its shingle Jaccard is at least roughly
@@ -66,7 +70,7 @@ class DedupConfig:
     # ~0.47 at T=94, k=3. Pairs whose MinHash estimate sits below
     # lev_est_gate (= that bound minus sampling slack) cannot pass the
     # Levenshtein tier and skip the expensive DP entirely.
-    lev_est_gate: float = 0.33
+    lev_est_gate: ClassVar[float] = 0.33
     # partitions for the Levenshtein UDF stage: byte-tiny but CPU-heavy, so
     # AQE's size-based coalescing would serialize it; repartition explicitly.
     lev_partitions: int = 64
@@ -89,14 +93,14 @@ class DedupConfig:
     # phase-1 sketch join was choking on. The group-size exemption keeps
     # isolated low-J true pairs (e.g. Levenshtein-tier duplicates near the
     # gram floor) that collide once in a quiet band.
-    lsh_min_band_hits: int = 2
-    lsh_noise_group_size: int = 16
+    lsh_min_band_hits: ClassVar[int] = 2
+    lsh_noise_group_size: ClassVar[int] = 16
 
     # --- long-span containment (windowed sketches + substring verify) ---
     containment_stride: int = 128      # window = 2 * stride grams
     containment_min_grams: int = 64    # shorter docs are noise, skip
-    containment_threshold: float = 0.9  # |short ∩ long| / |short|
-    containment_lcs_ratio: float = 0.8  # LCS-substring / len(short) fallback
+    containment_threshold: ClassVar[float] = 0.9  # |short ∩ long| / |short|
+    containment_lcs_ratio: ClassVar[float] = 0.8  # LCS-substring / len(short) fallback
     # Window-sketch LSH geometry -- DELIBERATELY different from the
     # whole-doc (num_perm=128, 32x4) geometry. The whole-doc bands must
     # trip at set Jaccard ~0.8; aligned window pairs of a true containment
@@ -122,8 +126,8 @@ class DedupConfig:
     #              pairs got outranked by background at the partner caps)
     # 48/24x2 is the knee: every planted pair kept, least background
     # among the zero-miss geometries, ~2.7x less sketch compute.
-    containment_lsh_bands: int = 24
-    containment_lsh_rows: int = 2
+    containment_lsh_bands: ClassVar[int] = 24
+    containment_lsh_rows: ClassVar[int] = 2
     # minimum distinct window-band collisions for a pair to become a
     # candidate. A true containment aligns window pairs at Jaccard >= ~0.6
     # (expected ~8.6 of 24 r=2 band hits per aligned window pair, and
@@ -132,7 +136,7 @@ class DedupConfig:
     # corpus at the cost of P(>=2 | >=1) ~= 0.9997 per single aligned window
     # in the worst alignment. Exactly-aligned windows (identical spans)
     # always hit all bands, so prefix/suffix containment recall is exact.
-    containment_min_band_hits: int = 2
+    containment_min_band_hits: ClassVar[int] = 2
     # The min-band-hits filter only applies to pairs whose EVERY collision
     # came from a band group larger than this: a single-hit pair that met in
     # a small (quiet) group is cheap to verify and is kept, so the ~6%
@@ -144,7 +148,7 @@ class DedupConfig:
     # background; a truly quiet collision is a 2-4 member group. Measured
     # at 42k docs / 25% boilerplate: the 16-exemption passed 32M scored
     # pairs of which the partner caps kept 2%.
-    containment_noise_group_size: int = 4
+    containment_noise_group_size: ClassVar[int] = 4
     # Window band groups larger than this are per-span boilerplate, dropped
     # WITH accounting (window_band_skew). Much lower than the whole-doc
     # max_band_group=200: a window group of size g appears in ~all 24 bands
@@ -153,7 +157,7 @@ class DedupConfig:
     # boilerplate family stays reachable transitively through the family's
     # stronger in-cap edges (clustering is transitive). Measured at 42k
     # docs: cap 200 -> 166M raw window pairs, cap 32 -> ~30M.
-    containment_max_band_group: int = 32
+    containment_max_band_group: ClassVar[int] = 32
     # Ranked partner caps: each short doc keeps at most this many candidate
     # long partners (and each long doc at most 4x as many shorts), ranked
     # by band-hit count (strongest window-collision signal first,
@@ -192,7 +196,7 @@ class DedupConfig:
     # --- partitioning / shuffle knobs ---
     shuffle_partitions: int = 32
     conv_partitions: int = 32          # repartition(n, conv_id) before assembly
-    arrow_batch_size: int = 4096
+    arrow_batch_size: ClassVar[int] = 4096
 
     # --- clustering ---
     cc_max_iterations: int = 50
@@ -200,24 +204,6 @@ class DedupConfig:
     # 0 disables it (always distributed star-contraction). Kept modest: the
     # driver holds ~2 string ids per edge, so 1M edges is ~100-200 MB.
     cc_driver_threshold: int = 1_000_000
-
-    def __post_init__(self) -> None:
-        if not (1 <= self.k_shingle <= 8):
-            # byte_kgram_codes packs 8*k bits into an int64: k > 8 would
-            # shift the leading bytes out and silently collide distinct
-            # k-grams, breaking the collision-free gram-set invariant that
-            # exact Jaccard and containment scoring rely on (ADVICE r5 #2)
-            raise ValueError(
-                f"k_shingle ({self.k_shingle}) must be in [1, 8]: the gram "
-                "byte-code encoding is only injective up to 8 bytes"
-            )
-        if self.containment_num_perm > self.num_perm:
-            # the window sketch reuses the PREFIX of the whole-doc
-            # permutation table (one deterministic family, one seed)
-            raise ValueError(
-                f"containment_num_perm ({self.containment_num_perm}) must "
-                f"not exceed num_perm ({self.num_perm})"
-            )
 
     @property
     def num_perm(self) -> int:
@@ -251,10 +237,11 @@ class DedupConfig:
         version; stamped into checkpoint manifests so a resume never
         silently mixes configs, and so tables persisted under an older
         sketch format (gram encodings, hash families, postings schema)
-        invalidate instead of silently joining empty (ADVICE r5 #1)."""
-        payload = repr(
-            (SKETCH_FORMAT_VERSION, sorted(self.__dict__.items()))
-        ).encode()
+        invalidate instead of silently joining empty (ADVICE r5 #1).
+        Hashes every annotated name, ClassVar constants included, so
+        turning a field into a constant leaves fingerprints unchanged."""
+        knobs = sorted((n, getattr(self, n)) for n in type(self).__annotations__)
+        payload = repr((SKETCH_FORMAT_VERSION, knobs)).encode()
         return hashlib.sha256(payload).hexdigest()[:16]
 
     def with_(self, **kw) -> "DedupConfig":

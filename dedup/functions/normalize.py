@@ -23,32 +23,12 @@ oracle mirrors its JVM regex semantics.
 
 from __future__ import annotations
 
-import re
-import unicodedata
-
 import pandas as pd
 from pyspark.sql import Column
 import pyspark.sql.functions as F
 from pyspark.sql.types import StringType
 
 from dedup.config import DedupConfig, DEFAULT_CONFIG
-
-_SPACE_RUN = re.compile(r" +")
-_DROP = re.compile(r"[^a-zA-Z0-9\s]")
-
-
-def transform_title(title: str, max_chars: int = 255, k: int = 3) -> str:
-    """Plain-Python reimplementation, the oracle that the tests check
-    ``normalize_text_col`` (the Spark path) against."""
-    text = unicodedata.normalize("NFD", title)
-    text = text.encode("ascii", "ignore").decode("utf-8").lower().replace("-", " ")
-    text = _DROP.sub("", text)
-    text = _SPACE_RUN.sub(" ", text).strip()
-    n = len(text)
-    text = text[:max_chars].strip()
-    if n < k:
-        return text.rjust(k, "0")
-    return text
 
 
 def _normalize_series(ser: pd.Series, max_chars: int, k: int) -> pd.Series:

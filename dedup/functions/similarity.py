@@ -12,7 +12,8 @@
   pair whose distance exceeds the threshold-implied bound exits early.
 
 * Token-sort ratio (D3): sort words, join with single spaces, then D2
-  (/root/reference/doppelspeller/common.py:165-167).
+  (/root/reference/doppelspeller/common.py:165-167). ``token_sort_py`` is
+  the one token sort: words are what ``str.split()`` splits off.
 
 * Deletion-ratio length gate (D4): ``((lx+ly-|lx-ly|)/(lx+ly))*100`` -- a
   cheap upper bound on D2 computed as *native columns* so Catalyst filters
@@ -21,6 +22,8 @@
 
 * Staged gate chain (D5): deletion_ratio < T -> 0; ratio > T -> ratio;
   else token-sort ratio (/root/reference/doppelspeller/predict.py:147-156).
+  One UDF, ``gated_ratios_udf``, returns both ratios of a pair; pair
+  verification and the title cascade each derive the chain from it.
 
 * Exact IDF-weighted Jaccard (D1) is a join+agg, not a kernel -- see
   dedup/operators/match.py; the exact *set* Jaccard on shingle arrays used
@@ -35,7 +38,6 @@ from pyspark.sql import Column
 import pyspark.sql.functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.sketch import byte_kgram_codes
 
 
@@ -156,72 +158,20 @@ def _dmax(total: int, threshold: float) -> int:
     return int(np.floor(total * (1 - threshold / 100.0))) + 1
 
 
-def staged_ratio_py(x: str, y: str, threshold: int = 94) -> int:
-    """Full D4->D2->D5 chain (/root/reference/doppelspeller/predict.py:147-156):
-    deletion-ratio gate, then ratio, token-sort fallback when ratio <= T.
-    Lengths count UTF-8 bytes, as in levenshtein_ratio_py."""
-    lx, ly = _nbytes(x), _nbytes(y)
-    total = lx + ly
-    if total == 0:
-        return 100
-    if ((total - abs(lx - ly)) / total) * 100 < threshold:
-        return 0
-    r = levenshtein_ratio_py(x, y, _dmax(total, threshold))
-    if r <= threshold:
-        xs, ys = token_sort_py(x), token_sort_py(y)
-        return levenshtein_ratio_py(xs, ys, _dmax(_nbytes(xs) + _nbytes(ys), threshold))
-    return r
-
-
 # ---------------------------------------------------------------------------
 # Spark column forms
 # ---------------------------------------------------------------------------
 
-def deletion_ratio_col(x: Column | str, y: Column | str) -> Column:
-    """D4 as pure column arithmetic -- evaluated JVM-side BEFORE any UDF."""
-    cx = F.col(x) if isinstance(x, str) else x
-    cy = F.col(y) if isinstance(y, str) else y
-    lx, ly = F.length(cx).cast("double"), F.length(cy).cast("double")
+def deletion_ratio_col(lx: Column | str, ly: Column | str) -> Column:
+    """D4 from two length columns as pure column arithmetic -- evaluated
+    JVM-side BEFORE any UDF. Callers pass ``F.octet_length`` of the texts:
+    UTF-8 bytes, the unit of the DP, of the 3-gram bound and of the
+    char-count vectors."""
+    lx, ly = ((F.col(c) if isinstance(c, str) else c).cast("double") for c in (lx, ly))
     total = lx + ly
     return F.when(total == 0, F.lit(100.0)).otherwise(
         (total - F.abs(lx - ly)) / total * 100.0
     )
-
-
-def token_sort_col(col: Column | str) -> Column:
-    """D3 key: sort words alphabetically, single-space join
-    (/root/reference/doppelspeller/common.py:166) -- native columns."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.concat_ws(" ", F.array_sort(F.filter(F.split(c, r"\s+"), lambda w: w != "")))
-
-
-def levenshtein_ratio_pairs(
-    x: Column | str, y: Column | str, threshold: float | None = None
-) -> Column:
-    """Arrow-batched pandas UDF computing the cost-2 Levenshtein ratio per
-    pair. ``threshold`` caps the DP (early exit); pass None for the exact
-    uncapped ratio. Callers gating on the ROUNDED integer ratio must
-    pass (t - 0.5) so raw ratios in [t-0.5, t) stay inside the cap."""
-    thr = threshold
-
-    @F.pandas_udf(IntegerType())
-    def _ratio(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = np.empty(len(xs), dtype=np.int32)
-        for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
-            dmax = None if thr is None else _dmax(_nbytes(a) + _nbytes(b), thr)
-            out[i] = levenshtein_ratio_py(a, b, dmax)
-        return pd.Series(out)
-
-    cx = F.col(x) if isinstance(x, str) else x
-    cy = F.col(y) if isinstance(y, str) else y
-    # asNondeterministic: an OPTIMIZER BARRIER, not a semantic statement --
-    # the kernel is pure. Without it, a filter on the ratio column is pushed
-    # through the explicit pre-UDF repartition() exchange and drags a
-    # duplicate ArrowEvalPython below it: the DP then runs TWICE, once
-    # inside the skinny (1-3 task) pre-shuffle stage, serializing the most
-    # CPU-heavy stage of the pipeline (measured 57s -> ~2s on the bench
-    # corpus verify tier).
-    return _ratio.asNondeterministic()(cx, cy)
 
 
 _CCV_BINS = 64
@@ -295,7 +245,7 @@ def indel_distance_pairs(x: Column | str, y: Column | str) -> Column:
 
     cx = F.col(x) if isinstance(x, str) else x
     cy = F.col(y) if isinstance(y, str) else y
-    # optimizer barrier (see levenshtein_ratio_pairs) -- kernel is pure
+    # optimizer barrier (see gated_ratios_udf) -- the kernel is pure
     return _dist.asNondeterministic()(cx, cy)
 
 
@@ -323,64 +273,65 @@ def _trigram_l1(a: str, b: str) -> int:
     return int(np.abs(np.diff(ends - 2 * nb, prepend=-1)).sum())
 
 
-def bigram_gated_staged_ratio_udf(
-    x: Column | str,
-    y: Column | str,
-    config: DedupConfig = DEFAULT_CONFIG,
-) -> Column:
-    """The staged D4->D2->D5 gate chain (staged_ratio_py) as one column,
-    with an exact DP-admission bound on each of its two paths. Each path
-    runs its DP only if the 3-gram count L1 of its two texts (see
-    _trigram_l1) is at most 5 * (1 - thr/100) * total: one unit indel
-    changes at most 5 counts, so a larger L1 proves the indel distance
-    exceeds the threshold-implied bound and the ratio stays <= thr. The
-    direct path is bounded on the texts, the token-sort fallback on the
-    token-sorted texts. VALUES above the threshold are bit-identical to
-    staged_ratio_py (no false skips); a skipped path returns a value at
-    or below the threshold, which the callers' ``> threshold`` filter drops
-    either way -- the documented contract of this UDF.
+def gated_ratios_udf(x: Column | str, y: Column | str, threshold: float) -> Column:
+    """The two ratios of the staged D4->D2->D5 chain (D5 above) as one
+    column, ``struct<lev int, tsort int>``: the cost-2 Levenshtein ratio of
+    the texts and of their token sorts (token_sort_py). Callers derive the
+    staged value as ``lev`` when it is above the threshold, else ``tsort``.
 
-    The bound is computed pair-side, inside the UDF, in O(len log len)
-    numpy work per text; per-doc count vectors joined onto both pair sides
-    would cost two extra exchanges for a pair population that is already
-    small after the sketch gates.
+    Contract: each field is EXACT when it is above ``threshold`` and at or
+    below it otherwise. A pair failing the deletion-ratio gate gets (0, 0);
+    an empty pair (100, 100). Callers gating on the ROUNDED integer ratio
+    at t must pass t - 0.5, so raw ratios in [t - 0.5, t) are computed
+    exactly too.
+
+    Each path runs its DP only if the 3-gram count L1 of its two texts (see
+    _trigram_l1) is at most 5 * (1 - threshold/100) * total: one unit indel
+    changes at most 5 counts, so a larger L1 proves the indel distance
+    exceeds the threshold-implied bound and the ratio stays at or below
+    the threshold (the path returns 0). An admitted DP is capped at
+    _dmax(total, threshold). The bound is computed pair-side, in
+    O(len log len) numpy work per text; per-doc count vectors joined onto
+    both pair sides would cost two extra exchanges for a pair population
+    that is already small after the sketch gates.
 
     The deletion-ratio gate is re-checked here before any DP: Spark
     evaluates a pandas UDF on every row it reaches, so only a filter
-    ahead of the UDF (verify.py's need_lev) keeps rows away from it."""
-    thr = config.lev_threshold
-    frac = 1.0 - thr / 100.0
+    ahead of the UDF keeps rows away from it."""
+    frac = 1.0 - threshold / 100.0
 
-    @F.pandas_udf(IntegerType())
-    def _gated(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = np.zeros(len(xs), dtype=np.int32)
+    def _path_ratio(a: str, b: str) -> int:
+        total = _nbytes(a) + _nbytes(b)
+        if _trigram_l1(a, b) > 5.0 * frac * total:
+            return 0
+        return levenshtein_ratio_py(a, b, _dmax(total, threshold))
+
+    @F.pandas_udf("lev int, tsort int")
+    def _gated(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
+        lev = np.zeros(len(xs), dtype=np.int32)
+        tsort = np.zeros(len(xs), dtype=np.int32)
         for i, (a, b) in enumerate(zip(xs.fillna(""), ys.fillna(""))):
             la, lb = _nbytes(a), _nbytes(b)
             total = la + lb
             if total == 0:
-                out[i] = 100
+                lev[i] = tsort[i] = 100
                 continue
-            if ((total - abs(la - lb)) / total) * 100 < thr:
+            if ((total - abs(la - lb)) / total) * 100 < threshold:
                 continue
-            r = 0
-            if _trigram_l1(a, b) <= 5.0 * frac * total:
-                r = levenshtein_ratio_py(a, b, _dmax(total, thr))
-                if r > thr:
-                    out[i] = r
-                    continue
-            # direct path is <= thr (computed or proven by its bound);
-            # token-sort fallback only if ITS exact bound admits it
-            sa, sb = token_sort_py(a), token_sort_py(b)
-            ts = _nbytes(sa) + _nbytes(sb)
-            if _trigram_l1(sa, sb) <= 5.0 * frac * ts:
-                out[i] = levenshtein_ratio_py(sa, sb, _dmax(ts, thr))
-            else:
-                out[i] = r  # <= thr, as is the provably-gated true fallback
-        return pd.Series(out)
+            lev[i] = _path_ratio(a, b)
+            tsort[i] = _path_ratio(token_sort_py(a), token_sort_py(b))
+        return pd.DataFrame({"lev": lev, "tsort": tsort})
 
     cx = F.col(x) if isinstance(x, str) else x
     cy = F.col(y) if isinstance(y, str) else y
-    # optimizer barrier (see levenshtein_ratio_pairs) -- the kernel is pure
+    # asNondeterministic: an OPTIMIZER BARRIER, not a semantic statement --
+    # the kernel is pure. Without it, a filter on the ratio column is pushed
+    # through the explicit pre-UDF repartition() exchange and drags a
+    # duplicate ArrowEvalPython below it: the DP then runs TWICE, once
+    # inside the skinny (1-3 task) pre-shuffle stage, serializing the most
+    # CPU-heavy stage of the pipeline (measured 57s -> ~2s on the bench
+    # corpus verify tier). It also keeps Catalyst from inlining the struct
+    # into each field read, which would run the UDF once per field.
     return _gated.asNondeterministic()(cx, cy)
 
 

@@ -151,12 +151,10 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
-    """Edge list -> (node, cluster_id) with cluster_id = min node id of the
-    component. Nodes appearing only in ``edges``; callers union singleton
-    docs afterwards (pipeline does).
+    """Edge list (id_a, id_b) -> (node, cluster_id) with cluster_id = min
+    node id of the component. Nodes appearing only in ``edges``; callers
+    union singleton docs afterwards (pipeline does).
 
     Hybrid strategy: edge sets under ``cc_driver_threshold`` take a
     driver-side union-find (one collect, no iteration -- a dedup edge set
@@ -184,7 +182,7 @@ def connected_components(
     # the final one, freed once the caller's table commits.
     e = register(
         _local_contract(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
+            edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).filter(
                 F.col("src") != F.col("dst")
             )
         )

@@ -116,7 +116,7 @@ def lcs_substring_ratio_udf(text_a: Column | str, text_b: Column | str) -> Colum
 
     ca = F.col(text_a) if isinstance(text_a, str) else text_a
     cb = F.col(text_b) if isinstance(text_b, str) else text_b
-    # optimizer barrier (see similarity.levenshtein_ratio_pairs): keeps the
+    # optimizer barrier (see similarity.gated_ratios_udf): keeps the
     # downstream lcs_ratio filter from dragging this UDF below the explicit
     # repartition() exchange into a near-serial pre-shuffle stage.
     return _ratio.asNondeterministic()(ca, cb)

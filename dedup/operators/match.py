@@ -43,11 +43,7 @@ import pyspark.sql.functions as F
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.normalize import normalize_text_col
 from dedup.functions.shingle import char_ngrams_col
-from dedup.functions.similarity import (
-    deletion_ratio_col,
-    levenshtein_ratio_pairs,
-    token_sort_col,
-)
+from dedup.functions.similarity import deletion_ratio_col, gated_ratios_udf
 from dedup.operators.grouping import grouped_top_k, group_argmax_unique
 from dedup.tracking import register
 
@@ -243,21 +239,21 @@ def match_titles(
 
     # ---- tiers 3+4: one ratio pass over the candidate pairs.
     # The deletion-ratio length gate runs as a REAL .filter() before the
-    # UDF projections: Spark's ExtractPythonUDFs rule pulls a pandas UDF
+    # UDF projection: Spark's ExtractPythonUDFs rule pulls a pandas UDF
     # out of a when/otherwise and evaluates it for every projected row, so
     # gating inside the expression would not keep gated rows away from the
-    # Python worker. The gate (and the DP band) sit at the LOOSER of the
-    # two acceptance thresholds (tier 3's and, when enabled, tier 4's):
-    # ratios at or above it are exact; truncated values below it can never
-    # be accepted or win an argmax from a >=gate row.
+    # Python worker. The gate (and the UDF's threshold) sit at the LOOSER
+    # of the two acceptance thresholds (tier 3's and, when enabled, tier
+    # 4's): ratios above it are exact; values at or below it can never be
+    # accepted or win an argmax from an above-gate row.
     t4 = config.match_accept_ratio
     thr = config.lev_threshold
     # Rounding-aware gating: emitted ratios are int(round(...)), so a pair
     # whose ROUNDED ratio reaches the acceptance threshold t can have a raw
-    # ratio as low as t - 0.5. Band the DP and filter the deletion ratio at
-    # (gate - 0.5) so every pair that can round up to the gate is computed
-    # exactly -- gating at the integer gate silently truncated raw ratios
-    # in [t-0.5, t) once total length outgrew the integer-implied band.
+    # ratio as low as t - 0.5. Gate at (t - 0.5) so every pair that can
+    # round up to t is computed exactly -- gating at the integer t silently
+    # truncated raw ratios in [t-0.5, t) once total length outgrew the
+    # integer-implied DP band.
     gate = min(thr, t4 or thr) - 0.5
     pairs = (
         cands.join(
@@ -268,21 +264,16 @@ def match_titles(
             truth.select("title_id", F.col("norm_text").alias("t_text")),
             "title_id",
         )
-        .withColumn("del_ratio", deletion_ratio_col("q_text", "t_text"))
+        .withColumn(
+            "del_ratio",
+            deletion_ratio_col(F.octet_length("q_text"), F.octet_length("t_text")),
+        )
         .filter(F.col("del_ratio") >= F.lit(gate))
-        .withColumn(
-            "lev", levenshtein_ratio_pairs("q_text", "t_text", threshold=gate)
-        )
-        .withColumn(
-            "tsort",
-            levenshtein_ratio_pairs(
-                token_sort_col("q_text"), token_sort_col("t_text"), threshold=gate
-            ),
-        )
-        .select("query_id", "title_id", "del_ratio", "lev", "tsort")
+        .withColumn("r", gated_ratios_udf("q_text", "t_text", gate))
+        .select("query_id", "title_id", "del_ratio", "r.lev", "r.tsort")
     )
-    # both tier branches read `pairs`; eager checkpoint so the two ratio
-    # UDF columns are computed once, not once per branch subtree. Registered:
+    # both tier branches read `pairs`; eager checkpoint so the ratio UDF
+    # runs once, not once per branch subtree. Registered:
     # checkpoint blocks live in the block manager like cache blocks do.
     pairs = register(pairs.localCheckpoint())
 

@@ -35,9 +35,10 @@ import pyspark.sql.functions as F
 from dedup.config import DedupConfig, DEFAULT_CONFIG
 from dedup.functions.similarity import (
     bag_l1_col,
-    bigram_gated_staged_ratio_udf,
     char_count_vector_udf,
+    deletion_ratio_col,
     exact_jaccard_col,
+    gated_ratios_udf,
     minhash_estimate_col,
 )
 from dedup.functions.sketch import hamming_col
@@ -81,17 +82,17 @@ def verify_pairs(
     # char-count vectors are a per-DOC sketch (64 ints): they power the
     # exact bag-distance lower bound on the pair side (bag_l1_col) that
     # keeps boilerplate-similar pairs out of the Levenshtein DP entirely.
+    # Lengths count UTF-8 bytes, the unit of ccv and of the ratio UDF.
     light = prepared.select(
         "doc_id",
         "minhash",
         "simhash",
-        F.length("norm_text").alias("n_chars"),
+        F.octet_length("norm_text").alias("n_bytes"),
         char_count_vector_udf("norm_text").alias("ccv"),
     )
     la, lb = _two_sided(
-        light, {"mh": "minhash", "sim": "simhash", "len": "n_chars", "ccv": "ccv"}
+        light, {"mh": "minhash", "sim": "simhash", "len": "n_bytes", "ccv": "ccv"}
     )
-    total_len = F.col("len_a") + F.col("len_b")
     # shuffle_hash-pinned like the phase-2 joins: the per-doc light side is
     # ~1.3KB/doc (tens of MB at bench scale, GBs at corpus scale) -- AQE
     # strategy flips on its estimated size were the last source of bimodal
@@ -106,26 +107,16 @@ def verify_pairs(
             "est", F.coalesce(minhash_estimate_col("mh_a", "mh_b"), F.lit(0.0))
         )
         .withColumn("hamming", hamming_col("sim_a", "sim_b"))
-        .withColumn(
-            "del_ratio",
-            F.when(total_len == 0, F.lit(100.0)).otherwise(
-                (total_len - F.abs(F.col("len_a") - F.col("len_b")))
-                / total_len
-                * 100.0
-            ),
-        )
+        .withColumn("del_ratio", deletion_ratio_col("len_a", "len_b"))
         # ratio > thr needs indel distance < (1 - thr/100)*total; bag L1 is
         # an exact lower bound on that distance (and on the token-sort
         # path's too), so failing this can NEVER pass the Levenshtein tier.
         .withColumn(
             "bag_ok",
             bag_l1_col("ccv_a", "ccv_b")
-            <= total_len * F.lit(1.0 - thr / 100.0),
+            <= (F.col("len_a") + F.col("len_b")) * F.lit(1.0 - thr / 100.0),
         )
-        .select(
-            "id_a", "id_b", "est", "hamming", "del_ratio", "bag_ok",
-            "len_a", "len_b",
-        )
+        .select("id_a", "id_b", "est", "hamming", "del_ratio", "bag_ok")
     )
 
     gate = jaccard_gate_threshold(config)
@@ -183,7 +174,7 @@ def verify_pairs(
 
     # ---- phase 2b: Levenshtein for pairs both sketches rejected -------
     # DP admission is gated by an EXACT 3-gram count bound computed
-    # PAIR-SIDE inside the staged UDF (bigram_gated_staged_ratio_udf): one
+    # PAIR-SIDE inside the ratio UDF (gated_ratios_udf): one
     # unit indel changes <= 5 3-gram counts, so L1 > 5 * dmax proves the
     # direct ratio can never clear the threshold, and the same bound over
     # TOKEN-SORTED text proves it for the token-sort fallback -- a pair is
@@ -205,8 +196,12 @@ def verify_pairs(
         # the DP stage is CPU-bound, not byte-bound: force parallelism so
         # AQE's size-based coalescing cannot serialize it onto one task
         .repartition(config.lev_partitions)
+        .withColumn("r", gated_ratios_udf("text_a", "text_b", thr))
+        # the staged chain: the direct ratio when it clears the threshold,
+        # else the token-sort fallback
         .withColumn(
-            "lev_ratio", bigram_gated_staged_ratio_udf("text_a", "text_b", config)
+            "lev_ratio",
+            F.when(F.col("r.lev") > thr, F.col("r.lev")).otherwise(F.col("r.tsort")),
         )
         .filter(F.col("lev_ratio") > F.lit(thr))
         .select(

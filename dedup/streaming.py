@@ -53,7 +53,12 @@ state is touched only through a broadcast semi-join on the batch's conv_ids
 (bucket-partition by conv_id to storage-prune). No sketch UDF ever re-runs
 over historical rows except for the re-seen conversations themselves --
 O(re-seen batch), not O(corpus). The latest-wins views are CONSUMER reads,
-never executed inside the per-batch loop.
+never executed inside the per-batch loop. One cost does grow with the
+stream's age: each state read lists every ``batch=<id>`` directory of its
+table, once in ``_has_batches`` and once in Spark's partition discovery, and
+nothing compacts them. Past 32 directories
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``) that discovery
+runs as a Spark job.
 """
 
 from __future__ import annotations

@@ -7,7 +7,7 @@ Python in the hot path; each has an exact ANSI-SQL oracle
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 import pyspark.sql.functions as F
 
 # tiny per-language stopword marker sets for the heuristic language ID;
@@ -103,14 +103,4 @@ def rolling_hash_col(text: Column | str, base: int = 31, mod: int = 1_000_000_00
         codes,
         F.lit(0).cast("bigint"),
         lambda acc, x: (acc * base + x) % mod,
-    )
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return (
-        df.withColumn("n_tokens", token_count_col(text_col))
-        .withColumn("n_bpe_tokens", bpe_ish_token_count_col(text_col))
-        .withColumn("lang_guess", lang_id_col(text_col))
-        .withColumn("quality", quality_score_col(text_col))
-        .withColumn("fingerprint", fingerprint_col(text_col))
     )

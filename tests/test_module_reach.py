@@ -2,7 +2,8 @@
 imported from ``dedup/``, ``__spark_entry__.py``, ``bench*.py``,
 ``perfbench/`` or ``tools/``, or run by the Makefile. A module only the
 tests import is dead weight in the package; it belongs in ``tests/`` as an
-oracle, or nowhere."""
+oracle, or nowhere. The same holds for every top-level function and class
+in ``dedup/``."""
 
 import ast
 import os
@@ -41,11 +42,15 @@ def _imported(rel: str) -> set[str]:
     return out
 
 
+def _product_sources() -> list[str]:
+    sources = _py_files("dedup") + ["__spark_entry__.py"]
+    sources += [f for f in os.listdir(ROOT) if f.startswith("bench") and f.endswith(".py")]
+    return sources + _py_files("perfbench") + _py_files("tools")
+
+
 def test_every_dedup_module_is_reached_by_product_code():
     modules = {_module_name(rel): rel for rel in _py_files("dedup")}
-    sources = list(modules.values()) + ["__spark_entry__.py"]
-    sources += [f for f in os.listdir(ROOT) if f.startswith("bench") and f.endswith(".py")]
-    sources += _py_files("perfbench") + _py_files("tools")
+    sources = _product_sources()
 
     reached = set()
     for rel in sources:
@@ -57,3 +62,51 @@ def test_every_dedup_module_is_reached_by_product_code():
     reached |= set(re.findall(r"-m (dedup(?:\.\w+)+)", make))
 
     assert sorted(set(modules) - reached) == []
+
+
+# top-level definitions in dedup/ that product code may leave unreferenced
+UNREFERENCED_OK = {
+    # the streaming consumer API: readers of a streaming warehouse call it
+    "corpus_prepared_view",
+    # a test fixture builder; it stays in dedup/generate.py because that
+    # file's hash keys bench.py's corpus cache
+    "make_title_fixture",
+}
+
+
+def _references(rel: str) -> set[tuple[str, str]]:
+    """(name, enclosing top-level definition or "") for every name and
+    attribute ``rel`` reads. Docstrings are string constants, so a name
+    mentioned only there is not a reference."""
+    with open(os.path.join(ROOT, rel)) as fh:
+        tree = ast.parse(fh.read())
+    out = set()
+    for top in tree.body:
+        owner = getattr(top, "name", "")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add((node.id, owner))
+            elif isinstance(node, ast.Attribute):
+                out.add((node.attr, owner))
+    return out
+
+
+def test_every_dedup_definition_is_referenced_by_product_code():
+    refs = {rel: _references(rel) for rel in _product_sources()}
+    unreferenced = set()
+    for rel in _py_files("dedup"):
+        with open(os.path.join(ROOT, rel)) as fh:
+            tree = ast.parse(fh.read())
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            name = node.name
+            # a definition referring to itself (recursion) does not count
+            if not any(
+                n == name and (src != rel or owner != name)
+                for src, names in refs.items()
+                for n, owner in names
+            ):
+                unreferenced.add(name)
+    # exactly the exceptions: an exception that gained a caller is dropped
+    assert unreferenced == UNREFERENCED_OK

@@ -3,14 +3,30 @@
 test's golden string (/root/reference/doppelspeller/tests/test_common.py:16-19).
 """
 
-import pyspark.sql.functions as F
+import re
+import unicodedata
+
 import pytest
 
-from dedup.functions.normalize import (
-    normalize_ascii_col,
-    normalize_text_col,
-    transform_title,
-)
+from dedup.functions.normalize import normalize_ascii_col, normalize_text_col
+
+_SPACE_RUN = re.compile(r" +")
+_DROP = re.compile(r"[^a-zA-Z0-9\s]")
+
+
+def transform_title(title: str, max_chars: int = 255, k: int = 3) -> str:
+    """Plain-Python reimplementation of the reference's transform_title,
+    the oracle that ``normalize_text_col`` (the Spark path) is checked
+    against."""
+    text = unicodedata.normalize("NFD", title)
+    text = text.encode("ascii", "ignore").decode("utf-8").lower().replace("-", " ")
+    text = _DROP.sub("", text)
+    text = _SPACE_RUN.sub(" ", text).strip()
+    n = len(text)
+    text = text[:max_chars].strip()
+    if n < k:
+        return text.rjust(k, "0")
+    return text
 
 GOLDEN = [
     # the reference's own unit-test case

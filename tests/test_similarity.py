@@ -8,12 +8,15 @@ import random
 import numpy as np
 import pytest
 
+import pyspark.sql.functions as F
+
 from dedup.functions.similarity import (
+    _dmax,
+    _nbytes,
     deletion_ratio_col,
+    gated_ratios_udf,
     indel_distance_str,
-    levenshtein_ratio_pairs,
     levenshtein_ratio_py,
-    staged_ratio_py,
     token_sort_py,
 )
 from dedup.config import DedupConfig
@@ -38,6 +41,30 @@ def ref_ratio(x: str, y: str) -> int:
     if total == 0:
         return 100
     return int(np.rint(100.0 * (total - brute_indel(x, y)) / total))
+
+
+def staged_ratio_py(x: str, y: str, threshold: int = 94) -> int:
+    """Full D4->D2->D5 chain (/root/reference/doppelspeller/predict.py:147-156):
+    deletion-ratio gate, then ratio, token-sort fallback when ratio <= T.
+    Lengths count UTF-8 bytes, as in levenshtein_ratio_py. The oracle the
+    gated UDF is checked against."""
+    lx, ly = _nbytes(x), _nbytes(y)
+    total = lx + ly
+    if total == 0:
+        return 100
+    if ((total - abs(lx - ly)) / total) * 100 < threshold:
+        return 0
+    r = levenshtein_ratio_py(x, y, _dmax(total, threshold))
+    if r <= threshold:
+        xs, ys = token_sort_py(x), token_sort_py(y)
+        return levenshtein_ratio_py(xs, ys, _dmax(_nbytes(xs) + _nbytes(ys), threshold))
+    return r
+
+
+def _staged_udf(ta: str, tb: str, threshold: float):
+    """The staged chain as verify_pairs derives it from gated_ratios_udf."""
+    r = gated_ratios_udf(ta, tb, threshold)
+    return F.when(r["lev"] > threshold, r["lev"]).otherwise(r["tsort"])
 
 
 def _mutate(rng: random.Random, x: str, alphabet: str, edits: int) -> str:
@@ -139,8 +166,6 @@ def test_non_ascii_ratios_count_bytes(spark):
     length in characters gave levenshtein_ratio_py('\u00e9', 'e') = -50.
     The staged chain and the gated UDF agree with the byte-level chain
     above the threshold, on both paths."""
-    from dedup.config import DedupConfig
-    from dedup.functions.similarity import bigram_gated_staged_ratio_udf
 
     def byte_staged(x, y, t):
         bx, by = x.encode(), y.encode()
@@ -178,7 +203,7 @@ def test_non_ascii_ratios_count_bytes(spark):
             above += 1
     assert above >= 20
     rows = spark.createDataFrame(pairs, "ta string, tb string").select(
-        "ta", "tb", bigram_gated_staged_ratio_udf("ta", "tb").alias("r")
+        "ta", "tb", _staged_udf("ta", "tb", t).alias("r")
     ).collect()
     for row in rows:
         want = staged_ratio_py(row["ta"], row["tb"], t)
@@ -200,8 +225,8 @@ def test_spark_columns_match_python(spark):
     rows = df.select(
         "x",
         "y",
-        levenshtein_ratio_pairs("x", "y").alias("plain"),
-        deletion_ratio_col("x", "y").alias("delr"),
+        gated_ratios_udf("x", "y", 0)["lev"].alias("plain"),
+        deletion_ratio_col(F.octet_length("x"), F.octet_length("y")).alias("delr"),
     ).collect()
     for r in rows:
         assert r["plain"] == ref_ratio(r["x"], r["y"])
@@ -278,13 +303,7 @@ def test_bag_gate_keeps_turn_segmentation_duplicates(spark):
     the edge before the DP. The second pair joins ten words with form feeds,
     which normalize_text_col keeps and str.split() splits on: a fold that
     counted only space/tab/LF/CR as whitespace put L1 9 > 0.06 * 112."""
-    import pyspark.sql.functions as F
-
-    from dedup.functions.similarity import (
-        bag_l1_col,
-        char_count_vector_udf,
-        staged_ratio_py,
-    )
+    from dedup.functions.similarity import bag_l1_col, char_count_vector_udf
 
     words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
     pairs = [
@@ -311,7 +330,7 @@ def _trigram_counts(s: str) -> collections.Counter:
 
 
 def test_bigram_l1_lower_bounds_indel_distance():
-    """The DP admission bound of bigram_gated_staged_ratio_udf: the L1
+    """The DP admission bound of gated_ratios_udf: the L1
     between exact byte 3-gram counts (_trigram_l1) equals a Counter
     oracle and is at most 5x the indel distance, on both ratio paths
     (direct texts; token-sorted texts for the fallback). Covers empty,
@@ -341,8 +360,7 @@ def test_trigram_bound_rejects_anagrammed_words(spark):
     paths, so such a bound runs both capped DPs and returns their capped
     ratio (94 here). Its 3-gram counts differ on both paths (L1 ~1.4k
     against a limit of ~480), so the exact bound skips both DPs and the
-    UDF returns 0."""
-    from dedup.functions.similarity import bigram_gated_staged_ratio_udf
+    UDF returns 0 on both."""
 
     rng = random.Random(5)
     words = []
@@ -360,8 +378,8 @@ def test_trigram_bound_rejects_anagrammed_words(spark):
     assert len(a) >= 500 and sorted(a) == sorted(b)
     assert staged_ratio_py(a, b, 94) <= 94
     df = spark.createDataFrame([(a, b)], "ta string, tb string")
-    got = df.select(bigram_gated_staged_ratio_udf("ta", "tb", DedupConfig()).alias("r"))
-    assert got.first()["r"] == 0
+    got = df.select(gated_ratios_udf("ta", "tb", DedupConfig.lev_threshold).alias("r"))
+    assert got.first()["r"].asDict() == {"lev": 0, "tsort": 0}
 
 
 def test_bitparallel_early_exit_parity():
@@ -398,16 +416,7 @@ def test_bigram_gated_udf_above_threshold_parity(spark):
     edits, or shuffled word order plus edits for the token-sort fallback."""
     import random
 
-    import pyspark.sql.functions as F
-
-    from dedup.config import DedupConfig
-    from dedup.functions.similarity import (
-        bigram_gated_staged_ratio_udf,
-        staged_ratio_py,
-    )
-
-    cfg = DedupConfig()
-    thr = cfg.lev_threshold
+    thr = DedupConfig.lev_threshold
     rng = random.Random(13)
     words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
     rows = []
@@ -438,7 +447,7 @@ def test_bigram_gated_udf_above_threshold_parity(spark):
             near += 1
     df = spark.createDataFrame(rows, "ta string, tb string")
     got = df.select(
-        "ta", "tb", bigram_gated_staged_ratio_udf("ta", "tb", cfg).alias("r")
+        "ta", "tb", _staged_udf("ta", "tb", thr).alias("r")
     ).collect()
     above = 0
     for row in got:
@@ -449,3 +458,72 @@ def test_bigram_gated_udf_above_threshold_parity(spark):
         else:
             assert row["r"] <= thr and want <= thr
     assert above >= 100
+
+
+@pytest.mark.parametrize("thr", [94, 89.5])
+def test_gated_ratios_fields_match_brute_force(spark, thr):
+    """Each field of gated_ratios_udf equals the brute-force ratio -- of the
+    texts for ``lev``, of their token_sort_py forms for ``tsort`` --
+    whenever either value is above the threshold, and both stay at or
+    below it otherwise; a pair failing the byte deletion gate gets (0, 0).
+    89.5 is the title cascade's rounding-aware gate. Texts mix separators
+    str.split() splits on but Java's \\s does not (\\x1c), or that only one
+    of the two token sorts used to treat as whitespace."""
+    rng = random.Random(41)
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    seps = [" ", " ", "\x0b", "\x0c", "\x1c", "\n"]
+
+    def join(toks):
+        return "".join(t + rng.choice(seps) for t in toks).rstrip()
+
+    pairs = []
+    for i in range(240):
+        toks = [rng.choice(words) for _ in range(rng.randint(2, 12))]
+        base = join(toks)
+        # same separators (direct path), new separators, or new word order
+        if i % 3 == 2:
+            rng.shuffle(toks)
+        other = base if i % 3 == 0 else join(toks)
+        edits = rng.randint(0, max(1, len(base) // 20))
+        pairs.append((base, _mutate(rng, other, "abz \x1c", edits)))
+    rows = spark.createDataFrame(pairs, "ta string, tb string").select(
+        "ta", "tb", gated_ratios_udf("ta", "tb", thr).alias("r")
+    ).collect()
+    above = {"lev": 0, "tsort": 0}
+    for row in rows:
+        a, b = row["ta"], row["tb"]
+        total = len(a) + len(b)
+        got = row["r"].asDict()
+        if total and (total - abs(len(a) - len(b))) / total * 100 < thr:
+            assert got == {"lev": 0, "tsort": 0}, (a, b, got)
+            continue
+        want = {
+            "lev": ref_ratio(a, b),
+            "tsort": ref_ratio(token_sort_py(a), token_sort_py(b)),
+        }
+        for k in want:
+            if want[k] > thr or got[k] > thr:
+                assert got[k] == want[k], (a, b, k, got, want)
+                above[k] += 1
+            else:
+                assert got[k] <= thr
+    assert above["lev"] >= 20 and above["tsort"] >= 40, above
+
+
+def test_match_titles_token_sort_splits_like_verify(spark, config):
+    """The title cascade's token-sort fallback is token_sort_py, the one
+    pair verification uses: words split at \\x1c as at a space, so this
+    pair's token-sort ratio is 100 and it matches via the close tier. A
+    Java-\\s token sort kept "beta\\x1calpha" as one word: ratio 83 on both
+    paths, and the query went unmatched."""
+    from dedup.operators.match import match_titles
+
+    query, title = "beta\x1calpha gamma delta systems", "alpha beta gamma delta systems"
+    assert levenshtein_ratio_py(query, title) == 83
+    assert levenshtein_ratio_py(token_sort_py(query), token_sort_py(title)) == 100
+    queries = spark.createDataFrame([(1, query)], "query_id long, title string")
+    truth = spark.createDataFrame(
+        [(10, title), (11, "omega ledger holdings")], "title_id long, title string"
+    )
+    got = [r.asDict() for r in match_titles(queries, truth, config).collect()]
+    assert got == [{"query_id": 1, "title_id": 10, "prediction": 1.0, "tier": "close"}]
