@@ -119,13 +119,17 @@ def incremental_dedup(
     # re-seen doc exists on both sides; its re-prepared version in
     # new_prepared wins (anti-join). verify_pairs reads its input three
     # times (sketch, gram and text sides): the checkpoint runs the fetch once.
+    # The union's partitions are the new docs' plus the fetch's; the
+    # coalesce keeps verify's per-doc ccv UDF at conv_partitions tasks.
     pair_ids = pairs.select(F.col("id_a").alias("doc_id")).unionByName(
         pairs.select(F.col("id_b").alias("doc_id"))
     )
     fetched = latest_rows(
         existing_prepared.join(F.broadcast(pair_ids), "doc_id", "left_semi")
     ).join(new_ids, "doc_id", "left_anti")
-    docs = register(new_prepared.unionByName(fetched).localCheckpoint())
+    docs = register(
+        new_prepared.unionByName(fetched).coalesce(config.conv_partitions).localCheckpoint()
+    )
     return IncrementalResult(
         new_prepared=new_prepared,
         new_bands=new_bands,

@@ -59,10 +59,23 @@ table, once in ``_has_batches`` and once in Spark's partition discovery, and
 nothing compacts them. Past 32 directories
 (``spark.sql.sources.parallelPartitionDiscovery.threshold``) that discovery
 runs as a Spark job.
+
+Per-batch cost also has a fixed part per task. Every Arrow-UDF task starts
+with the worker's ``importlib.invalidate_caches()``, which re-read every zip
+archive on the worker's path, 0.12-0.27 s per task on a 4-CPU host, until
+``dedup/__init__.py`` made it re-read only changed archives. And a stage
+split into more tasks than its rows need pays the rest of its per-task
+cost for nothing: a 100-turn micro-batch ran its three UDF stages (doc
+sketch, char-count vectors, ratio) as 8 + 9 + 9 tasks for about 12 docs.
+So each micro-batch runs ``incremental_dedup`` with conv, lev and shuffle
+partitions all ceil(turns / ``TURNS_PER_TASK``), at most
+``conv_partitions``: one task per UDF stage at 100 turns; a 3,900-turn
+seeding batch keeps 8 at ``conv_partitions`` 8.
 """
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,6 +91,10 @@ TRANSCRIPT_DDL = (
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 FINGERPRINT_FILE = "config_fingerprint"
+# Turns per task a micro-batch's stages are sized to ("Per-batch cost"
+# above): about what a batch run gives one conv partition (3,600 turns over
+# 8 partitions is 450).
+TURNS_PER_TASK = 500
 # Declared schema of every state table that is read back: its producer's
 # output (TRANSCRIPT_DDL, prepare_docs, band_postings, verify_pairs). The
 # batch=<id> directory level reads as the ``batch`` column.
@@ -218,10 +235,6 @@ def start_streaming_dedup(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        first = not _has_batches(os.path.join(warehouse, "corpus_prepared"), batch_id)
-        _check_fingerprint(warehouse, config, first_batch=first)
         # one scope per micro-batch: its checkpoints are released once the
         # batch's state tables are written (or the batch raised) -- a
         # long-lived stream must not accumulate pinned blocks across batches
@@ -229,6 +242,11 @@ def start_streaming_dedup(
             # batch turns feed three consumers (turns append, re-seen probe,
             # dedup input); checkpoint so the source is read once
             batch = register(batch_df.localCheckpoint()).select(*TRANSCRIPT_COLS)
+            turns = batch.count()
+            if turns == 0:
+                return
+            first = not _has_batches(os.path.join(warehouse, "corpus_prepared"), batch_id)
+            _check_fingerprint(warehouse, config, first_batch=first)
             # 1. persist this batch's raw turns FIRST (idempotent: a retry
             #    overwrites its own dir; the reads below skip its rows)
             write(batch, "turns", batch_id)
@@ -241,11 +259,16 @@ def start_streaming_dedup(
                 .join(F.broadcast(batch_convs), "conv_id", "left_semi")
                 .select(*TRANSCRIPT_COLS)
             )
+            # 3. dedup, every stage sized to the batch: one task per
+            #    TURNS_PER_TASK turns. Partition counts split the work, they
+            #    do not change what it finds, and the fingerprint stamped
+            #    and checked above is the unsized config's.
+            p = min(math.ceil(turns / TURNS_PER_TASK), config.conv_partitions)
             res = incremental_dedup(
                 batch.unionByName(reseen_turns),
                 _read_state(spark, warehouse, "corpus_prepared", batch_id),
                 _read_state(spark, warehouse, "corpus_bands", batch_id).drop("batch"),
-                config,
+                config.with_(conv_partitions=p, lev_partitions=p, shuffle_partitions=p),
             )
             write(res.new_prepared, "corpus_prepared", batch_id)
             write(res.new_bands, "corpus_bands", batch_id)

@@ -445,3 +445,75 @@ def test_streaming_replays_first_batch_after_crash(spark, config, tmp_path):
     assert sorted(os.listdir(os.path.join(wh, "corpus_bands"))) == ["batch=0", "batch=1"]
     got, want = edges(wh), edges(wh_ref)
     assert want and got == want
+
+
+def test_streaming_sizes_small_batch_stages(spark, config, tmp_path):
+    """A micro-batch of a few conversations (far under TURNS_PER_TASK
+    turns) runs its stages in one task each, so each state table gets at
+    most one part file for it, and it finds the edges incremental_dedup
+    finds with the unsized config on the same state. Four conversations,
+    not one: a single doc lands in one file at any partition count."""
+    import os
+    import time
+
+    from dedup.streaming import _read_state, read_transcript_stream, start_streaming_dedup
+    from dedup.tracking import scope
+
+    corpus = make_corpus(n_conversations=12, dup_fraction=0.4, seed=101)
+    src = spark.createDataFrame(corpus.transcripts).withColumn(
+        "turn_idx", F.col("turn_idx").cast("int")
+    )
+    # three variants whose bases are in the seeding batch, and one novel doc
+    small = ["c0000000v1", "c0000001v1", "c0000002v1", "c0000011"]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    now = time.time()
+    _single_file(src.filter(~F.col("conv_id").isin(small)), tmp_path, str(in_dir / "a.parquet"), now - 120)
+    _single_file(src.filter(F.col("conv_id").isin(small)), tmp_path, str(in_dir / "b.parquet"), now)
+
+    wh = str(tmp_path / "wh")
+    q = start_streaming_dedup(
+        spark,
+        read_transcript_stream(spark, str(in_dir), max_files_per_trigger=1),
+        wh,
+        config,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+
+    for table in ("corpus_prepared", "corpus_bands", "stream_edges"):
+        files = os.listdir(os.path.join(wh, table, "batch=1"))
+        assert len([f for f in files if f.startswith("part-")]) <= 1, table
+
+    got = {
+        (r["id_a"], r["id_b"]) for r in spark.read.parquet(f"{wh}/stream_edges/batch=1").collect()
+    }
+    with scope():
+        res = incremental_dedup(
+            _read_state(spark, wh, "turns").filter(F.col("batch") == 1).drop("batch"),
+            _read_state(spark, wh, "corpus_prepared", 1),
+            _read_state(spark, wh, "corpus_bands", 1).drop("batch"),
+            config,
+        )
+        want = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
+    assert len(want) >= 3 and got == want
+
+
+def test_streaming_empty_batch_writes_nothing(spark, config, tmp_path):
+    """A micro-batch of 0 rows returns before any write: no state
+    directory and no config_fingerprint stamp."""
+    import os
+
+    from dedup.streaming import TRANSCRIPT_DDL, read_transcript_stream, start_streaming_dedup
+
+    in_dir, wh = str(tmp_path / "in"), str(tmp_path / "wh")
+    spark.createDataFrame([], TRANSCRIPT_DDL).coalesce(1).write.parquet(in_dir)
+    assert any(f.endswith(".parquet") for f in os.listdir(in_dir))
+    q = start_streaming_dedup(
+        spark, read_transcript_stream(spark, in_dir), wh, config, checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert [p.numInputRows for p in q.recentProgress] == [0]
+    assert not os.path.exists(wh)
