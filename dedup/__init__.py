@@ -32,10 +32,10 @@ def _cache_zip_directories() -> None:
     a small micro-batch's latency. Every worker that unpickles a dedup UDF
     imports this package, so it installs the wrapper; a changed archive is
     still re-read, an unchanged one costs a ``stat``. An importer the
-    wrapper has not seen yet is taken as current: a worker imports this
-    package while unpickling its first task's UDFs, just after that task's
-    own ``invalidate_caches`` re-read every archive, and an importer made
-    later read its archive when it was made."""
+    wrapper has not seen yet is re-read once: nothing records when it last
+    read its archive, which may have been rewritten since (a rebuilt
+    ``--py-files`` zip at the same path). So a worker pays the re-read on
+    its first two tasks, not on every task."""
     reread = zipimport.zipimporter.invalidate_caches
 
     def invalidate_caches(self):
@@ -44,7 +44,7 @@ def _cache_zip_directories() -> None:
             key = (st.st_mtime_ns, st.st_size, st.st_ino)
         except OSError:
             key = None  # a vanished archive: the original drops its entries
-        if key is None or getattr(self, "_dedup_archive_stat", key) != key:
+        if key is None or getattr(self, "_dedup_archive_stat", None) != key:
             reread(self)
         self._dedup_archive_stat = key
 

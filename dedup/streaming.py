@@ -67,10 +67,14 @@ archive on the worker's path, 0.12-0.27 s per task on a 4-CPU host, until
 split into more tasks than its rows need pays the rest of its per-task
 cost for nothing: a 100-turn micro-batch ran its three UDF stages (doc
 sketch, char-count vectors, ratio) as 8 + 9 + 9 tasks for about 12 docs.
-So each micro-batch runs ``incremental_dedup`` with conv, lev and shuffle
-partitions all ceil(turns / ``TURNS_PER_TASK``), at most
-``conv_partitions``: one task per UDF stage at 100 turns; a 3,900-turn
-seeding batch keeps 8 at ``conv_partitions`` 8.
+So each micro-batch runs ``incremental_dedup`` with conv and shuffle
+partitions ceil(rows / ``TURNS_PER_TASK``), at most ``conv_partitions``,
+where rows are the turns it deduplicates: its own plus the buffered turns
+of the conversations it re-opens, counted on the checkpoint of that input.
+A few turns that continue many long conversations therefore keep the
+tasks their re-assembly needs. The Levenshtein stage keeps
+``lev_partitions``: its work grows with the pairs that reach the DP and
+their text lengths, which a turn count does not measure.
 """
 
 from __future__ import annotations
@@ -91,9 +95,9 @@ TRANSCRIPT_DDL = (
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 FINGERPRINT_FILE = "config_fingerprint"
-# Turns per task a micro-batch's stages are sized to ("Per-batch cost"
-# above): about what a batch run gives one conv partition (3,600 turns over
-# 8 partitions is 450).
+# Turns per task a micro-batch's per-doc and per-posting stages are sized
+# to ("Per-batch cost" above): about what a batch run gives one conv
+# partition (3,600 turns over 8 partitions is 450).
 TURNS_PER_TASK = 500
 # Declared schema of every state table that is read back: its producer's
 # output (TRANSCRIPT_DDL, prepare_docs, band_postings, verify_pairs). The
@@ -242,33 +246,39 @@ def start_streaming_dedup(
             # batch turns feed three consumers (turns append, re-seen probe,
             # dedup input); checkpoint so the source is read once
             batch = register(batch_df.localCheckpoint()).select(*TRANSCRIPT_COLS)
-            turns = batch.count()
-            if turns == 0:
-                return
-            first = not _has_batches(os.path.join(warehouse, "corpus_prepared"), batch_id)
-            _check_fingerprint(warehouse, config, first_batch=first)
-            # 1. persist this batch's raw turns FIRST (idempotent: a retry
-            #    overwrites its own dir; the reads below skip its rows)
-            write(batch, "turns", batch_id)
-
-            # 2. cross-batch assembly: conv_ids seen in EARLIER batches get
+            # 1. cross-batch assembly: conv_ids seen in EARLIER batches get
             #    their full turn set re-assembled (supersede-on-reseen).
+            #    The dedup input is checkpointed once; its row count says
+            #    whether the batch is empty and sizes the stages below.
             batch_convs = batch.select("conv_id").dropDuplicates()
             reseen_turns = (
                 _read_state(spark, warehouse, "turns", batch_id)
                 .join(F.broadcast(batch_convs), "conv_id", "left_semi")
                 .select(*TRANSCRIPT_COLS)
             )
-            # 3. dedup, every stage sized to the batch: one task per
-            #    TURNS_PER_TASK turns. Partition counts split the work, they
-            #    do not change what it finds, and the fingerprint stamped
-            #    and checked above is the unsized config's.
-            p = min(math.ceil(turns / TURNS_PER_TASK), config.conv_partitions)
+            dedup_input = register(batch.unionByName(reseen_turns).localCheckpoint())
+            rows = dedup_input.count()
+            if rows == 0:
+                return
+            first = not _has_batches(os.path.join(warehouse, "corpus_prepared"), batch_id)
+            _check_fingerprint(warehouse, config, first_batch=first)
+            # 2. persist this batch's raw turns before its other state
+            #    (idempotent: a retry overwrites its own dir; every state
+            #    read skips its rows)
+            write(batch, "turns", batch_id)
+            # 3. dedup, the per-doc and per-posting stages sized to the rows
+            #    deduplicated: one task per TURNS_PER_TASK turns. The
+            #    Levenshtein stage keeps lev_partitions: its work follows
+            #    the pairs and their text lengths, not the turns. Partition
+            #    counts split the work, they do not change what it finds,
+            #    and the fingerprint stamped and checked above is the
+            #    unsized config's.
+            p = min(math.ceil(rows / TURNS_PER_TASK), config.conv_partitions)
             res = incremental_dedup(
-                batch.unionByName(reseen_turns),
+                dedup_input,
                 _read_state(spark, warehouse, "corpus_prepared", batch_id),
                 _read_state(spark, warehouse, "corpus_bands", batch_id).drop("batch"),
-                config.with_(conv_partitions=p, lev_partitions=p, shuffle_partitions=p),
+                config.with_(conv_partitions=p, shuffle_partitions=p),
             )
             write(res.new_prepared, "corpus_prepared", batch_id)
             write(res.new_bands, "corpus_bands", batch_id)

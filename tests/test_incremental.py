@@ -500,6 +500,60 @@ def test_streaming_sizes_small_batch_stages(spark, config, tmp_path):
     assert len(want) >= 3 and got == want
 
 
+def test_streaming_sizes_stages_by_reopened_turns(spark, config, tmp_path, monkeypatch):
+    """A micro-batch's stages are sized by the turns it deduplicates, not by
+    its own: a few turns that re-open long conversations re-assemble all of
+    their buffered turns, and get the tasks those need. The Levenshtein
+    stage keeps lev_partitions."""
+    import math
+    import time
+
+    import dedup.streaming as streaming
+
+    corpus = make_corpus(n_conversations=12, dup_fraction=0.4, seed=101)
+    src = spark.createDataFrame(corpus.transcripts).withColumn(
+        "turn_idx", F.col("turn_idx").cast("int")
+    )
+    # the last turn of four conversations arrives in the second batch
+    counts = corpus.transcripts.groupby("conv_id").size()
+    reopened = {c: int(n) for c, n in counts[counts >= 6].items()}
+    reopened = dict(sorted(reopened.items())[:4])
+    last = F.lit(False)
+    for conv, n in reopened.items():
+        last = last | ((F.col("conv_id") == conv) & (F.col("turn_idx") == n - 1))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    now = time.time()
+    _single_file(src.filter(~last), tmp_path, str(in_dir / "a.parquet"), now - 120)
+    _single_file(src.filter(last), tmp_path, str(in_dir / "b.parquet"), now)
+
+    calls = []
+
+    def spy(new_transcripts, existing_prepared, existing_bands, cfg):
+        calls.append((new_transcripts.count(), cfg))
+        return incremental_dedup(new_transcripts, existing_prepared, existing_bands, cfg)
+
+    monkeypatch.setattr(streaming, "incremental_dedup", spy)
+    monkeypatch.setattr(streaming, "TURNS_PER_TASK", 10)
+    q = streaming.start_streaming_dedup(
+        spark,
+        streaming.read_transcript_stream(spark, str(in_dir), max_files_per_trigger=1),
+        str(tmp_path / "wh"),
+        config,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+
+    assert len(calls) == 2
+    rows, cfg = calls[1]
+    assert rows == sum(reopened.values())
+    p = min(math.ceil(rows / 10), config.conv_partitions)
+    assert p > 1  # the batch's own 4 turns would give 1
+    assert (cfg.conv_partitions, cfg.shuffle_partitions) == (p, p)
+    assert cfg.lev_partitions == config.lev_partitions
+
+
 def test_streaming_empty_batch_writes_nothing(spark, config, tmp_path):
     """A micro-batch of 0 rows returns before any write: no state
     directory and no config_fingerprint stamp."""
