@@ -33,8 +33,11 @@ SKETCH_FORMAT_VERSION = 3
 
 @dataclass(frozen=True)
 class DedupConfig:
-    """Fields are the settings a caller sets; ``ClassVar`` entries are
-    constants that nothing overrides (passing one raises TypeError)."""
+    """Fields are the settings product code sets; ``ClassVar`` entries are
+    constants no product caller sets (passing one raises TypeError). A
+    test that needs another constant patches the class, e.g.
+    ``monkeypatch.setattr(DedupConfig, "max_band_group", 3)``: config is
+    read on the driver only, never inside a UDF body on a worker."""
 
     # --- shingling (reference: N_GRAMS=3, settings.py:15) ---
     k_shingle: ClassVar[int] = 3
@@ -47,12 +50,12 @@ class DedupConfig:
     # --- MinHash / LSH ---
     lsh_bands: ClassVar[int] = 32          # b bands ...
     lsh_rows: ClassVar[int] = 4            # ... of r rows each: num_perm = b*r
-    minhash_seed: int = 709     # deterministic permutation table seed
+    minhash_seed: ClassVar[int] = 709  # deterministic permutation table seed
 
     # --- verification thresholds ---
     # Jaccard threshold a candidate pair must clear on exact shingle-set
     # Jaccard to count as a duplicate.
-    jaccard_threshold: float = 0.8
+    jaccard_threshold: ClassVar[float] = 0.8
     # Levenshtein-ratio threshold (reference: LEVENSHTEIN_RATIO_THRESHOLD=94,
     # settings.py:75; gate semantics predict.py:147-156).
     lev_threshold: ClassVar[int] = 94
@@ -81,7 +84,7 @@ class DedupConfig:
     # metrics table -- no silent truncation). SURVEY.md par. 4 item 1.
     # Every kept group fans out its pairs locally in one task, so this also
     # bounds one task's fan-out at C(max_band_group, 2) pairs (19,900).
-    max_band_group: int = 200
+    max_band_group: ClassVar[int] = 200
     # Candidate pairs must collide in at least this many DISTINCT bands,
     # UNLESS their quietest colliding band group is <= lsh_noise_group_size
     # (then a single hit suffices). Math: at (b=32, r=4) a J>=0.8 pair
@@ -98,7 +101,7 @@ class DedupConfig:
 
     # --- long-span containment (windowed sketches + substring verify) ---
     containment_stride: int = 128      # window = 2 * stride grams
-    containment_min_grams: int = 64    # shorter docs are noise, skip
+    containment_min_grams: ClassVar[int] = 64  # shorter docs are noise, skip
     containment_threshold: ClassVar[float] = 0.9  # |short ∩ long| / |short|
     containment_lcs_ratio: ClassVar[float] = 0.8  # LCS-substring / len(short) fallback
     # Window-sketch LSH geometry -- DELIBERATELY different from the
@@ -170,10 +173,10 @@ class DedupConfig:
     # single-collision span noise. Capped pairs within a boilerplate family
     # remain reachable through the family's stronger edges (clustering is
     # transitive); the cap mirrors max_band_group's role upstream.
-    containment_max_partners: int = 16
+    containment_max_partners: ClassVar[int] = 16
 
     # --- cascade (reference: top-100 predict, settings.py:56) ---
-    top_n_predict: int = 100
+    top_n_predict: ClassVar[int] = 100
     # Tier-2 candidate-generation gram-frequency cutoff: when set, candidate
     # pairs are generated only through grams with truth-df <= cutoff, then
     # rescored EXACTLY over all shared grams. None = exact all-shared-gram
@@ -189,9 +192,8 @@ class DedupConfig:
     # candidate when max(lev_ratio, token_sort_ratio) >= this threshold.
     # 90 was selected by grid search on the reference's example TRAIN split
     # (never the test split): custom_error 749 vs 2036 without the tier
-    # (reference-with-model golden: 633). 0 disables the tier (pure
-    # reference tiers 1-3).
-    match_accept_ratio: int = 90
+    # (reference-with-model golden: 633).
+    match_accept_ratio: ClassVar[int] = 90
 
     # --- partitioning / shuffle knobs ---
     shuffle_partitions: int = 32
@@ -199,11 +201,11 @@ class DedupConfig:
     arrow_batch_size: ClassVar[int] = 4096
 
     # --- clustering ---
-    cc_max_iterations: int = 50
-    # edge sets at or under this size use the driver union-find fast path;
-    # 0 disables it (always distributed star-contraction). Kept modest: the
-    # driver holds ~2 string ids per edge, so 1M edges is ~100-200 MB.
-    cc_driver_threshold: int = 1_000_000
+    cc_max_iterations: ClassVar[int] = 50
+    # edge sets at or under this size use the driver union-find fast path.
+    # Kept modest: the driver holds ~2 string ids per edge, so 1M edges is
+    # ~100-200 MB.
+    cc_driver_threshold: ClassVar[int] = 1_000_000
 
     @property
     def num_perm(self) -> int:

@@ -43,48 +43,30 @@ def cosine_col(a: Column | str, b: Column | str) -> Column:
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot_col(a, b) / denom)
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query side against the
-    corpus; the join is a BroadcastNestedLoopJoin by construction, the
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k of (vec_id, embedding) rows for each
+    (query_id, embedding) query: broadcast the (small) query side against
+    the corpus; the join is a BroadcastNestedLoopJoin by construction, the
     score is a native column, top-k is a rank window.
 
-    The ranking runs on the cosine ROUNDED to ``round_decimals`` so that an
-    oracle ranking on the same rounding orders tie groups identically at
-    the k boundary (neighbor_id breaks remaining ties)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-        )
-    )
+    The ranking runs on the cosine ROUNDED to 6 decimals so that an oracle
+    ranking on the same rounding orders tie groups identically at the k
+    boundary (neighbor_id breaks remaining ties)."""
+    q = F.broadcast(queries.select("query_id", F.col("embedding").alias("q_vec")))
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     scored = c.crossJoin(q).select(
         "query_id",
         "neighbor_id",
-        F.round(cosine_col("q_vec", "c_vec"), round_decimals).alias("cosine"),
+        F.round(cosine_col("q_vec", "c_vec"), 6).alias("cosine"),
     )
     return grouped_top_k(
         scored, ["query_id"], "cosine", k, tiebreak_cols=["neighbor_id"]
     )
 
 
-def srp_buckets_udf(
-    vec_col: Column | str,
-    n_planes: int = 12,
-    dim: int = 64,
-    n_tables: int = 4,
-    seed: int = 13,
-) -> Column:
+def srp_buckets_udf(vec_col: Column | str, dim: int = 64, n_tables: int = 4) -> Column:
     """All n_tables SRP bucket ids per vector in ONE vectorized Arrow pass
     (array<bigint>, element t = table t's bucket): the whole batch's
     vectors become one (n, dim) matrix, all tables' hyperplanes one
@@ -98,7 +80,9 @@ def srp_buckets_udf(
     product -- statistically neutral for an LSH bucketing (identical
     vectors still land in identical buckets under any summation order).
     A null vector gets a null bucket array; a vector whose length is not
-    ``dim`` raises ValueError."""
+    ``dim`` raises ValueError. Each table hashes 12 hyperplane signs; table
+    t's planes are drawn from seed 13 + t."""
+    n_planes, seed = 12, 13
     planes = np.stack(
         [
             np.random.RandomState(seed + t).normal(size=(n_planes, dim))
@@ -134,12 +118,10 @@ def srp_buckets_udf(
 
 def srp_candidate_id_pairs(
     embeddings: DataFrame,
-    n_planes: int = 12,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_tables: int = 4,
-    seed: int = 13,
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs sharing any SRP bucket in any of the
     n_tables bucketings -- IDS ONLY. The fat vector column never enters the
@@ -151,7 +133,7 @@ def srp_candidate_id_pairs(
     postings = base.select(
         "id",
         F.posexplode(
-            srp_buckets_udf("v", n_planes, dim, n_tables, seed)
+            srp_buckets_udf("v", dim, n_tables)
         ).alias("tbl", "bucket"),
     )
     left = postings.select("tbl", "bucket", F.col("id").alias("id_a"))
@@ -166,12 +148,10 @@ def srp_candidate_id_pairs(
 def srp_near_dup_pairs(
     embeddings: DataFrame,
     cosine_threshold: float = 0.95,
-    n_planes: int = 12,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_tables: int = 4,
-    seed: int = 13,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs at scale: n_tables independent SRP
     bucketings; pairs sharing any bucket get exact cosine verification.
@@ -182,9 +162,7 @@ def srp_near_dup_pairs(
     surviving deduped pairs only -- two narrow hash joins on id instead of
     shuffling every vector n_tables times on both sides of a self-join."""
     base = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    cands = srp_candidate_id_pairs(
-        embeddings, n_planes, dim, id_col, vec_col, n_tables, seed
-    )
+    cands = srp_candidate_id_pairs(embeddings, dim, id_col, vec_col, n_tables)
     return (
         cands.join(base.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a")
         .join(base.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")

@@ -191,7 +191,7 @@ def connected_components(
     prev = None
     for rounds in range(config.cc_max_iterations + 1):
         cur = _stats(e)
-        if config.cc_driver_threshold and cur["n"] <= config.cc_driver_threshold:
+        if cur["n"] <= config.cc_driver_threshold:
             # small enough from the start, or once the loop contracted it:
             # one driver union-find instead of more barrier rounds. Its
             # fresh createDataFrame has no lineage into `e`: release it now

@@ -23,7 +23,6 @@ FALSE_POSITIVE_PENALTY_FACTOR = 5  # reference settings.py:77
 def prediction_accuracy(
     predictions: DataFrame,
     actuals: DataFrame,
-    penalty: int = FALSE_POSITIVE_PENALTY_FACTOR,
 ) -> Row:
     """predictions: (query_id, title_id); actuals: (query_id,
     expected_title_id). Returns one row of confusion counts + custom_error.
@@ -54,7 +53,8 @@ def prediction_accuracy(
         ),
     ).withColumn(
         "custom_error",
-        F.col("incorrectly_not_found") + penalty * F.col("incorrectly_matched"),
+        F.col("incorrectly_not_found")
+        + FALSE_POSITIVE_PENALTY_FACTOR * F.col("incorrectly_matched"),
     )
     return agg.first()
 

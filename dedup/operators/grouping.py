@@ -24,13 +24,13 @@ def grouped_top_k(
     group_cols: list[str],
     order_col: str,
     k: int,
-    ascending: bool = False,
     tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Top-k rows per group by order_col. Deterministic when tiebreak_cols
-    cover remaining ties (reference top-k is order-unstable within a
-    float32-epsilon buffer, match_maker.py:68-70; we choose determinism)."""
-    order = [F.col(order_col).asc() if ascending else F.col(order_col).desc()]
+    """Top-k rows per group by order_col, highest first. Deterministic when
+    tiebreak_cols cover remaining ties (reference top-k is order-unstable
+    within a float32-epsilon buffer, match_maker.py:68-70; we choose
+    determinism)."""
+    order = [F.col(order_col).desc()]
     for t in tiebreak_cols or []:
         order.append(F.col(t).asc())
     w = Window.partitionBy(*group_cols).orderBy(*order)

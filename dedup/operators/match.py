@@ -243,9 +243,9 @@ def match_titles(
     # out of a when/otherwise and evaluates it for every projected row, so
     # gating inside the expression would not keep gated rows away from the
     # Python worker. The gate (and the UDF's threshold) sit at the LOOSER
-    # of the two acceptance thresholds (tier 3's and, when enabled, tier
-    # 4's): ratios above it are exact; values at or below it can never be
-    # accepted or win an argmax from an above-gate row.
+    # of the two acceptance thresholds (tier 3's and tier 4's): ratios
+    # above it are exact; values at or below it can never be accepted or
+    # win an argmax from an above-gate row.
     t4 = config.match_accept_ratio
     thr = config.lev_threshold
     # Rounding-aware gating: emitted ratios are int(round(...)), so a pair
@@ -254,7 +254,7 @@ def match_titles(
     # round up to t is computed exactly -- gating at the integer t silently
     # truncated raw ratios in [t-0.5, t) once total length outgrew the
     # integer-implied DP band.
-    gate = min(thr, t4 or thr) - 0.5
+    gate = min(thr, t4) - 0.5
     pairs = (
         cands.join(
             remaining.select("query_id", F.col("norm_text").alias("q_text")),
@@ -302,20 +302,17 @@ def match_titles(
     # unique argmax by r = max(lev, token_sort) when r >= t4; tied argmax
     # drops the query (same ambiguity semantics as tier 3). Threshold
     # tuned on the reference's example TRAIN split only (config.py).
-    if t4:
-        rest = pairs.join(matched.select("query_id"), "query_id", "left_anti")
-        rest = rest.withColumn("r", F.greatest("lev", "tsort"))
-        accept = group_argmax_unique(rest, ["query_id"], "r").filter(
-            F.col("r") >= t4
+    rest = pairs.join(matched.select("query_id"), "query_id", "left_anti")
+    rest = rest.withColumn("r", F.greatest("lev", "tsort"))
+    accept = group_argmax_unique(rest, ["query_id"], "r").filter(F.col("r") >= t4)
+    matched = matched.unionByName(
+        accept.select(
+            "query_id",
+            "title_id",
+            (F.col("r") / 100.0).alias("prediction"),
+            F.lit("accept").alias("tier"),
         )
-        matched = matched.unionByName(
-            accept.select(
-                "query_id",
-                "title_id",
-                (F.col("r") / 100.0).alias("prediction"),
-                F.lit("accept").alias("tier"),
-            )
-        )
+    )
 
     # ---- finalize: unmatched -> -1 (predict.py:262-267)
     not_found = (

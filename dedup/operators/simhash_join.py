@@ -16,28 +16,22 @@ import pyspark.sql.functions as F
 from dedup.functions.sketch import hamming_col
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    simhash_col: str = "simhash",
-    max_hamming: int = 3,
-    bits: int = 64,
-) -> DataFrame:
-    """(id, simhash) -> (id_a, id_b, hamming) for all pairs with
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """(doc_id, simhash) -> (id_a, id_b, hamming) for all pairs with
     hamming(simhash_a, simhash_b) <= max_hamming, id_a < id_b."""
     n_chunks = max_hamming + 1
-    chunk_bits = bits // n_chunks
+    chunk_bits = 64 // n_chunks
     mask = (1 << chunk_bits) - 1
 
     chunks = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(simhash_col).alias("sh"),
+        F.col("doc_id").alias("id"),
+        F.col("simhash").alias("sh"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("chunk_idx"),
-                        F.shiftright(F.col(simhash_col), i * chunk_bits)
+                        F.shiftright(F.col("simhash"), i * chunk_bits)
                         .bitwiseAND(F.lit(mask))
                         .alias("chunk_val"),
                     )

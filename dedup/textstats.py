@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 import pyspark.sql.functions as F
 
+from dedup.functions.shingle import words_col
+
 # tiny per-language stopword marker sets for the heuristic language ID;
 # chosen to be disjoint across languages.
 _LANG_MARKERS: dict[str, list[str]] = {
@@ -26,14 +28,9 @@ _STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def word_tokens_col(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.trim(c), r"\s+"), lambda w: w != "")
-
-
 def token_count_col(text: Column | str) -> Column:
     """Whitespace token count -- native split/size."""
-    return F.size(word_tokens_col(text))
+    return F.size(words_col(text))
 
 
 def bpe_ish_token_count_col(text: Column | str) -> Column:
@@ -46,15 +43,13 @@ def bpe_ish_token_count_col(text: Column | str) -> Column:
 def lang_id_col(text: Column | str) -> Column:
     """Heuristic language ID: argmax of marker-word hits; 'und' when no
     marker hits. Deterministic tie-break by language code order."""
-    words = word_tokens_col(F.lower(F.col(text) if isinstance(text, str) else text))
+    words = words_col(F.lower(F.col(text) if isinstance(text, str) else text))
     scores = []
     for lang in sorted(_LANG_MARKERS):
         markers = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
         score = F.size(F.filter(words, lambda w: F.array_contains(markers, w)))
         scores.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
-    # array_max on struct: max by score, then by lang desc -- invert lang for
-    # deterministic asc tie-break via negative? keep simple: greatest score,
-    # first lang in sorted order wins ties via reduce.
+    # on a tied score the fold keeps the earlier language in sorted order
     best = F.aggregate(
         F.array(*scores),
         F.struct(F.lit(-1).alias("score"), F.lit("und").alias("lang")),
@@ -68,7 +63,7 @@ def quality_score_col(text: Column | str) -> Column:
     stopword presence (C4/Gopher-style cheap filters), all native columns."""
     c = F.col(text) if isinstance(text, str) else text
     n_chars = F.length(c).cast("double")
-    words = word_tokens_col(c)
+    words = words_col(c)
     n_words = F.size(words).cast("double")
     alpha_chars = F.length(F.regexp_replace(c, r"[^A-Za-z]", "")).cast("double")
     alpha_ratio = F.when(n_chars > 0, alpha_chars / n_chars).otherwise(F.lit(0.0))
@@ -94,9 +89,11 @@ def fingerprint_col(text: Column | str) -> Column:
     return F.md5(c)
 
 
-def rolling_hash_col(text: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling hash over character codes -- the classic document
-    fingerprint; expressed with aggregate() so it stays JVM-side."""
+def rolling_hash_col(text: Column | str) -> Column:
+    """Polynomial rolling hash over character codes (base 31, mod 1e9+7)
+    -- the classic document fingerprint; expressed with aggregate() so it
+    stays JVM-side."""
+    base, mod = 31, 1_000_000_007
     c = F.col(text) if isinstance(text, str) else text
     codes = F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("bigint"))
     return F.aggregate(

@@ -66,10 +66,10 @@ def test_candidate_recall_of_planted_near_dups(spark, config, prepared):
     assert recall >= 0.99, f"candidate recall {recall}: missed {sorted(missed)[:5]}"
 
 
-def test_band_skew_accounting(spark, config, prepared):
+def test_band_skew_accounting(spark, config, prepared, monkeypatch):
     prep, _ = prepared
-    tight = config.with_(max_band_group=2)
-    res = candidate_pairs(band_postings(prep, tight), tight)
+    monkeypatch.setattr(DedupConfig, "max_band_group", 2)
+    res = candidate_pairs(band_postings(prep, config), config)
     skew_rows = res.band_skew.collect()
     # the boilerplate subset guarantees oversized bands at this cap
     assert len(skew_rows) > 0

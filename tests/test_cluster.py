@@ -5,6 +5,7 @@ min member id."""
 import pyspark.sql.functions as F
 import pytest
 
+from dedup.config import DedupConfig
 from dedup.operators.cluster import connected_components
 from dedup.tracking import scope
 
@@ -13,9 +14,10 @@ def _cc(spark, config, edges, driver_path=False):
     # default: force the DISTRIBUTED star-contraction path (the adversarial
     # graphs here exist to prove its convergence); driver_path=True takes
     # the small-graph union-find fast path instead.
-    cfg = config.with_(cc_driver_threshold=10**9 if driver_path else 0)
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    rows = connected_components(df, cfg).collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DedupConfig, "cc_driver_threshold", 10**9 if driver_path else -1)
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        rows = connected_components(df, config).collect()
     return {r["node"]: r["cluster_id"] for r in rows}
 
 
@@ -69,15 +71,16 @@ def test_string_node_ids(spark, config):
     assert got == {"ca": "ca", "cb": "ca", "cc": "ca", "cx": "cx", "cy": "cx"}
 
 
-def test_no_convergence_releases_edge_checkpoint(spark, config):
+def test_no_convergence_releases_edge_checkpoint(spark, config, monkeypatch):
     """The round loop raising (no convergence) still leaves no checkpoint
     of the edge set behind once the enclosing scope exits."""
-    cfg = config.with_(cc_driver_threshold=0, cc_max_iterations=1)
+    monkeypatch.setattr(DedupConfig, "cc_driver_threshold", -1)
+    monkeypatch.setattr(DedupConfig, "cc_max_iterations", 1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(400)], "id_a long, id_b long"
     ).repartition(8)
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     with pytest.raises(RuntimeError, match="did not converge"):
         with scope():
-            connected_components(edges, cfg)
+            connected_components(edges, config)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before

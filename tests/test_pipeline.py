@@ -104,7 +104,7 @@ def test_config_change_invalidates_checkpoints(spark, config, corpus, tmp_path_f
     wh = str(tmp_path_factory.mktemp("whc"))
     tdf = spark.createDataFrame(corpus.transcripts.head(200))
     run_pipeline(spark, tdf, wh, config)
-    other = config.with_(jaccard_threshold=0.9)
+    other = config.with_(max_chars=config.max_chars // 2)
     report = run_pipeline(spark, tdf, wh, other)
     assert not any(s.resumed for s in report.stages)  # fingerprint mismatch
 
