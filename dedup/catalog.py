@@ -40,6 +40,9 @@ class StageResult:
     path: str
     rows: int
     partitions: int
+    # wall time of the stage's build and write. run_pipeline runs two stage
+    # chains at the same time, so the seconds of concurrent stages overlap
+    # and the stages of one call can sum to more than the call took.
     seconds: float
     resumed: bool
     # wall-time attribution inside the stage: "build" (operator df_fn --

@@ -1,21 +1,44 @@
 """End-to-end transcript dedup pipeline: assemble + prepare (normalize/
-shingle/sketch) -> exact tier -> LSH candidates -> verify -> cluster, with
-each stage checkpointed to a catalog table (resume = skip committed stages)
-and a metrics table of per-stage lineage.
+shingle/sketch), exact tier, then LSH candidates -> verify beside
+containment, then cluster. Each stage is checkpointed to a catalog table
+(resume = skip committed stages), and a metrics table records per-stage
+lineage.
 
-The stage order is the reference's cheapest-first cascade philosophy
-(/root/reference/doppelspeller/predict.py:274-321) at corpus scale.
+The stage graph keeps the reference's cheapest-first cascade (doppelspeller
+``predict.py:274-321``) at corpus scale, but not its single line of steps::
+
+    prepared -> exact_groups -> reps -+-> candidate_pairs -> verified_pairs -+-> clusters
+                                      +-> containment_pairs ------------------+
+
 ``prepare_docs`` sketches every doc; the exact tier then keeps all but one
-representative of each identical group out of LSH banding and
-verification; non-candidates never reach verification; verification never
-reaches clustering.
+representative of each identical group (``reps``) out of the near-duplicate
+and containment tiers; non-candidates never reach verification; nothing
+unverified reaches clustering.
+
+The two middle chains read only ``reps`` and do not depend on each other,
+so they run at the same time: containment on one helper thread, the
+near-duplicate chain on the calling thread. A chain is a line of Spark jobs
+that each wait on the last, and one chain alone leaves most of the
+executor cores idle between and inside its jobs. The helper inherits the
+caller's local properties (job group, description, scheduler pool), so
+cancelling the caller's job group stops its jobs too. Each stage keeps its
+own ``tracking.scope()``; the scope is per thread, so each chain's frames
+are released by its own stage.
+
+Failure rule: when either chain raises, the call waits until the other
+chain has finished (and released its blocks) before the exception
+propagates; when both raise, the calling thread's exception wins. The
+report and the metrics table list the stages in the fixed order of
+``STAGES``, whichever chain commits first.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 import pyspark.sql.functions as F
 
 from dedup.catalog import CheckpointCatalog, StageResult
@@ -30,6 +53,17 @@ from dedup.operators.exact import (
 )
 from dedup.operators.verify import verify_pairs
 from dedup.tracking import scope
+
+# stage tables in report order
+STAGES = (
+    "prepared",
+    "exact_groups",
+    "candidate_pairs",
+    "verified_pairs",
+    "containment_pairs",
+    "clusters",
+)
+
 
 @dataclass
 class PipelineReport:
@@ -65,6 +99,7 @@ def run_pipeline(
         spark, warehouse, run_id=run_id, config_fingerprint=config.config_fingerprint()
     )
     report = PipelineReport(run_id=cat.run_id)
+    done: dict[str, StageResult] = {}
 
     def stage(name: str, build) -> DataFrame:
         # every persist()/localCheckpoint() the build takes is released as
@@ -75,8 +110,7 @@ def run_pipeline(
         # wall time), and a long-lived driver must never accumulate blocks
         # across runs.
         with scope():
-            df, r = cat.write_or_resume(name, build)
-        report.stages.append(r)
+            df, done[name] = cat.write_or_resume(name, build)
         return df
 
     # assembly feeds only prepare_docs, so the two share one table: the
@@ -101,9 +135,6 @@ def run_pipeline(
         # in their partitioning: no second shuffle (VERDICT r4 #3).
         cat.write("band_skew", res.band_skew, stage="candidate_pairs")
         return res.pairs
-
-    cands = stage("candidate_pairs", _cands)
-    verified = stage("verified_pairs", lambda: verify_pairs(cands, reps, config))
 
     # imported at call time, on purpose: per-layer tracing patches these two
     # names on their module, which a module-level import would bypass
@@ -132,7 +163,15 @@ def run_pipeline(
         )
         return verify_containment(cres.pairs, reps, config)
 
-    containment = stage("containment_pairs", _containment)
+    # leaving the block joins the helper, also when the calling thread's
+    # chain raised: its exception then propagates, after containment ended
+    with ThreadPoolExecutor(max_workers=1) as helper:
+        containment_done = helper.submit(
+            inheritable_thread_target(spark)(stage), "containment_pairs", _containment
+        )
+        cands = stage("candidate_pairs", _cands)
+        verified = stage("verified_pairs", lambda: verify_pairs(cands, reps, config))
+    containment = containment_done.result()
 
     def _clusters():
         near_edges = verified.select("id_a", "id_b")
@@ -158,6 +197,7 @@ def run_pipeline(
         ).sortWithinPartitions("conv_id")
 
     stage("clusters", _clusters)
+    report.stages = [done[name] for name in STAGES]
 
     # metrics table: one row per (run_id, stage) + per-partition lineage in
     # each stage manifest. Append-style (overwrites per run_id dir).

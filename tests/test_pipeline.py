@@ -5,16 +5,19 @@ clusters; resume skips committed stages and reproduces identical clusters
 import glob
 import hashlib
 import itertools
+import os
 import shutil
+import threading
+import time
 
 import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql.types import StructType
 
-from dedup.catalog import CheckpointCatalog
+from dedup.catalog import MANIFEST_NAME, CheckpointCatalog
 from dedup.generate import make_corpus
-from dedup.pipeline import run_pipeline
+from dedup.pipeline import STAGES, run_pipeline
 
 
 def _pairs(df, id_col, cl_col):
@@ -145,3 +148,89 @@ def test_failed_stage_releases_its_blocks(spark, config, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="verify_containment failed"):
         run_pipeline(spark, tdf, str(tmp_path / "wh"), config)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
+
+
+def test_chains_overlap_and_report_keeps_stage_order(spark, config, tmp_path, monkeypatch):
+    """Containment runs beside the near-duplicate chain: verification here
+    starts only once the containment table has committed, which a
+    pipeline running the chains one after another never reaches. The
+    report keeps the fixed stage order all the same."""
+    import dedup.pipeline
+
+    wh = str(tmp_path / "wh")
+    verify = dedup.pipeline.verify_pairs
+
+    def verify_after_containment(*args, **kwargs):
+        manifest = os.path.join(wh, "containment_pairs", MANIFEST_NAME)
+        deadline = time.monotonic() + 60
+        while not os.path.exists(manifest):
+            assert time.monotonic() < deadline, "containment did not commit during verify"
+            time.sleep(0.05)
+        return verify(*args, **kwargs)
+
+    monkeypatch.setattr(dedup.pipeline, "verify_pairs", verify_after_containment)
+    tdf = spark.createDataFrame(make_corpus(n_conversations=40, seed=5).transcripts)
+    report = run_pipeline(spark, tdf, wh, config)
+    assert [s.table for s in report.stages] == list(STAGES) == [
+        "prepared", "exact_groups", "candidate_pairs",
+        "verified_pairs", "containment_pairs", "clusters",
+    ]
+    parts = sorted(glob.glob(f"{wh}/metrics_{report.run_id}/part*.parquet"))
+    assert [st for f in parts for st in pq.read_table(f).column("stage").to_pylist()] == list(STAGES)
+
+
+def test_failed_chain_waits_for_the_other(spark, config, tmp_path, monkeypatch):
+    """Verification fails on the calling thread while containment is still
+    running: the error propagates only after containment committed, with
+    every block released and the helper thread gone."""
+    import dedup.operators.containment as containment
+    import dedup.pipeline
+
+    failed = threading.Event()
+
+    def fail(*args, **kwargs):
+        failed.set()
+        raise RuntimeError("verify_pairs failed")
+
+    verify_containment = containment.verify_containment
+
+    def verify_containment_after_failure(*args, **kwargs):
+        assert failed.wait(60), "verify_pairs was never called"
+        return verify_containment(*args, **kwargs)
+
+    monkeypatch.setattr(dedup.pipeline, "verify_pairs", fail)
+    monkeypatch.setattr(containment, "verify_containment", verify_containment_after_failure)
+    wh = str(tmp_path / "wh")
+    tdf = spark.createDataFrame(make_corpus(n_conversations=40, seed=5).transcripts)
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    threads = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="verify_pairs failed"):
+        run_pipeline(spark, tdf, wh, config)
+    assert os.path.exists(os.path.join(wh, "containment_pairs", MANIFEST_NAME))
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == rdds
+    assert [t for t in threading.enumerate() if t not in threads] == []
+
+
+def test_caller_job_group_reaches_containment(spark, config, tmp_path, monkeypatch):
+    """The helper thread inherits the caller's local properties, so the
+    containment jobs belong to the caller's job group (and a
+    ``cancelJobGroup`` on it stops them)."""
+    import dedup.operators.containment as containment
+
+    sc = spark.sparkContext
+    groups = []
+    verify_containment = containment.verify_containment
+
+    def record_group(*args, **kwargs):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return verify_containment(*args, **kwargs)
+
+    monkeypatch.setattr(containment, "verify_containment", record_group)
+    tdf = spark.createDataFrame(make_corpus(n_conversations=40, seed=5).transcripts)
+    sc.setJobGroup("caller", "run_pipeline under the caller's job group")
+    try:
+        run_pipeline(spark, tdf, str(tmp_path / "wh"), config)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert groups == ["caller"]
